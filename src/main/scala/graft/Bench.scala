@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * Queries are forced end-to-end with a noop-format write (count() would let
   * Catalyst prune compute that a real consumer pays for). A small warmup
   * first touches each table so JVM/codegen warmup isn't billed to the first
-  * query. */
+  * query. Both JSON lines name the queries that failed in any pass
+  * (`"failed"`); a query that failed in every pass exits the run with 1. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -39,7 +40,10 @@ object Bench {
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => return -1.0 }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        return -1.0
+      }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -78,8 +82,13 @@ object Bench {
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    // a failed run is left out of its query's min and of the total, so
+    // name every query that failed in any pass: a breaking query must
+    // never read as a faster bench
+    val failed = names.filter(n => passes.exists(_(n) < 0))
+      .map("\"" + _ + "\"").mkString("[", ",", "]")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$failed}"""
     println(full)
     // the full per-query line outgrew the harness's tail-capture window at
     // 82 queries (BENCH_r03 parsed:null) — repeat a compact parseable line
@@ -87,7 +96,9 @@ object Bench {
     java.nio.file.Files.write(java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")),
       (full + "\n").getBytes("UTF-8"))
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries_file":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")}"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","queries_file":"${sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")}","failed":$failed}""")
     spark.stop()
+    // a query with no successful pass has no timing at all: fail the run
+    if (results.exists(_._2 < 0)) sys.exit(1)
   }
 }

@@ -318,10 +318,8 @@ object ScaleSmoke {
     // teardown: release every dir's memoized frames/checkpoints and
     // derived layouts — the smoke runs several dirs through one session,
     // exactly the long-lived-session shape the caches must not pin
-    Seq(sf, dir, zipfDir, hotEmbDir, srcHotDir).foreach { d =>
-      PipelineQueries.evictCaches(spark, d)
-      graft.queries.RelationalQueries.evictDerived(spark, d)
-    }
+    Seq(sf, dir, zipfDir, hotEmbDir, srcHotDir)
+      .foreach(graft.queries.SessionScoped.evict(spark, _))
     spark.stop()
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Every operator in SURVEY.md §2 appears as one `queries` entry; every
   * oracle-checkable one has a DuckDB SQL twin in `oracleSql` producing the

@@ -66,39 +66,18 @@ object MediaStore {
       .write.mode("overwrite").parquet(path)
   }
 
-  // derived stores are per-(session, dir); the release hook deletes the
-  // temp directory so factor sweeps in one session don't accumulate
-  // multi-hundred-MB payload copies
-  private val setup = new SessionScoped[String, String]({ (_, mdir) =>
-    try org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(mdir).getParentFile)
-    catch { case _: java.io.IOException => () }
-  })
-
   /** Path of the media table for `dir`: the generator-written
     * `$dir/media.parquet` when present, else the derived session store
-    * (built on first use). */
+    * (built on first use; eviction deletes it so factor sweeps in one
+    * session don't accumulate multi-hundred-MB payload copies).
+    * Generator-written stores are data, not cache — never touched. */
   def ensure(s: SparkSession, dir: String, events: => DataFrame): String = {
     val generated = new java.io.File(s"$dir/media.parquet")
     if (generated.exists) generated.getPath
-    else setup.getOrBuild(s, dir) {
-      val d = java.nio.file.Files.createTempDirectory("graft_media")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-        catch { case _: java.io.IOException => () }))
+    else SessionScoped.store(s, dir, "media") { d =>
       val path = s"$d/media.parquet"
       write(events, path)
       path
     }
   }
-
-  /** Drop the derived store for (session, dir); a subsequent query
-    * rebuilds it. Generator-written stores are data, not cache — never
-    * touched. */
-  def evict(s: SparkSession, dir: String): Unit =
-    setup.evictMatching(s)(_ == dir)
-
-  /** Live derived-store count for (session, dir) — specs. */
-  def derivedCount(s: SparkSession, dir: String): Int =
-    setup.sizeFor(s, (_: String) == dir)
 }

@@ -438,29 +438,13 @@ object AggQueries {
       graft.core.AggConfig.VarSpec("value", Seq("record"), "double")),
     attrs = Nil)
 
-  // the granule-set fixture is derived ONCE per (session, dir) — the
-  // timed work of q_netcdf_scan is the SCAN, not the write; the release
-  // hook (and a shutdown hook) delete the temp payload
-  private val ncStoreMemo = new SessionScoped[String, String]({ (_, out) =>
-    try org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(out).getParentFile)
-    catch { case _: java.io.IOException => () }
-  })
-
-  /** Drop the derived granule store for (session, dir) — two-dir sweeps
-    * ([[PipelineQueries.evictCaches]]); a later query rebuilds it. */
-  def evictNcStore(s: SparkSession, dir: String): Unit =
-    ncStoreMemo.evictMatching(s)(_ == dir)
-
   /** Directory of `.nc` granules holding the valid events slice
     * (distributed write: [[graft.sources.NetCDFWrite.writeGranules]],
-    * 20k records/file, chunked 1000 records with shuffle+deflate). */
+    * 20k records/file, chunked 1000 records with shuffle+deflate).
+    * Derived ONCE per (session, dir): the timed work of q_netcdf_scan is
+    * the SCAN, not the write. */
   def ncGranuleDir(s: SparkSession, dir: String): String =
-    ncStoreMemo.getOrBuild(s, dir) {
-      val d = java.nio.file.Files.createTempDirectory("graft_ncscan")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-        catch { case _: java.io.IOException => () }))
+    SessionScoped.store(s, dir, "ncStore") { d =>
       val out = s"$d/granules"
       graft.sources.NetCDFWrite.writeGranules(
         TSA.filterValid(events(s, dir), cfg)

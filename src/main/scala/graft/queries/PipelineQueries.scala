@@ -25,29 +25,13 @@ object PipelineQueries {
     * but every call still re-builds and re-analyzes the (HOF-heavy) plan
     * tree — measurable when 70+ bench queries each re-derive the same
     * tokenization chain. DataFrames are immutable; sharing is safe.
-    * Entries are session-scoped ([[SessionScoped]]): released (and
-    * unpersisted) when the owning context ends, or explicitly per dir via
-    * [[evictCaches]] — ScaleSmoke/TenX call it between scale factors so a
-    * long-lived session doesn't pin every factor's cached frames. */
-  private val frameMemo = new SessionScoped[(String, String), DataFrame](
-    (_, df) => df.unpersist(blocking = false))
+    * Entries live in the session-scoped registry ([[SessionScoped]]):
+    * unpersisted when the owning context ends, or per dir via
+    * [[SessionScoped.evict]] — ScaleSmoke calls it between scale factors
+    * so a long-lived session doesn't pin every factor's cached frames. */
   private def memo(s: SparkSession, dir: String, key: String)(
       build: => DataFrame): DataFrame =
-    frameMemo.getOrBuild(s, (dir, key))(build)
-
-  /** Unpersist and drop every memoized frame this module cached for
-    * (session, dir) — the shared expression frames AND the checkpointed
-    * cluster labels. Safe to call concurrently with running queries —
-    * Spark recomputes uncached frames; subsequent calls rebuild. */
-  def evictCaches(s: SparkSession, dir: String): Unit = {
-    frameMemo.evictMatching(s)(_._1 == dir)
-    clustersMemo.evictMatching(s)(_ == dir)
-    embCountMemo.evictMatching(s)(_ == dir)
-    pqCbMemo.evictMatching(s)(_ == dir)
-    graft.multimodal.MediaStore.evict(s, dir)
-    AggQueries.evictNcStore(s, dir)
-    evictSigStore(s, dir)
-  }
+    SessionScoped.frame(s, dir, key)(build)
 
   /** Conf key for the size gate below (bytes); override in specs to force
     * either regime. */
@@ -86,11 +70,6 @@ object PipelineQueries {
         r.rdd.unpersist(blocking = false)
       case _ => ()
     }
-
-  /** Number of live memo entries for (session, dir) — specs. */
-  def cachedFrameCount(s: SparkSession, dir: String): Int =
-    frameMemo.sizeFor(s, (_: (String, String))._1 == dir) +
-      clustersMemo.sizeFor(s, (_: String) == dir)
 
   /** doc_id + token-hash array for docs with >= 3 tokens.
     *
@@ -179,7 +158,7 @@ object PipelineQueries {
     // constants as PT.minhashSpark — property-pinned in
     // NativeExpressionsSpec): the interpreted 32-lane HOF dominated this
     // query's CPU (13.9 s on local[8] at sf0.1). Cached VIA THE MEMO so
-    // evictCaches unpersists it between scale factors (a bare .cache()
+    // eviction unpersists it between scale factors (a bare .cache()
     // stayed pinned for the session): the pair frame joins the signature
     // frame TWICE (doc_a and doc_b sides), and without the cache each
     // side re-runs the semi-join + kernel.
@@ -255,64 +234,19 @@ object PipelineQueries {
         col("first_dup"))
   }
 
-  // the persisted corpus signature store is derived ONCE per
-  // (session, dir) — the timed work of d_incremental_dedup is the
-  // DELTA-vs-store join, not the store build (a standing corpus's
-  // signatures were written at its own ingest time); release hook and a
-  // shutdown hook delete the temp payload
-  private val sigStoreMemo = new SessionScoped[String, String]({ (_, out) =>
-    try org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(out).getParentFile)
-    catch { case _: java.io.IOException => () }
-  })
-
-  private val lmStoreMemo = new SessionScoped[String, String]({ (_, out) =>
-    try org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(out).getParentFile)
-    catch { case _: java.io.IOException => () }
-  })
-
-  /** Drop the persisted signature store for (session, dir) — two-dir
-    * sweeps ([[evictCaches]]); a later query rebuilds it. */
-  def evictSigStore(s: SparkSession, dir: String): Unit = {
-    sigStoreMemo.evictMatching(s)(_ == dir)
-    textIdxMemo.evictMatching(s)(_ == dir)
-    streamTextIdxMemo.evictMatching(s)(_ == dir)
-    lmStoreMemo.evictMatching(s)(_ == dir)
-  }
-
-  // the persisted BM25 text index is derived ONCE per (session, dir) —
-  // t_bm25_indexed's timed work is the term-pruned PERSISTED read path
-  // (postings scan + df/stats delta sums), not the index build (a real
-  // deployment builds at ingest time); same cleanup contract as the
-  // signature store
-  private val textIdxMemo = new SessionScoped[String, String]({ (_, out) =>
-    try org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(out).getParentFile)
-    catch { case _: java.io.IOException => () }
-  })
-
   /** Dir of the session-persisted BM25 text index for `dir` — built
     * once per (session, dir) via [[graft.ml.Similarity.writeTextIndex]]
-    * (registry tokenization: docs under 3 tokens do not index). */
+    * (registry tokenization: docs under 3 tokens do not index).
+    * t_bm25_indexed's timed work is the term-pruned PERSISTED read path
+    * (postings scan + df/stats delta sums), not the index build (a real
+    * deployment builds at ingest time). */
   def textIndexStore(s: SparkSession, dir: String): String =
-    textIdxMemo.getOrBuild(s, dir) {
-      val d = java.nio.file.Files.createTempDirectory("graft_textidx")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-        catch { case _: java.io.IOException => () }))
+    SessionScoped.store(s, dir, "textIdx") { d =>
       val out = s"$d/text_index"
       graft.ml.Similarity.writeTextIndex(
         tbl(s, dir, "documents").select("doc_id", "text"), out)
       out
     }
-
-  private val streamTextIdxMemo = new SessionScoped[String, String]({
-    (_, out) =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(out).getParentFile)
-      catch { case _: java.io.IOException => () }
-  })
 
   /** Dir of a text index built by STREAMING ingest — the documents
     * parquet replayed as a Structured Streaming file source (parquet
@@ -321,11 +255,7 @@ object PipelineQueries {
     * [[graft.ml.Similarity.textIndexSink]], whose per-batch-id commit
     * dirs make replays idempotent. Built once per (session, dir). */
   def streamTextIndexStore(s: SparkSession, dir: String): String =
-    streamTextIdxMemo.getOrBuild(s, dir) {
-      val d = java.nio.file.Files.createTempDirectory("graft_stextidx")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-        catch { case _: java.io.IOException => () }))
+    SessionScoped.store(s, dir, "streamTextIdx") { d =>
       val out = s"$d/text_index"
       val src = s"$dir/documents.parquet"
       val schema = s.read.parquet(src).schema
@@ -337,7 +267,7 @@ object PipelineQueries {
       val streamDir =
         if (srcFile.isDirectory) src
         else {
-          val sd = new java.io.File(d.toFile, "stream_src")
+          val sd = new java.io.File(d, "stream_src")
           sd.mkdirs()
           java.nio.file.Files.createSymbolicLink(
             new java.io.File(sd, "part-000000.parquet").toPath,
@@ -355,14 +285,13 @@ object PipelineQueries {
 
   /** Parquet path of the STANDING-corpus LSH band-signature store
     * (doc_id, band_idx, sig) — every document except the `doc_id % 10
-    * == 7` delta slice. Written once per (session, dir); subsequent
-    * ingests read it from disk like the real store they model. */
+    * == 7` delta slice. Written once per (session, dir) — the timed work
+    * of d_incremental_dedup is the DELTA-vs-store join, not the store
+    * build (a standing corpus's signatures were written at its own
+    * ingest time); subsequent ingests read it from disk like the real
+    * store they model. */
   def corpusSigStore(s: SparkSession, dir: String): String =
-    sigStoreMemo.getOrBuild(s, dir) {
-      val d = java.nio.file.Files.createTempDirectory("graft_sigstore")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-        catch { case _: java.io.IOException => () }))
+    SessionScoped.store(s, dir, "sigStore") { d =>
       val out = s"$d/sig_store"
       ebands(s, dir).filter(col("doc_id") % 10 =!= 7)
         .write.mode("overwrite").parquet(out)
@@ -477,14 +406,11 @@ object PipelineQueries {
     * repeated invocations the way it does the cached frames above; the
     * capstone pipeline and repeated bench passes reuse the computed
     * labels — the production pattern (clusters materialize once).
-    * Session-scoped like [[frameMemo]]: [[evictCaches]] unpersists the
-    * labels and drops the reference, letting the checkpoint RDD's blocks
-    * be GC'd with it. */
-  private val clustersMemo = new SessionScoped[String, DataFrame](
-    (_, df) => df.unpersist(blocking = false))
-
+    * Session-scoped like [[memo]]: eviction unpersists the labels and
+    * drops the reference, letting the checkpoint RDD's blocks be GC'd
+    * with it. */
   def dDedupClusters(s: SparkSession, dir: String): DataFrame =
-    clustersMemo.getOrBuild(s, dir) {
+    SessionScoped.frame(s, dir, "clusters") {
       val edges = dNgramJaccard(s, dir)
         .filter(col("jaccard") >= 0.5)
         .select(col("doc_a"), col("doc_b"))
@@ -846,11 +772,7 @@ object PipelineQueries {
     * production LM artifact ships. Written once per (session, dir);
     * vocabulary-sized (distinct bigrams, not corpus rows). */
   def lmStore(s: SparkSession, dir: String): String =
-    lmStoreMemo.getOrBuild(s, dir) {
-      val d = java.nio.file.Files.createTempDirectory("graft_lmstore")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-        catch { case _: java.io.IOException => () }))
+    SessionScoped.store(s, dir, "lmStore") { d =>
       val out = s"$d/lm_store"
       val codes = tokenHashes(s, dir)
         .filter(col("doc_id") % 10 =!= 7)
@@ -942,10 +864,9 @@ object PipelineQueries {
           es => graft.functions.native.LshSig(es.head, 40), col("v")))
         .cache()
     }
-  private val embCountMemo = new SessionScoped[String, java.lang.Long]()
   private[graft] def embCount(s: SparkSession, dir: String): Long =
-    embCountMemo.getOrBuild(s, dir)(
-      java.lang.Long.valueOf(tbl(s, dir, "embeddings").count())).longValue()
+    SessionScoped.getOrBuild(s, dir, "embCount")(
+      tbl(s, dir, "embeddings").count())
 
   /** Band width (bits) for a corpus of n vectors: the smallest B in
     * [8, 20] with 2^B >= ceil(n/64) — expected bucket size stays ~64 as
@@ -995,7 +916,7 @@ object PipelineQueries {
     // two per-key window passes run once per (session, dir) instead of
     // twice per invocation (the r13 plan shows two full
     // Generate→Window→Window chains, one per side)
-    val eb = ebBlocked(s, dir)
+    val eb = ebBlocked(s, dir, withLabel = false)
     eb.toDF("vec_a", "va", "key", "blk")
       .join(eb.toDF("vec_b", "vb", "key", "blk"), Seq("key", "blk"))
       .filter(col("vec_a") < col("vec_b"))
@@ -1005,21 +926,30 @@ object PipelineQueries {
       .distinct()
   }
 
-  /** The residue-blocked band frame (vec_id, v, key, blk) shared by
-    * every EMPTY-carry banded self-join ([[dEmbedNeardup]],
-    * [[bandedCandidates]] → emb_knn_graph and the knnEdges riders),
-    * memoized and cached: each of those queries consumes it from BOTH
-    * sides of a self-join, and un-cached the band explode plus the two
-    * per-key window passes (rank + bucket count for residue blocking)
-    * re-ran per side per invocation. corpus×bands rows of (2 longs +
-    * the vector) — the same session-memo class as [[sig40]] /
-    * [[tokenHashes]]; at fleet scale this IS the banded index a
-    * deployment materializes once per standing corpus. Carry-bearing
-    * consumers (labels ride the band frame) keep their own pre-explode
-    * attach join — joining carry onto this frame would move
-    * corpus×bands rows instead of n. */
-  private def ebBlocked(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "ebBlocked") {
+  /** The residue-blocked band frame (vec_id, v, key, blk), plus `label`
+    * when `withLabel`, shared by every banded self-join
+    * ([[dEmbedNeardup]], [[bandedCandidates]] → emb_knn_graph, the
+    * knnEdges riders, emb_hard_negatives and emb_triplet_mine),
+    * memoized and cached per variant: each of those queries consumes it
+    * from BOTH sides of a self-join, and un-cached the band explode plus
+    * the two per-key window passes (rank + bucket count for residue
+    * blocking) re-ran per side per invocation (the r14 before-plans
+    * show two full Generate→Window→Window chains per query).
+    * corpus×bands rows of (2 longs + the vector) — the same
+    * session-memo class as [[sig40]] / [[tokenHashes]]; at fleet scale
+    * this IS the banded index a deployment materializes once per
+    * standing corpus. The label attach runs BEFORE the band explode —
+    * n rows, one linear co-shuffle with the cached signature frame —
+    * because joining it onto the exploded frame would move corpus×bands
+    * rows instead of n. */
+  private def ebBlocked(s: SparkSession, dir: String,
+      withLabel: Boolean): DataFrame =
+    memo(s, dir, if (withLabel) "ebCarry:label" else "ebBlocked") {
+      val carry = if (withLabel) Seq(col("label")) else Nil
+      val base =
+        if (withLabel) sig40(s, dir).join(
+          tbl(s, dir, "embeddings").select("vec_id", "label"), "vec_id")
+        else sig40(s, dir)
       val b = lshBandBits(embCount(s, dir))
       val nb = 40 / b
       val keys = (0 until nb).map(k =>
@@ -1027,8 +957,8 @@ object PipelineQueries {
           shiftright(col("sig"), k * b).bitwiseAND(lit((1L << b) - 1))))
           .as(s"k$k"))
       val w = Window.partitionBy("key")
-      sig40(s, dir).select(col("vec_id"), col("v"),
-          explode(array(keys: _*)).as("key"))
+      base.select(col("vec_id") +: col("v") +: carry :+
+          explode(array(keys: _*)).as("key"): _*)
         .withColumn("__h",
           expr("((vec_id % 1000003) * 2654435761) % 1000003"))
         .withColumn("__r", row_number().over(
@@ -1036,7 +966,8 @@ object PipelineQueries {
         .withColumn("__bn", count(lit(1)).over(w))
         .withColumn("__m", expr("(__bn + 1023) div 1024"))
         .withColumn("blk", pmod(col("__r"), col("__m")))
-        .select("vec_id", "v", "key", "blk")
+        .select(Seq(col("vec_id"), col("v"), col("key"), col("blk")) ++
+          carry: _*)
         .cache()
     }
 
@@ -1067,7 +998,7 @@ object PipelineQueries {
     * global top-4 is in the top-4 of every subset containing it). */
   def embKnnGraph(s: SparkSession, dir: String): DataFrame = {
     graft.functions.native.register(s)
-    val cand = bandedCandidates(s, dir)
+    val cand = bandedCandidates(s, dir, withLabel = false)
     // inline-explode the direction mirror, NOT unionAll(cand, swap): a
     // union of two projections of the same frame re-executes the whole
     // banded candidate join twice (measured ~2x at the factor-1000
@@ -1117,7 +1048,7 @@ object PipelineQueries {
     * gradient signal easy random negatives cannot). Candidates come
     * from the same corpus-scaled banded LSH as [[embKnnGraph]] — the
     * label filter runs INSIDE the candidate stream (labels ride the
-    * band frame via `carry`, attached per vector BEFORE the band
+    * band frame via [[ebBlocked]], attached per vector BEFORE the band
     * explode, so the n-row label join is the only extra work) and the
     * per-anchor result is a bounded [[graft.functions.TopKScored]]
     * fold, so nothing corpus-sized ever shuffles. Vectors whose
@@ -1125,7 +1056,7 @@ object PipelineQueries {
     * training time those anchors fall back to in-batch negatives. */
   def embHardNegatives(s: SparkSession, dir: String): DataFrame = {
     graft.functions.native.register(s)
-    val cand = bandedCandidates(s, dir, Seq("label"))
+    val cand = bandedCandidates(s, dir, withLabel = true)
       .filter(col("label_a") =!= col("label_b"))
     val both = cand.selectExpr(
       """inline(array(
@@ -1155,7 +1086,7 @@ object PipelineQueries {
     * bit-identical doubles, so it is itself engine-exact. */
   def embTripletMine(s: SparkSession, dir: String): DataFrame = {
     graft.functions.native.register(s)
-    val both = bandedCandidates(s, dir, Seq("label")).selectExpr(
+    val both = bandedCandidates(s, dir, withLabel = true).selectExpr(
       """inline(array(
         |  named_struct('g', vec_a, 'nb', vec_b,
         |               'same', label_a = label_b, 'cos', cos),
@@ -1323,49 +1254,15 @@ object PipelineQueries {
     * the consumer's bounded fold, so the raw pairs stream through
     * codegen without ever materializing or shuffling.
     *
-    * `carry` attaches extra per-vector embedding-table columns (e.g.
-    * `label` for [[embHardNegatives]]) to BOTH endpoints as
-    * `<name>_a`/`<name>_b`. The attach join runs BEFORE the band
-    * explode — n rows, one linear co-shuffle with the cached signature
-    * frame — so the (much larger) candidate stream itself never picks
-    * up an extra shuffle; with `carry` empty both sides ride the
-    * memoized [[ebBlocked]] frame (identical rows — the blocking rule
-    * is the same expression chain). */
+    * `withLabel` carries the embedding-table `label` (for
+    * [[embHardNegatives]] / [[embTripletMine]]) to BOTH endpoints as
+    * `label_a`/`label_b`; both variants ride the memoized [[ebBlocked]]
+    * frame, so the (much larger) candidate stream itself never picks up
+    * an extra shuffle. */
   private def bandedCandidates(s: SparkSession, dir: String,
-      carry: Seq[String] = Nil): DataFrame = {
-    // carry-bearing frames are memoized per carry set exactly like the
-    // empty-carry [[ebBlocked]]: emb_hard_negatives and emb_triplet_mine
-    // both consume the `label` variant from BOTH sides of a self-join,
-    // so un-cached the band explode + the two per-key window passes ran
-    // twice per invocation per query (the r14 before-plans show two full
-    // Generate→Window→Window chains each, like d_embed_neardup's before
-    // the r14 ebBlocked memo). The label attach itself stays PRE-explode
-    // (n rows, one linear co-shuffle) — joining carry onto the exploded
-    // frame would move corpus×bands rows.
-    val eb = if (carry.isEmpty) ebBlocked(s, dir)
-      else memo(s, dir, s"ebCarry:${carry.mkString(",")}") {
-      val base = sig40(s, dir)
-      val e = base.join(tbl(s, dir, "embeddings")
-        .select(col("vec_id") +: carry.map(col): _*), "vec_id")
-      val b = lshBandBits(embCount(s, dir))
-      val nb = 40 / b
-      val keys = (0 until nb).map(k =>
-        (lit(k.toLong << 21).bitwiseOR(
-          shiftright(col("sig"), k * b).bitwiseAND(lit((1L << b) - 1))))
-          .as(s"k$k"))
-      val w = Window.partitionBy("key")
-      e.select(col("vec_id") +: col("v") +: carry.map(col) :+
-          explode(array(keys: _*)).as("key"): _*)
-        .withColumn("__h",
-          expr("((vec_id % 1000003) * 2654435761) % 1000003"))
-        .withColumn("__r", row_number().over(
-            w.orderBy(col("__h"), col("vec_id"))).cast(LongType) - lit(1L))
-        .withColumn("__bn", count(lit(1)).over(w))
-        .withColumn("__m", expr("(__bn + 1023) div 1024"))
-        .withColumn("blk", pmod(col("__r"), col("__m")))
-        .select((Seq("vec_id", "v", "key", "blk") ++ carry).map(col): _*)
-        .cache()
-    }
+      withLabel: Boolean): DataFrame = {
+    val eb = ebBlocked(s, dir, withLabel)
+    val carry = if (withLabel) Seq("label") else Nil
     def side(sfx: String) = eb.select(
       col("vec_id").as(s"vec_$sfx") +: col("v").as(s"v$sfx") +:
         col("key") +: col("blk") +:
@@ -1959,15 +1856,13 @@ object PipelineQueries {
     * (model-sized: 16×64 floats — the same contract as
     * [[corpusCentroids]]' collected codebook) — deterministic seed rule
     * shared by [[annPq]] / [[annRerank]] / [[annIvfPq]], in the m×ks×sub
-    * kernel layout. Memoized per (session, dir) like [[embCountMemo]]:
+    * kernel layout. Memoized per (session, dir) like [[embCount]]:
     * three queries × three bench passes each re-ran the (pruned, but
     * still job-launching) collect for the identical 4 KB of driver
     * state. */
-  private val pqCbMemo =
-    new SessionScoped[String, Array[Array[Array[Float]]]]()
   private def pqCodebookArr(s: SparkSession,
       dir: String): Array[Array[Array[Float]]] =
-    pqCbMemo.getOrBuild(s, dir) {
+    SessionScoped.getOrBuild(s, dir, "pqCodebook") {
       val seeds = tbl(s, dir, "embeddings")
         .filter(col("vec_id") < 16).orderBy("vec_id")
         .select("embedding").collect().map(_.getSeq[Float](0).toArray)
@@ -2299,10 +2194,8 @@ object PipelineQueries {
     * memoized per (session, dir): the scale derivation must not re-scan
     * the corpus on every plan construction (bench/Explain/spec all
     * build this plan repeatedly). */
-  private val scalarMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Long, Double)]()
   private def outlierStats(s: SparkSession, dir: String): (Long, Double) =
-    scalarMemo.computeIfAbsent((s, dir), { _ =>
+    SessionScoped.getOrBuild(s, dir, "outlierStats") {
       val r = tbl(s, dir, "embeddings")
         .groupBy("label")
         .agg(count(lit(1)).as("n"), max(expr(
@@ -2311,7 +2204,7 @@ object PipelineQueries {
         .agg(max(col("n")), max(col("m"))).head()
       (Option(r.get(0)).fold(1L)(_.asInstanceOf[Long]),
         Option(r.get(1)).fold(1.0)(_.asInstanceOf[Double]))
-    })
+    }
 
   def embOutliers(s: SparkSession, dir: String): DataFrame = {
     val base = tbl(s, dir, "embeddings")

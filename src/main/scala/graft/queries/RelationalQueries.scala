@@ -91,45 +91,29 @@ object RelationalQueries {
         .as("revenue"))
   }
 
+  // name tag per setup, NOT dir.hashCode: a hash collision between two
+  // dirs would silently serve the first dir's data under the second's key
+  private val bucketedTag = new java.util.concurrent.atomic.AtomicInteger(0)
+
   /** One-time bucketed-table setup per (session, sf dir): orders and
     * lineitem written BUCKETED by their join key into the same bucket
     * count — table names returned for [[qBucketedJoin]]. The
     * `repartition(n, key)` before the write uses the same Murmur3 hash
     * partitioning as the bucket-id assignment, so each task holds
     * exactly one bucket → ONE file per bucket, which is the layout
-    * Spark's scan recognizes as both co-partitioned AND sorted. */
-  // Session-scoped (released on context end or explicit evictDerived):
-  // the derived warehouse copies are multi-GB at bench SFs, and a static
-  // JVM-lifetime map would pin stopped sessions, their catalog entries,
-  // and the layouts forever.
-  private val bucketedSetup =
-    new SessionScoped[String, (String, String, String)]({ (s, v) =>
-      val (ord, li, loc) = v
-      s.sql(s"DROP TABLE IF EXISTS $ord")
-      s.sql(s"DROP TABLE IF EXISTS $li")
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(loc))
-    })
-  // name tag per setup, NOT dir.hashCode: a hash collision between two
-  // dirs would silently serve the first dir's data under the second's key
-  private val bucketedTag = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Temp dir for a memoized derived layout, deleted at JVM exit — the
-    * copies live exactly as long as the sessions that memoized them; a
-    * host running many bench/verify JVMs would otherwise accumulate
-    * multi-GB orphaned table copies under the temp volume. */
-  private def sessionTempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
-      catch { case _: java.io.IOException => () }))
-    d.toString
-  }
-
+    * Spark's scan recognizes as both co-partitioned AND sorted.
+    * Session-scoped: eviction drops both catalog tables and deletes
+    * their directory — the derived warehouse copies are multi-GB at
+    * bench SFs. */
   private def bucketedTables(s: SparkSession, dir: String): (String, String) = {
-    val (ord, li, _) = bucketedSetup.getOrBuild(s, dir) {
+    val (ord, li, _) = SessionScoped.getOrBuild(s, dir, "bucketed",
+      (v: (String, String, String)) => {
+        s.sql(s"DROP TABLE IF EXISTS ${v._1}")
+        s.sql(s"DROP TABLE IF EXISTS ${v._2}")
+        SessionScoped.deleteDir(v._3)
+      }) {
       val tag = bucketedTag.getAndIncrement()
-      val loc = sessionTempDir("graft_bucketed")
+      val loc = SessionScoped.tempDir("bucketed")
       val ord = s"graft_bkt_orders_$tag"
       val li = s"graft_bkt_lineitem_$tag"
       tbl(s, dir, "orders")
@@ -148,7 +132,6 @@ object RelationalQueries {
     }
     (ord, li)
   }
-
   /** Bucketed co-located fact⋈fact join — the STORAGE-side
     * shuffle-elimination pattern (complement of the broadcast and
     * salting strategies): both tables are bucketed by the join key into
@@ -170,27 +153,6 @@ object RelationalQueries {
         dsum(col("l_extendedprice")).as("spend"))
   }
 
-  /** One-time z-ordered copy of events per (session, sf dir): (day,
-    * user_id, event_type, value) clustered by the (day, user_id) Morton
-    * key — the layout that serves day-range AND user-range scans from
-    * the same files (ZOrderSpec pins the footer-stats pruning). */
-  private val zorderSetup = new SessionScoped[String, String]({ (_, zdir) =>
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(zdir))
-  })
-
-  /** Drop the derived layouts (bucketed warehouse tables, z-ordered
-    * copies) this module built for (session, dir): catalog entries
-    * dropped, temp directories deleted. Subsequent queries rebuild. */
-  def evictDerived(s: SparkSession, dir: String): Unit = {
-    bucketedSetup.evictMatching(s)(_ == dir)
-    zorderSetup.evictMatching(s)(_ == dir)
-  }
-
-  /** Live derived-layout count for (session, dir) — specs. */
-  def derivedLayoutCount(s: SparkSession, dir: String): Int =
-    bucketedSetup.sizeFor(s, (_: String) == dir) +
-      zorderSetup.sizeFor(s, (_: String) == dir)
-
   /** Multi-dimensional box scan over the z-ordered layout — the
     * STORAGE-side range-pruning pattern next to [[qBucketedJoin]]'s
     * join co-location: the (day, user) box predicate pushes into the
@@ -198,10 +160,13 @@ object RelationalQueries {
     * dimensions (a day-sorted 100 TB table would prune only days and
     * scan every user). Result == the same filter over the raw table
     * (the oracle); the one-time clustered write is memoized per
-    * session+dir, like the bucketed warehouse. */
+    * session+dir, like the bucketed warehouse: a z-ordered copy of
+    * events, (day, user_id, event_type, value) clustered by the
+    * (day, user_id) Morton key — the layout that serves day-range AND
+    * user-range scans from the same files (ZOrderSpec pins the
+    * footer-stats pruning). */
   def qZorderScan(s: SparkSession, dir: String): DataFrame = {
-    val zdir = zorderSetup.getOrBuild(s, dir) {
-      val out = sessionTempDir("graft_zevents")
+    val zdir = SessionScoped.store(s, dir, "zorder") { out =>
       graft.sources.ZOrder.writeClustered(
         TSA.withEpochUs(AggQueries.events(s, dir), "ts")
           .select(expr(s"${TSA.T} div 86400000000L").as("day"),

@@ -342,6 +342,19 @@ object NetCDFIngest {
     * rejected it (`header` / `decode`), and the parse error. */
   final case class Quarantined(path: String, stage: String, error: String)
 
+  /** Strict ingest's failure: the same attribution permissive ingest
+    * quarantines, thrown instead. */
+  final class GranuleIngestException(val record: Quarantined)
+      extends RuntimeException(
+        s"granule ${record.path} failed ${record.stage}: ${record.error}")
+
+  /** Run one granule's `stage`, attributing any parse error to `path`. */
+  private def attempt[T](path: String, stage: String)(
+      body: => T): Either[Quarantined, T] =
+    try Right(body)
+    catch { case scala.util.control.NonFatal(e) =>
+      Left(Quarantined(path, stage, errMsg(e))) }
+
   /** [[convertChecked]]'s result: the produced granule directories plus
     * every quarantined input. */
   final case class IngestResult(
@@ -363,18 +376,20 @@ object NetCDFIngest {
       recDim: Option[String] = None): Seq[String] =
     convertChecked(spark, srcs, outDir, recDim).granuleDirs
 
-  /** [[convert]] with a corrupt-granule policy. Strict (default) fails the
-    * job on the first unreadable granule, like the reference (whose
-    * netCDF4 `Dataset(...)` call raises). Permissive QUARANTINES bad
-    * granules instead — a fleet-scale necessity: at ~1M granules a single
-    * truncated delivery must cost one file, not the job. Each pass
-    * catches per-granule parse errors task-side (pass 2 via an
-    * accumulator — decode work happens before the first row is emitted,
-    * so a caught granule contributes zero rows, never partial output);
-    * the quarantine list is returned AND written to
-    * `outDir/_quarantine.json` as an audit artifact. Schema conflicts
-    * between two readable granules stay hard errors in both modes: the
-    * conflict names two files and cannot be attributed to one. */
+  /** [[convert]] with a corrupt-granule policy. Both passes attribute
+    * every per-granule parse error task-side to its file and pass
+    * ([[Quarantined]]). Strict (default) fails on the first unreadable
+    * granule, like the reference (whose netCDF4 `Dataset(...)` call
+    * raises), with a [[GranuleIngestException]] carrying that record.
+    * Permissive QUARANTINES bad granules instead — a fleet-scale
+    * necessity: at ~1M granules a single truncated delivery must cost one
+    * file, not the job (pass 2 collects via an accumulator — decode work
+    * happens before the first row is emitted, so a caught granule
+    * contributes zero rows, never partial output); the quarantine list is
+    * returned AND written to `outDir/_quarantine.json` as an audit
+    * artifact. Schema conflicts between two readable granules stay hard
+    * errors in both modes: the conflict names two files and cannot be
+    * attributed to one. */
   def convertChecked(spark: SparkSession, srcs: Seq[String], outDir: String,
       recDim: Option[String] = None,
       permissive: Boolean = false): IngestResult = {
@@ -382,15 +397,11 @@ object NetCDFIngest {
     val paths = srcs.toIndexedSeq
     val metaTries = spark.sparkContext
       .parallelize(paths, paths.size)
-      .map { p =>
-        if (permissive)
-          try Right(granuleMeta(p, recDim))
-          catch { case scala.util.control.NonFatal(e) =>
-            Left(Quarantined(p, "header", errMsg(e))) }
-        else Right(granuleMeta(p, recDim))
-      }
+      .map(p => attempt(p, "header")(granuleMeta(p, recDim)))
       .collect().toSeq
     val headerBad = metaTries.collect { case Left(q) => q }
+    if (!permissive)
+      headerBad.headOption.foreach(q => throw new GranuleIngestException(q))
     val metas = metaTries.collect { case Right(m) => m }
     val schema = unionSchema(metas)
     val withG = StructType(schema.fields :+
@@ -402,21 +413,24 @@ object NetCDFIngest {
       .parallelize(goodPaths, math.max(goodPaths.size, 1))
       .flatMap { p =>
         val g = granuleName(p)
-        val rows =
-          if (permissive)
-            // granuleRows does all nc reads (incl. fletcher32 checks)
-            // before returning its iterator, so failures surface here
-            // and a quarantined granule emits nothing
-            try granuleRows(p, schema, recDim)
-            catch { case scala.util.control.NonFatal(e) =>
-              decodeBad.add(Quarantined(p, "decode", errMsg(e)))
-              Iterator.empty
-            }
-          else granuleRows(p, schema, recDim)
+        // granuleRows does all nc reads (incl. fletcher32 checks) before
+        // returning its iterator, so failures surface here and a
+        // quarantined granule emits nothing
+        val rows = attempt(p, "decode")(granuleRows(p, schema, recDim)) match {
+          case Right(it) => it
+          case Left(q) if permissive => decodeBad.add(q); Iterator.empty
+          case Left(q) => throw new GranuleIngestException(q)
+        }
         rows.map(r => Row.fromSeq(r.toSeq :+ g))
       }
-    spark.createDataFrame(rdd, withG)
+    // a strict decode failure reaches the driver wrapped in Spark's job
+    // and write errors; surface the typed record itself
+    try spark.createDataFrame(rdd, withG)
       .write.mode("overwrite").partitionBy("__granule").parquet(outDir)
+    catch { case e: Exception =>
+      throw Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case g: GranuleIngestException => g }.getOrElse(e)
+    }
     // .distinct: accumulator updates inside a transformation can double
     // count on task retry/speculation; the quarantine record is
     // value-identical across retries, so dedup restores exactly-once

@@ -81,7 +81,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
     val ids = spark.read.parquet(p1).select("doc_id").distinct()
       .collect().map(_.getLong(0)).toSet
     assert(ids === Set(1L, 2L, 5L))
-    PipelineQueries.evictCaches(spark, incDir)
+    graft.queries.SessionScoped.evict(spark, incDir)
     assert(!new java.io.File(p1).exists(), "evict deletes the store dir")
     val p2 = PipelineQueries.corpusSigStore(spark, incDir)
     assert(p2 != p1 && new java.io.File(p2).exists(), "rebuilds on demand")
@@ -446,7 +446,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
     // occurrences is adjacent, nothing else pairs more tightly
     assert(byRank.head._2 == h("alpha") && byRank.head._3 == h("beta"),
       s"expected alpha-beta at rank 1, got ${byRank.head}")
-    PipelineQueries.evictCaches(spark, d)
+    graft.queries.SessionScoped.evict(spark, d)
   }
 
   test("bm25: top-10 ranked, scores positive non-increasing, and every " +

@@ -57,10 +57,14 @@ class IntervalPropertySpec extends AnyFunSuite with SparkSpec {
           org.apache.spark.sql.functions.col("ts")).cast("timestamp_ntz"))
   }
 
-  private def writeDir(rows: Seq[(Long, Long, Long)]): String = {
-    val d = java.nio.file.Files.createTempDirectory("graft_prop3").toString
-    eventsDf(rows).write.mode("overwrite").parquet(s"$d/events.parquet")
-    d
+  /** Run `f` on a temp dir holding `rows` as its events table; the dir
+    * is deleted when `f` returns. */
+  private def withDir[T](rows: Seq[(Long, Long, Long)])(f: String => T): T = {
+    val d = java.nio.file.Files.createTempDirectory("graft_prop3").toFile
+    try {
+      eventsDf(rows).write.mode("overwrite").parquet(s"$d/events.parquet")
+      f(d.toString)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(d)
   }
 
   test("distributed interval union == naive reference on random inputs") {
@@ -72,11 +76,11 @@ class IntervalPropertySpec extends AnyFunSuite with SparkSpec {
       val evs = gen.apply(Gen.Parameters.default, Seed(11L + i)).get
         .map { case (u, t) => (u, t) }.distinct
         .zipWithIndex.map { case ((u, t), id) => (u, t, id.toLong) }
-      val dir = writeDir(evs)
-      val got = graft.queries.RelationalQueries.qMergeIntervals(spark, dir)
-        .collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
-        .groupBy(_._1).view.mapValues(_.map(_._2).sortBy(_._1).toSeq).toMap
+      val got = withDir(evs) { dir =>
+        graft.queries.RelationalQueries.qMergeIntervals(spark, dir)
+          .collect()
+          .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
+      }.groupBy(_._1).view.mapValues(_.map(_._2).sortBy(_._1).toSeq).toMap
       val exp = evs.groupBy(_._1).view
         .mapValues(g => naiveMerge(g.map(_._2))).toMap
       assert(got === exp, s"seed ${11L + i}")
@@ -93,12 +97,12 @@ class IntervalPropertySpec extends AnyFunSuite with SparkSpec {
     (0 until 10).foreach { i =>
       val evs = gen.apply(Gen.Parameters.default, Seed(23L + i)).get
         .distinct.zipWithIndex.map { case ((u, t), id) => (u, t, id.toLong) }
-      val dir = writeDir(evs)
-      val got = graft.streaming.StreamingAgg
-        .gapFillStream(graft.Tables.load(spark, dir, "events"), nom, thr)
-        .toDF().filter(col("is_fill"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
+      val got = withDir(evs) { dir =>
+        graft.streaming.StreamingAgg
+          .gapFillStream(graft.Tables.load(spark, dir, "events"), nom, thr)
+          .toDF().filter(col("is_fill"))
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+      }.groupBy(_._1).view.mapValues(_.map(_._2).sorted.toSeq).toMap
       val exp = evs.groupBy(_._1).view
         .mapValues(g => naiveFills(g.map(_._2), nom, thr))
         .filter(_._2.nonEmpty).toMap

@@ -294,7 +294,7 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
     val feats = graft.queries.PipelineQueries.mmFeatures(spark, dir)
     val n = feats.count()
     assert(n > 0)
-    assert(graft.multimodal.MediaStore.derivedCount(spark, dir) === 1,
+    assert(graft.queries.SessionScoped.count(spark, dir, _ == "media") === 1,
       "a read-only source dir gets ONE derived session store")
     val scanLine = feats.queryExecution.executedPlan.toString
       .linesIterator.find(_.contains("ReadSchema"))
@@ -303,10 +303,10 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
     assert(!scanLine.contains("wav") && !scanLine.contains("avi"),
       s"other kinds' payload columns must prune out of the scan: $scanLine")
     // evict releases the derived store; the query rebuilds it
-    graft.queries.PipelineQueries.evictCaches(spark, dir)
-    assert(graft.multimodal.MediaStore.derivedCount(spark, dir) === 0)
+    graft.queries.SessionScoped.evict(spark, dir)
+    assert(graft.queries.SessionScoped.count(spark, dir, _ == "media") === 0)
     assert(graft.queries.PipelineQueries.mmFeatures(spark, dir).count() === n)
-    graft.queries.PipelineQueries.evictCaches(spark, dir)
+    graft.queries.SessionScoped.evict(spark, dir)
   }
 
   test("silence verdict compare is exact past the 64-bit product bound " +

@@ -740,7 +740,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkSpec {
     try {
       spark.conf.set(PipelineQueries.BroadcastGateKey, "1")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      PipelineQueries.evictCaches(spark, sfDir)
+      graft.queries.SessionScoped.evict(spark, sfDir)
       val (plan, rows) = run()
       def hasStoreScan(p: SparkPlan): Boolean = nodes(p).exists {
         case f: org.apache.spark.sql.execution.FileSourceScanExec =>
@@ -763,7 +763,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkSpec {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
       // drop frames built under the forced regime so later tests (and
       // the under-gate pin above, in any order) rebuild with defaults
-      PipelineQueries.evictCaches(spark, sfDir)
+      graft.queries.SessionScoped.evict(spark, sfDir)
     }
   }
 
@@ -798,7 +798,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkSpec {
       // surviving BHJ could only come from the (now removed) hint
       spark.conf.set(PipelineQueries.BroadcastGateKey, "1")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      PipelineQueries.evictCaches(spark, sfDir)
+      graft.queries.SessionScoped.evict(spark, sfDir)
       val (overPlan, rows) = run()
       val joins = sizeJoins(overPlan)
       assert(joins.nonEmpty, "the size frame still joins the assignment")
@@ -810,7 +810,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkSpec {
     } finally {
       spark.conf.unset(PipelineQueries.BroadcastGateKey)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevAuto)
-      PipelineQueries.evictCaches(spark, sfDir)
+      graft.queries.SessionScoped.evict(spark, sfDir)
     }
   }
 
@@ -959,12 +959,12 @@ class PlanQualitySpec extends AnyFunSuite with SparkSpec {
     val baseline = run()
     try {
       spark.conf.set(PipelineQueries.BroadcastGateKey, "1")
-      PipelineQueries.evictCaches(spark, sfDir)
+      graft.queries.SessionScoped.evict(spark, sfDir)
       assert(run().sameElements(baseline),
         "both regimes must produce identical cluster assignments")
     } finally {
       spark.conf.unset(PipelineQueries.BroadcastGateKey)
-      PipelineQueries.evictCaches(spark, sfDir)
+      graft.queries.SessionScoped.evict(spark, sfDir)
     }
   }
 
