@@ -1,40 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — one JSON line with per-query wall seconds.
   * Queries are forced end-to-end with a noop-format write (count() would let
   * Catalyst prune compute that a real consumer pays for). A small warmup
   * first touches each table so JVM/codegen warmup isn't billed to the first
   * query. Both JSON lines name the queries that failed in any pass
-  * (`"failed"`); a query that failed in every pass exits the run with 1. */
+  * (`"failed"`); a query that failed in every pass exits the run with 1.
+  * The full record also lists every pass's time per query (`"passes"`).
+  *
+  * Usage: runMain graft.Bench [query ...] (env `SPARK_GRAFT_SF_DIR`,
+  * `SPARK_GRAFT_BENCH_PASSES`, `SPARK_GRAFT_BENCH_OUT`) */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded TypedImperativeAggregate folds (TopKScored's per-vector
-      // top-4 in particular) legitimately hold ~n distinct groups in the
-      // PARTIAL map; the 128-group default silently degrades the partial
-      // to sort-based and sorts the whole candidate stream per task
-      // (measured 2x on emb_knn_graph at 100x rows)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.ui.enabled", "false")
-      // stall-proofing: BENCH_r04 died to "unable to send heartbeats to
-      // driver more than 60 times" during a co-tenant machine stall
-      // (sporadic 20-110 s freezes adjudicated in r3/r4). Generous
-      // timeouts let a stall degrade one timing, not kill the artifact.
-      .config("spark.network.timeout", "600s")
-      .config("spark.executor.heartbeatInterval", "30s")
-      .config("spark.network.timeoutInterval", "60s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()
@@ -87,8 +66,12 @@ object Bench {
     // never read as a faster bench
     val failed = names.filter(n => passes.exists(_(n) < 0))
       .map("\"" + _ + "\"").mkString("[", ",", "]")
+    // every pass's time per query (-1.0 = that pass failed): the first
+    // pass carries the one-time session-memo fills the min leaves out
+    val perPass = names.map(n => "\"" + n + "\":" +
+      passes.map(_(n)).mkString("[", ",", "]")).mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$failed}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$failed,"passes":$perPass}"""
     println(full)
     // the full per-query line outgrew the harness's tail-capture window at
     // 82 queries (BENCH_r03 parsed:null) — repeat a compact parseable line

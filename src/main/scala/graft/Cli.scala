@@ -37,21 +37,7 @@ object Cli {
     if (args.contains("-v") || args.contains("--version")) {
       println(s"graft, version $Version"); return
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded TypedImperativeAggregate folds (TopKScored's per-vector
-      // top-4 in particular) legitimately hold ~n distinct groups in the
-      // PARTIAL map; the 128-group default silently degrades the partial
-      // to sort-based and sorts the whole candidate stream per task
-      // (measured 2x on emb_knn_graph at 100x rows)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     try run(spark, args) finally spark.stop()
   }
 

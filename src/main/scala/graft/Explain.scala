@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for the headline queries (plan-quality
   * review; output checked into EXPLAIN.md). Usage: runMain graft.Explain
   * [sfDir] [query ...] */
@@ -13,22 +11,9 @@ object Explain {
       else Seq("q1_agg", "q3_join", "q5_join_agg", "q6_agg", "q_anti_join",
         "q_range_join", "q_agg_full", "q_agg_dedup", "d_minhash_lsh",
         "ann_lsh", "ann_ivf", "q_agg_sessionize")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded TypedImperativeAggregate folds (TopKScored's per-vector
-      // top-4 in particular) legitimately hold ~n distinct groups in the
-      // PARTIAL map; the 128-group default silently degrades the partial
-      // to sort-based and sorts the whole candidate stream per task
-      // (measured 2x on emb_knn_graph at 100x rows)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // four slots on any machine: partition counts in the plans stay
+    // comparable with the checked-in EXPLAIN.md
+    val spark = GraftSession("local[4]")
     names.foreach { n =>
       println(s"\n===== $n =====")
       try SparkEntry.queries(n)(spark, sfDir).explain("formatted")

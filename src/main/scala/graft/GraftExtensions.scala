@@ -3,15 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** SparkSessionExtensions entry point: makes every graft native function
-  * available in SQL without manual registration —
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
-  * }}}
-  *
-  * or `.withExtensions(new GraftExtensions)`. The injected functions are
+  * available in SQL without manual registration — set
+  * `spark.sql.extensions=graft.GraftExtensions` on the session builder,
+  * or call `.withExtensions(new GraftExtensions)` on it. The injected functions are
   * the codegen'd native expressions of [[graft.functions.native]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

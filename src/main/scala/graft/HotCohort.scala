@@ -53,15 +53,7 @@ object HotCohort {
     val src = args.lift(1).getOrElse("/root/testdata/sf0.01")
     val out = args.lift(2).getOrElse(
       s"${System.getProperty("java.io.tmpdir")}/graft_hotcohort")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     build(spark, src, out, cohortSize)
     // prove the cap binds: the max band-bucket occupancy of the built
     // corpus, computed through the SAME signature + banding the

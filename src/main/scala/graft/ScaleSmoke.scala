@@ -42,126 +42,70 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded TypedImperativeAggregate folds (TopKScored's per-vector
-      // top-4 in particular) legitimately hold ~n distinct groups in the
-      // PARTIAL map; the 128-group default silently degrades the partial
-      // to sort-based and sorts the whole candidate stream per task
-      // (measured 2x on emb_knn_graph at 100x rows)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
 
     val dir = s"${System.getProperty("java.io.tmpdir")}/graft_scale_$factor"
-    if (!new java.io.File(s"$dir/events").isDirectory) {
-      // events: each copy shifted +30 days and re-keyed — disjoint chunks
-      Tables.load(spark, sf, "events")
-        .withColumn("__i", explode(expr(s"sequence(0, ${factor - 1})")))
-        .withColumn("ts",
-          col("ts") + expr("make_dt_interval(__i * 30, 0, 0, 0)"))
-        .withColumn("event_id",
-          col("event_id") + col("__i") * 100000000L)
-        .drop("__i")
-        .write.mode("overwrite").parquet(s"$dir/events")
-      Tables.load(spark, sf, "lineitem")
-        .withColumn("__i", explode(expr(s"sequence(0, ${factor - 1})")))
-        .withColumn("l_orderkey",
-          col("l_orderkey") + col("__i") * 100000000L)
-        .drop("__i")
-        .write.mode("overwrite").parquet(s"$dir/lineitem")
-    }
-    // separate guard: a pre-existing events replica (earlier smoke run)
-    // must not skip the documents replica
-    if (!new java.io.File(s"$dir/documents.parquet").isDirectory) {
-      // documents: re-keyed + a per-copy marker token prepended so the
-      // copies are near-dupes (realistic), not byte-identical clones
-      Tables.load(spark, sf, "documents")
-        .withColumn("__i", explode(expr(s"sequence(0, ${factor - 1})")))
-        .withColumn("doc_id", col("doc_id") + col("__i") * 100000000L)
-        .withColumn("text",
-          concat(lit("copymark"), col("__i").cast("string"), lit(" "),
-            col("text")))
-        .drop("__i")
-        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    }
+    import TenX.{copies, shifted}
+    // one replicated table under $dir/<name>, built once: `factor` copies
+    // of the sf table the name starts with, each tagged `__i` for
+    // `transform`
+    def replica(name: String)(transform: DataFrame => DataFrame): Unit =
+      if (!new java.io.File(s"$dir/$name").isDirectory)
+        transform(copies(Tables.load(spark, sf, name.takeWhile(_.isLetter)),
+          factor)).drop("__i").write.mode("overwrite").parquet(s"$dir/$name")
+    def eventsShifted(df: DataFrame): DataFrame = df
+      .withColumn("ts", col("ts") + expr("make_dt_interval(__i * 30, 0, 0, 0)"))
+      .withColumn("event_id", shifted("event_id"))
 
-    if (!new java.io.File(s"$dir/documents_zipf.parquet").isDirectory) {
-      // Zipfian skew: token z0 in EVERY doc (stopword df), z1 in half,
-      // z2 in a quarter; half the docs share a verbatim 9-token
-      // boilerplate sentence (license-header span skew)
-      val boiler = " all rights reserved redistribution permitted under" +
-        " the public license"
-      Tables.load(spark, sf, "documents")
-        .withColumn("__i", explode(expr(s"sequence(0, ${factor - 1})")))
-        .withColumn("doc_id", col("doc_id") + col("__i") * 100000000L)
-        .withColumn("text", concat(
-          col("text"), lit(" z0"),
-          when(col("doc_id") % 2 === 0, lit(" z1")).otherwise(lit("")),
-          when(col("doc_id") % 4 === 0, lit(" z2")).otherwise(lit("")),
-          when(col("doc_id") % 2 === 0, lit(boiler)).otherwise(lit(""))))
-        .drop("__i")
-        .write.mode("overwrite").parquet(s"$dir/documents_zipf.parquet")
-    }
-    if (!new java.io.File(s"$dir/embeddings.parquet").isDirectory) {
-      // uniform replica: re-keyed copies keep the original 16 seed
-      // vectors (vec_id < 16) as the coarse centroids
-      Tables.load(spark, sf, "embeddings")
-        .withColumn("__i", explode(expr(s"sequence(0, ${factor - 1})")))
-        .withColumn("vec_id", col("vec_id") + col("__i") * 100000000L)
-        .drop("__i")
-        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    }
-    if (!new java.io.File(s"$dir/embeddings_hot.parquet").isDirectory) {
-      // hot-cluster embeddings: every vector of the odd copies collapses
-      // onto one near-constant direction, so ONE coarse cluster holds
-      // half the corpus — the SemDeDup worst case (the paper's k must
-      // grow with the corpus; this pins that the within-cluster equi-join
-      // stays an AQE-splittable join, not an unsplittable partition)
-      Tables.load(spark, sf, "embeddings")
-        .withColumn("__i", explode(expr(s"sequence(0, ${factor - 1})")))
-        .withColumn("vec_id", col("vec_id") + col("__i") * 100000000L)
-        .withColumn("embedding",
-          when(col("__i") % 2 === 1, expr(
-            "transform(sequence(0, 63), j -> CAST(CASE WHEN j = 0 " +
-              "THEN 1.0 ELSE 0.0001 * ((vec_id * 7 + CAST(j AS BIGINT))" +
-              " % 5) END AS FLOAT))"))
-            .otherwise(col("embedding")))
-        .drop("__i")
-        .write.mode("overwrite").parquet(s"$dir/embeddings_hot.parquet")
-    }
-    if (!new java.io.File(s"$dir/documents_srchot.parquet").isDirectory) {
-      // source-skewed documents: 90% of all docs funneled onto source
-      // 'web' — the real shape of a crawl corpus. This is the dir where
-      // a per-source-only pack window serializes (one task carries 90%
-      // of the corpus); the two-level pack must hold its max-task bound
-      Tables.load(spark, sf, "documents")
-        .withColumn("__i", explode(expr(s"sequence(0, ${factor - 1})")))
-        .withColumn("doc_id", col("doc_id") + col("__i") * 100000000L)
-        .withColumn("source",
-          when(col("doc_id") % 10 < 9, lit("web")).otherwise(col("source")))
-        .drop("__i")
-        .write.mode("overwrite").parquet(s"$dir/documents_srchot.parquet")
-    }
-    if (!new java.io.File(s"$dir/events_hot.parquet").isDirectory) {
-      // hot-key events: half of all rows funneled onto user_id 1
-      Tables.load(spark, sf, "events")
-        .withColumn("__i", explode(expr(s"sequence(0, ${factor - 1})")))
-        .withColumn("ts",
-          col("ts") + expr("make_dt_interval(__i * 30, 0, 0, 0)"))
-        .withColumn("event_id", col("event_id") + col("__i") * 100000000L)
-        .withColumn("user_id",
-          when(col("event_id") % 2 === 0, 1L).otherwise(col("user_id")))
-        .drop("__i")
-        .write.mode("overwrite").parquet(s"$dir/events_hot.parquet")
-    }
+    // events: each copy shifted +30 days and re-keyed — disjoint chunks
+    replica("events")(eventsShifted)
+    replica("lineitem")(_.withColumn("l_orderkey", shifted("l_orderkey")))
+    // documents: re-keyed + a per-copy marker token prepended so the
+    // copies are near-dupes (realistic), not byte-identical clones
+    replica("documents.parquet")(_
+      .withColumn("doc_id", shifted("doc_id"))
+      .withColumn("text", concat(lit("copymark"), col("__i").cast("string"),
+        lit(" "), col("text"))))
+    // Zipfian skew: token z0 in EVERY doc (stopword df), z1 in half,
+    // z2 in a quarter; half the docs share a verbatim 9-token
+    // boilerplate sentence (license-header span skew)
+    val boiler = " all rights reserved redistribution permitted under" +
+      " the public license"
+    replica("documents_zipf.parquet")(_
+      .withColumn("doc_id", shifted("doc_id"))
+      .withColumn("text", concat(
+        col("text"), lit(" z0"),
+        when(col("doc_id") % 2 === 0, lit(" z1")).otherwise(lit("")),
+        when(col("doc_id") % 4 === 0, lit(" z2")).otherwise(lit("")),
+        when(col("doc_id") % 2 === 0, lit(boiler)).otherwise(lit("")))))
+    // uniform replica: re-keyed copies keep the original 16 seed
+    // vectors (vec_id < 16) as the coarse centroids
+    replica("embeddings.parquet")(_.withColumn("vec_id", shifted("vec_id")))
+    // hot-cluster embeddings: every vector of the odd copies collapses
+    // onto one near-constant direction, so ONE coarse cluster holds
+    // half the corpus — the SemDeDup worst case (the paper's k must
+    // grow with the corpus; this pins that the within-cluster equi-join
+    // stays an AQE-splittable join, not an unsplittable partition)
+    replica("embeddings_hot.parquet")(_
+      .withColumn("vec_id", shifted("vec_id"))
+      .withColumn("embedding",
+        when(col("__i") % 2 === 1, expr(
+          "transform(sequence(0, 63), j -> CAST(CASE WHEN j = 0 " +
+            "THEN 1.0 ELSE 0.0001 * ((vec_id * 7 + CAST(j AS BIGINT))" +
+            " % 5) END AS FLOAT))"))
+          .otherwise(col("embedding"))))
+    // source-skewed documents: 90% of all docs funneled onto source
+    // 'web' — the real shape of a crawl corpus. This is the dir where
+    // a per-source-only pack window serializes (one task carries 90%
+    // of the corpus); the two-level pack must hold its max-task bound
+    replica("documents_srchot.parquet")(_
+      .withColumn("doc_id", shifted("doc_id"))
+      .withColumn("source",
+        when(col("doc_id") % 10 < 9, lit("web")).otherwise(col("source"))))
+    // hot-key events: half of all rows funneled onto user_id 1
+    replica("events_hot.parquet")(eventsShifted(_)
+      .withColumn("user_id",
+        when(col("event_id") % 2 === 0, 1L).otherwise(col("user_id"))))
     def linkDir(name: String, target: String, as: String): String = {
       // PipelineQueries.tbl resolves "<dir>/<table>.parquet": expose a
       // variant table through a directory of symlinks shaped like an sf dir

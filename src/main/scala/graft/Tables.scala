@@ -4,13 +4,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.queries.SessionScoped
+
 /** Central loader for the driver-generated parquet tables.
   *
   * SESSION-CONFIG SIDE EFFECT: the first load pins
   * `spark.sql.session.timeZone=UTC` (plus `nanosAsLong` and parquet
   * aggregate pushdown) on the session — the timestamp normalization
-  * below is only value-preserving under UTC, and every graft entry point
-  * (Verify/Bench/Cli/ScaleSmoke/specs) already runs UTC. A caller that
+  * below is only value-preserving under UTC. Every [[GraftSession]]
+  * already runs UTC; sessions built elsewhere (the benchmark's registry
+  * session) rely on these settings being pinned here. A caller that
   * deliberately needs a non-UTC session must not share that session with
   * this loader.
   *
@@ -31,15 +34,6 @@ object Tables {
     * those natively as TIMESTAMP_NTZ; only events.ts has varied.) */
   private val nanosCols: Map[String, Seq[String]] = Map(
     "events" -> Seq("ts"))
-
-  /** Memo per (session, dir, table): a bench/verify run touches each table
-    * hundreds of times; re-resolving the relation re-lists files and
-    * re-reads footers. DataFrames are immutable, so sharing one is safe.
-    * Assumes the driver-generated testdata is immutable (TESTDATA.md:
-    * read-only) — the memoized frame freezes the file listing at first
-    * load, so this loader is NOT for tables that are rewritten in-process. */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   /** Parquet-footer timestamp unit for one column ("NANOS"/"MICROS"/
     * "MILLIS"), or None when the column carries no timestamp annotation.
@@ -88,8 +82,17 @@ object Tables {
     distinct.head
   }
 
+  /** Memo per (session, dir, table), held in [[graft.queries.SessionScoped]]
+    * as `table:<name>`: a bench/verify run touches each table hundreds of
+    * times; re-resolving the relation re-lists files and re-reads footers.
+    * DataFrames are immutable, so sharing one is safe. The memoized frame
+    * freezes the file listing at first load, so this loader is NOT for
+    * tables rewritten in-process — unless the writer then calls
+    * `SessionScoped.evict(s, dir)`, which drops the table frames with the
+    * rest of the dir's derived state, so the next load lists the files
+    * again. A stopped session's frames are released with it. */
   def load(s: SparkSession, dir: String, name: String): DataFrame =
-    memo.computeIfAbsent((s, dir, name), { case (s, dir, name) =>
+    SessionScoped.getOrBuild(s, dir, s"table:$name") {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       // TimestampType normalization below is only value-preserving when the
       // session reads UTC-adjusted micros in UTC; pin it rather than assume.
@@ -122,5 +125,5 @@ object Tables {
               "would null out malformed values; fix the loader for this encoding")
         }
       }
-    })
+    }
 }

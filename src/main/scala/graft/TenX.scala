@@ -56,10 +56,11 @@ object TenX {
   private val UserShift = 1000000L
 
   /** Explode a frame into `factor` copies tagged `__i` = 0..factor-1. */
-  private def copies(df: DataFrame, factor: Int): DataFrame =
+  private[graft] def copies(df: DataFrame, factor: Int): DataFrame =
     df.withColumn("__i", explode(expr(s"sequence(0, ${factor - 1})")))
 
-  private def shifted(c: String): Column =
+  /** Column `c` moved into copy `__i`'s disjoint key range. */
+  private[graft] def shifted(c: String): Column =
     col(c) + col("__i") * KeyShift
 
   def build(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
@@ -160,15 +161,7 @@ object TenX {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     val out = args.lift(2).getOrElse(
       s"${System.getProperty("java.io.tmpdir")}/graft_tenx_$factor")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     build(spark, src, out, factor)
     println(s"""{"tenx_dir":"$out","factor":$factor,"src":"$src"}""")
     spark.stop()

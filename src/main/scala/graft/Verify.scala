@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,26 +7,10 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: restrict to the named queries (local iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // NTZ end-to-end so written parquet timestamps are TIMESTAMP(MICROS,
-      // isAdjustedToUTC=false) — identical type + value to the DuckDB oracle.
-      .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      // bounded TypedImperativeAggregate folds (TopKScored's per-vector
-      // top-4 in particular) legitimately hold ~n distinct groups in the
-      // PARTIAL map; the 128-group default silently degrades the partial
-      // to sort-based and sorts the whole candidate stream per task
-      // (measured 2x on emb_knn_graph at 100x rows)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "4000000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
+    // NTZ end-to-end so written parquet timestamps are TIMESTAMP(MICROS,
+    // isAdjustedToUTC=false) — identical type + value to the DuckDB oracle.
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -54,7 +54,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
       AttrSpec("secret", "remove")))
 
   test("granules in -> sorted, deduped, gap-filled, clipped output + attrs") {
-    val tmp = Files.createTempDirectory("graft_agg").toString
+    val tmp = tempDir("agg")
     // granule B overlaps A's last second (dup) and leaves a 4s gap to its
     // own tail; one record is out of bounds.
     val a = writeGranule(tmp, "g_a",
@@ -175,7 +175,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
 
   test("CLI --generate_template prints a config usable via -t") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tpl").toString
+    val tmp = tempDir("tpl")
     Seq((1L, 2.5, Seq(1.0f, 2.0f)))
       .toDF("time", "val", "arr")
       .write.mode("overwrite").parquet(s"$tmp/sample")
@@ -198,7 +198,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
       StructType(Seq(
         StructField("ob_time", ArrayType(TimestampNTZType)),
         StructField("payload", StringType))))
-    val tmp = Files.createTempDirectory("graft_md").toString
+    val tmp = tempDir("md")
     df.write.parquet(s"$tmp/g")
     val cfg = Config(
       dims = Seq(
@@ -229,7 +229,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
       StructType(Seq(
         StructField("ob_time", ArrayType(TimestampNTZType)),
         StructField("payload", StringType))))
-    val tmp = Files.createTempDirectory("graft_mc").toString
+    val tmp = tempDir("mc")
     df.write.parquet(s"$tmp/g")
     val cfg = Config(
       dims = Seq(
@@ -256,7 +256,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("Cli -u parses multiple cadences onto the index var's dimensions") {
-    val tmp = Files.createTempDirectory("graft_cli_mc").toString
+    val tmp = tempDir("cli_mc")
     val rows = Seq(
       Row(Seq(ldt(base), ldt(base + 500000L)), "a"),
       Row(Seq(ldt(base + 3 * us), ldt(base + 3 * us + 500000L)), "b"))
@@ -291,7 +291,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("Cli reads the source list from stdin when no SRC args are given") {
-    val tmp = Files.createTempDirectory("graft_cli_stdin").toString
+    val tmp = tempDir("cli_stdin")
     val a = writeGranule(tmp, "g_a", Seq(base, base + 1 * us))
     val b = writeGranule(tmp, "g_b", Seq(base + 2 * us, base + 3 * us))
     Cli.run(spark, Array(s"$tmp/out", "-u", "record:time:1"),
@@ -304,7 +304,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
 
   test("Cli -v prints the version; -l sets the log level") {
     assert(Cli.run(spark, Array("-v")) === Map("version" -> Cli.Version))
-    val tmp = Files.createTempDirectory("graft_cli_l").toString
+    val tmp = tempDir("cli_l")
     val a = writeGranule(tmp, "g_a", Seq(base, base + 1 * us))
     Cli.run(spark, Array(s"$tmp/out", a, "-l", "ERROR"))
     assert(spark.read.parquet(s"$tmp/out").count() === 2)
@@ -345,7 +345,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
     // construction, absence instead of mask — so the assertions map to:
     // 9 records in granule order, per-granule array length i+1, total
     // sum 90, and each record's b ids aligned to its c values.
-    val tmp = Files.createTempDirectory("graft_multiunlim").toString
+    val tmp = tempDir("multiunlim")
     val bNames = Seq("a", "b", "c")
     (0 until 3).foreach { i =>
       val rows = (0 until 3).map { r =>
@@ -391,7 +391,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
     // (aggrelist.py:545-566); across parquet granules that requires the
     // union schema (mergeSchema), not one file's footer
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft_hetero").toString
+    val tmp = tempDir("hetero")
     Seq((ldt(base), "a0", 1.5)).toDF("time", "payload", "extra")
       .write.parquet(s"$tmp/g_a")
     Seq((ldt(base + us), "b0")).toDF("time", "payload")
@@ -413,7 +413,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("Cli mirrors the reference command line end-to-end") {
-    val tmp = Files.createTempDirectory("graft_cli").toString
+    val tmp = tempDir("cli")
     val a = writeGranule(tmp, "g_a", Seq(base, base + 1 * us,
       base + 1 * us + 100000L)) // third record is a sub-cadence dup
     val b = writeGranule(tmp, "g_b", Seq(base + 2 * us, base + 86400L * us))
@@ -433,7 +433,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("per-variable attributes ride into the output column metadata") {
-    val tmp = Files.createTempDirectory("graft_varattrs").toString
+    val tmp = tempDir("varattrs")
     val a = writeGranule(tmp, "g_a", Seq(base, base + 1 * us))
     val cfg = config.copy(vars = Seq(
       VarSpec("time", Seq("record"), "timestamp",
@@ -449,7 +449,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("an empty granule contributes nothing and breaks nothing") {
-    val tmp = Files.createTempDirectory("graft_empty").toString
+    val tmp = tempDir("empty")
     val a = writeGranule(tmp, "g_a", Seq(base, base + 1 * us))
     val e = writeGranule(tmp, "g_empty", Seq.empty)
     val attrs = Aggregate.run(spark, Seq(a, e), s"$tmp/out", config,
@@ -460,7 +460,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("runStream ingests arriving granules incrementally with dedup") {
-    val tmp = Files.createTempDirectory("graft_stream_api").toString
+    val tmp = tempDir("stream_api")
     // first granule exists before the stream starts (schema source)
     writeGranule(s"$tmp/in", "g_a",
       Seq(base, base + 1 * us, base + 1 * us + 100000L)) // third is a dup
@@ -490,7 +490,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
     // names) — the reference's product format without a batch
     // finalization pass; re-ingesting the product feed through the V2
     // scan must match the parquet product of the SAME stream bit-level
-    val tmp = Files.createTempDirectory("graft_stream_nc").toString
+    val tmp = tempDir("stream_nc")
     writeGranule(s"$tmp/in", "g_a",
       Seq(base, base + 1 * us, base + 1 * us + 100000L)) // third is a dup
     def drainBoth(qs: Seq[org.apache.spark.sql.streaming.StreamingQuery])
@@ -526,7 +526,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("hierarchical re-aggregation carries provenance through levels") {
-    val tmp = Files.createTempDirectory("graft_two_level").toString
+    val tmp = tempDir("two_level")
     val a = writeGranule(tmp, "g_a", Seq(base, base + 1 * us))
     val b = writeGranule(tmp, "g_b", Seq(base + 3 * us, base + 4 * us))
     // level 1: two runs, each writing a _global_attrs.json sidecar
@@ -546,7 +546,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("runStream resumes from its checkpoint without reprocessing") {
-    val tmp = Files.createTempDirectory("graft_stream_ckpt").toString
+    val tmp = tempDir("stream_ckpt")
     writeGranule(s"$tmp/in", "g_a", Seq(base, base + 1 * us))
     val q1 = Aggregate.runStream(spark, s"$tmp/in/*", s"$tmp/out", config,
       s"$tmp/ckpt", watermark = "0 seconds")

@@ -69,7 +69,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
   // ------------------------------------------------------------- slab reads
 
   test("readSlab == full read sliced, across layouts and windows") {
-    val tmp = Files.createTempDirectory("v2slab").toString
+    val tmp = tempDir("v2slab")
     val p = writeGranule(tmp, "g.nc", n = 250, base = 0.0, chunkRows = 64)
     val h5 = Hdf5Reader.open(p)
     try {
@@ -104,7 +104,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
   }
 
   test("granuleRows range == full rows sliced (null-fill projection)") {
-    val tmp = Files.createTempDirectory("v2rows").toString
+    val tmp = tempDir("v2rows")
     val p = writeGranule(tmp, "g.nc", n = 120, base = 5.0, chunkRows = 50)
     val schema = NetCDFIngest.granuleMeta(p).schema
     val full = NetCDFIngest.granuleRows(p, schema).toSeq
@@ -116,7 +116,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
   // ----------------------------------------------------------- the v2 scan
 
   test("format(netcdf) == ingest rows; union schema null-fills") {
-    val tmp = Files.createTempDirectory("v2read").toString
+    val tmp = tempDir("v2read")
     writeGranule(tmp, "g1.nc", n = 120, base = 0.0, withExtra = true)
     writeGranule(tmp, "g2.nc", n = 80, base = 9.0)
     val df = spark.read.format("netcdf").load(tmp)
@@ -142,7 +142,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
 
   test("column pruning reaches the chunk level: corrupt unprojected " +
       "variable never read") {
-    val tmp = Files.createTempDirectory("v2prune").toString
+    val tmp = tempDir("v2prune")
     val n = 100
     val goodB = java.nio.ByteBuffer.allocate(n * 8)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -194,7 +194,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
 
   test("COUNT(*) pushes to header metadata: answers with EVERY data " +
       "chunk corrupt") {
-    val tmp = Files.createTempDirectory("v2count").toString
+    val tmp = tempDir("v2count")
     val n = 77
     def magicPayload(m: Long): Array[Byte] = {
       val b = java.nio.ByteBuffer.allocate(n * 8)
@@ -242,7 +242,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
 
   test("grouped aggregates push PARTIALLY: per-slice group partials " +
       "merge across splits and granules; unused chunks never read") {
-    val tmp = Files.createTempDirectory("v2pagg").toString
+    val tmp = tempDir("v2pagg")
     val n = 500
     def ints(f: Int => Long): Array[Byte] = {
       val b = java.nio.ByteBuffer.allocate(n * 8)
@@ -338,7 +338,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
 
   test("limit pushdown: a peek query plans only the covering slice " +
       "prefix, never the archive") {
-    val tmp = Files.createTempDirectory("v2limit").toString
+    val tmp = tempDir("v2limit")
     writeGranule(tmp, "g1.nc", n = 400, base = 0.0, chunkRows = 100)
     writeGranule(tmp, "g2.nc", n = 400, base = 400.0, chunkRows = 100)
     val df = spark.read.format("netcdf").option("recdim", "time")
@@ -358,7 +358,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
 
   test("TopN pushdown on the sorted coordinate: the archive-tail query " +
       "opens the tail granule, not the fleet") {
-    val tmp = Files.createTempDirectory("v2topn").toString
+    val tmp = tempDir("v2topn")
     // three disjoint sorted granules: time 0..399, 400..799, 800..1199
     writeGranule(tmp, "g1.nc", n = 400, base = 0.0, chunkRows = 100)
     writeGranule(tmp, "g2.nc", n = 400, base = 400.0, chunkRows = 100)
@@ -387,7 +387,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
   }
 
   test("one granule fans out into chunk-aligned record-range splits") {
-    val tmp = Files.createTempDirectory("v2split").toString
+    val tmp = tempDir("v2split")
     val p = writeGranule(tmp, "g.nc", n = 1000, base = 0.0,
       chunkRows = 100)
     // splitrows=250 aligns DOWN to 200 (2 chunks/split) -> 5 slices
@@ -409,7 +409,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
 
   test("MIN/MAX of the sorted time coordinate push to end-record " +
       "probes: archive coverage without a scan") {
-    val tmp = Files.createTempDirectory("v2minmax").toString
+    val tmp = tempDir("v2minmax")
     // two granules, clean sorted `time`, POISONED `b` in the first
     val n1 = 40
     val timeB = java.nio.ByteBuffer.allocate(n1 * 8)
@@ -459,7 +459,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
 
   test("sortedby range pruning: disjoint granule never opened, " +
       "boundary granule record-clipped") {
-    val tmp = Files.createTempDirectory("v2range").toString
+    val tmp = tempDir("v2range")
     val n1 = 60
     // g1 covers seconds [0, 60): clean sorted `time`, POISONED `b`
     // (uncompressed + fletcher32 so a flipped byte fails loudly IF read)
@@ -509,7 +509,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
     // boundary clipping inside ONE granule: 1000 records, 100/chunk,
     // splitrows=100 -> 10 splits unfiltered; a [450s, 550s) band clips
     // to records [400, 550) on the chunk grid -> exactly 2 splits
-    val tmp2 = Files.createTempDirectory("v2range2").toString
+    val tmp2 = tempDir("v2range2")
     writeGranule(tmp2, "g.nc", n = 1000, base = 0.0, chunkRows = 100)
     def band(sorted: Boolean) = {
       val r = spark.read.format("netcdf").option("splitrows", "100")
@@ -535,7 +535,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
     // corrupt-granule trick: g1's data chunks are poisoned, its sidecar
     // says b in [0, 59.5], and the query's b >= 500000 band must never
     // open it. g2 has NO sidecar (a foreign granule) and is admitted.
-    val tmp = Files.createTempDirectory("v2colstats").toString
+    val tmp = tempDir("v2colstats")
     val n1 = 60
     val timeB = java.nio.ByteBuffer.allocate(n1 * 8)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -578,7 +578,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
     // part 2: the granule-set sink emits a sidecar per granule, and a
     // band on a NON-sorted column plans only the covering granule
     import org.apache.spark.sql.SaveMode
-    val out = Files.createTempDirectory("v2statsink").toString + "/gr"
+    val out = tempDir("v2statsink") + "/gr"
     val df = spark.range(0, 300)
       .withColumn("ts", expr("timestampadd(SECOND, CAST(id AS INT), " +
         "TIMESTAMP_NTZ'2024-01-01 00:00:00')"))
@@ -607,7 +607,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
   }
 
   test("reported statistics scale with the projection") {
-    val tmp = Files.createTempDirectory("v2stats").toString
+    val tmp = tempDir("v2stats")
     val p = writeGranule(tmp, "g.nc", n = 400, base = 0.0)
     def sizeOf(df: org.apache.spark.sql.DataFrame): BigInt =
       df.queryExecution.optimizedPlan.stats.sizeInBytes
@@ -629,9 +629,9 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
   test("readStream.format(netcdf): growing granule feed, " +
       "exactly-once across restarts") {
     import org.apache.spark.sql.streaming.Trigger
-    val tmp = Files.createTempDirectory("v2stream").toString
-    val ckpt = Files.createTempDirectory("v2stream_ckpt").toString
-    val out = Files.createTempDirectory("v2stream_out").toString + "/sink"
+    val tmp = tempDir("v2stream")
+    val ckpt = tempDir("v2stream_ckpt")
+    val out = tempDir("v2stream_out") + "/sink"
     writeGranule(tmp, "g001.nc", n = 50, base = 0.0)
     writeGranule(tmp, "g002.nc", n = 30, base = 100.0)
     def drain(): Unit = {
@@ -661,9 +661,9 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
   test("writeStream.format(netcdf): granule feed IN -> granule product " +
       "OUT, re-ingests and matches the batch pipeline exactly-once") {
     import org.apache.spark.sql.streaming.Trigger
-    val src = Files.createTempDirectory("v2snk_src").toString
-    val ckpt = Files.createTempDirectory("v2snk_ckpt").toString
-    val out = Files.createTempDirectory("v2snk_out").toString + "/product"
+    val src = tempDir("v2snk_src")
+    val ckpt = tempDir("v2snk_ckpt")
+    val out = tempDir("v2snk_out") + "/product"
     writeGranule(src, "g001.nc", n = 50, base = 0.0)
     writeGranule(src, "g002.nc", n = 30, base = 100.0)
     // the pipeline: ingest granules, keep a band, derive a column, EMIT
@@ -717,7 +717,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
       transform(spark.readStream.format("netcdf").load(src))
         .writeStream.format("netcdf").outputMode("update")
         .option("checkpointLocation",
-          Files.createTempDirectory("v2snk_ck2").toString)
+          tempDir("v2snk_ck2"))
         .trigger(Trigger.AvailableNow()).start(out)
     }
   }
@@ -725,7 +725,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
   test("df.write.format(netcdf): granule-set sink round-trips through " +
       "the scan; all four save modes") {
     import org.apache.spark.sql.SaveMode
-    val out = Files.createTempDirectory("v2write").toString + "/granules"
+    val out = tempDir("v2write") + "/granules"
     val df = spark.range(0, 250)
       .withColumn("ts", expr(
         "timestampadd(SECOND, CAST(id AS INT), TIMESTAMP_NTZ'2024-01-01 00:00:00')"))
@@ -779,7 +779,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
       "rolls forward") {
     import org.apache.spark.sql.SaveMode
     import graft.sources.NetCDFWrite
-    val out = Files.createTempDirectory("v2compact").toString + "/store"
+    val out = tempDir("v2compact") + "/store"
     val df = spark.range(0, 300)
       .withColumn("ts", expr("timestampadd(SECOND, CAST(id AS INT), " +
         "TIMESTAMP_NTZ'2024-01-01 00:00:00')"))
@@ -859,7 +859,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
       "floor sizing never emits re-qualifying granules") {
     import org.apache.spark.sql.SaveMode
     import graft.sources.NetCDFWrite
-    val root = Files.createTempDirectory("v2pending")
+    val root = Paths.get(tempDir("v2pending"))
     val out = root.toString + "/store"
     val df = spark.range(0, 300)
       .withColumn("ts", expr("timestampadd(SECOND, CAST(id AS INT), " +
@@ -930,7 +930,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
       "keeps the manifest fresh") {
     import org.apache.spark.sql.SaveMode
     import graft.sources.{NetCDF4, NetCDFWrite}
-    val root = Files.createTempDirectory("v2fleet")
+    val root = Paths.get(tempDir("v2fleet"))
     val out = root.toString + "/store"
     // three granules with DISJOINT v ranges (v tracks id), indexby ts
     val df = spark.range(0, 300)
@@ -1000,7 +1000,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
       "plans O(stat) with ZERO granule opens; re-runs reuse every entry") {
     import org.apache.spark.sql.SaveMode
     import graft.sources.{NetCDF4, NetCDFWrite}
-    val root = Files.createTempDirectory("v2foreign")
+    val root = Paths.get(tempDir("v2foreign"))
     val out = root.toString + "/store"
     val df = spark.range(0, 300)
       .withColumn("ts", expr("timestampadd(SECOND, CAST(id AS INT), " +
@@ -1056,7 +1056,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
       "entry (mtime is part of the key) — stale stats can never prune " +
       "live data") {
     import org.apache.spark.sql.SaveMode
-    val root = Files.createTempDirectory("v2rewrite")
+    val root = Paths.get(tempDir("v2rewrite"))
     val out = root.toString + "/store"
     val df = spark.range(0, 300)
       .withColumn("ts", expr("timestampadd(SECOND, CAST(id AS INT), " +
@@ -1098,7 +1098,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
       "witness alone") {
     import org.apache.spark.sql.SaveMode
     import graft.sources.NetCDFWrite
-    val root = Files.createTempDirectory("v2tick")
+    val root = Paths.get(tempDir("v2tick"))
     val out = root.toString + "/store"
     val df = spark.range(0, 300)
       .withColumn("ts", expr("timestampadd(SECOND, CAST(id AS INT), " +
@@ -1164,7 +1164,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
 
   test("recdim option routes to every granule; mergeschema=false " +
       "reads the first header only") {
-    val tmp = Files.createTempDirectory("v2opts").toString
+    val tmp = tempDir("v2opts")
     writeGranule(tmp, "g1.nc", n = 50, base = 0.0)
     writeGranule(tmp, "g2.nc", n = 30, base = 1.0, withExtra = true)
     val first = spark.read.format("netcdf")
@@ -1187,7 +1187,7 @@ class NetCdfSourceV2Spec extends AnyFunSuite with SparkSpec {
       "backfill fails loudly and never touches the store") {
     import org.apache.spark.sql.SaveMode
     import graft.sources.NetCDFWrite
-    val out = Files.createTempDirectory("v2lock").toString + "/store"
+    val out = tempDir("v2lock") + "/store"
     val df = spark.range(0, 100)
       .withColumn("ts", expr("timestampadd(SECOND, CAST(id AS INT), " +
         "TIMESTAMP_NTZ'2024-01-01 00:00:00')"))

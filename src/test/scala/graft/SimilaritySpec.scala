@@ -16,7 +16,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     * copy of 1, 4 unrelated. */
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_sim").toString
+    val d = tempDir("sim")
     val base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
     Seq(
       (1L, base + "ending one", "en", "web", 1L),
@@ -101,7 +101,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     * one of its two true clusters), ids 16..79 = 8 members per cluster. */
   private lazy val driftDir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_drift").toString
+    val d = tempDir("drift")
     val r = 1.0f / math.sqrt(2.0).toFloat
     val queries = (0L until 8L).map { i =>
       val (a, b) = (i.toInt, ((i + 1) % 8).toInt)
@@ -216,7 +216,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
 
   test("embedding outliers: the far vector ranks first in its label") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_out").toString
+    val d = tempDir("out")
     def near(axis: Int, jitter: Int): Seq[Float] =
       Seq.tabulate(64)(j =>
         (if (j == axis) 1.0f else 0.0f) + 0.001f * ((jitter + j) % 3))
@@ -305,7 +305,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
 
   test("pcaPower converges to the dominant variance axis") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_pca").toString
+    val d = tempDir("pca")
     // 50 vectors spread along axis 2 (both signs), tiny noise elsewhere:
     // the top eigenvector of the uncentered Gram is ±e2
     val vecs = (0L until 50L).map { i =>
@@ -355,7 +355,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val codebook = graft.ml.Embeddings.kmeansFit(emb, k = 16, iters = 2)
       .select(col("cid"), col("cv"))
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_ivfidx").toString
+    val idxDir = tempDir("ivfidx")
     graft.ml.Similarity.writeIndex(emb, codebook, idxDir)
     val index = graft.ml.Similarity.openIndex(spark, idxDir)
     // reopened-index search must equal the in-memory path row for row:
@@ -390,7 +390,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(scans.forall(_.metadata("PushedFilters").contains("In(cid")),
       s"cid probe set must push into the lists scan: " +
         scans.map(_.metadata("PushedFilters")).mkString("; "))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idxDir))
   }
 
   test("ml.Similarity: trained PQ codebooks hold a recall floor; " +
@@ -436,7 +435,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val cbt = graft.ml.Embeddings.pqFit(emb, m = 8, ks = 16, iters = 2)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_pqidx").toString
+    val idxDir = tempDir("pqidx")
     graft.ml.Similarity.writePqIndex(emb, cbt, idxDir)
     val index = graft.ml.Similarity.openPqIndex(spark, idxDir)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -451,7 +450,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val schema = index.codes.schema.fieldNames.toSet
     assert(schema === Set("vec_id", "code", "rnorm"),
       s"codes.parquet must hold only the compressed columns: $schema")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idxDir))
   }
 
   test("persisted IVF-PQ index: reopen == in-memory, pruned + compressed scan") {
@@ -481,7 +479,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val mean = recalls.sum / recalls.length
     assert(mean >= 0.6, f"IVF-PQ mean recall $mean%.2f below floor")
     val idxDir =
-      java.nio.file.Files.createTempDirectory("graft_ivfpqidx").toString
+      tempDir("ivfpqidx")
     graft.ml.Similarity.writeIvfPqIndex(emb, codebook, cbt, idxDir)
     val index = graft.ml.Similarity.openIvfPqIndex(spark, idxDir)
     val persisted = rows(graft.ml.Similarity.ivfPqSearchIndex(
@@ -518,7 +516,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
         scans.map(_.metadata("PushedFilters")).mkString("; "))
     assert(scans.forall(!_.requiredSchema.fieldNames.contains("ccos")),
       "search scans must column-prune the drift-telemetry ccos")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idxDir))
   }
 
   test("containment: exact copies score 1.0 both ways; " +
@@ -575,10 +572,8 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
     // IVF
-    val (ivfA, ivfB) = (tmp("graft_appendA"), tmp("graft_appendB"))
+    val (ivfA, ivfB) = (tempDir("appendA"), tempDir("appendB"))
     graft.ml.Similarity.writeIndex(emb, codebook, ivfA)
     graft.ml.Similarity.writeIndex(first, codebook, ivfB)
     val ivfAppended = graft.ml.Similarity.appendIndex(
@@ -590,7 +585,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
         k = 6, nprobe = 2)),
       "appended IVF index diverged from the one-shot build")
     // PQ
-    val (pqA, pqB) = (tmp("graft_appendPqA"), tmp("graft_appendPqB"))
+    val (pqA, pqB) = (tempDir("appendPqA"), tempDir("appendPqB"))
     graft.ml.Similarity.writePqIndex(emb, cbt, pqA)
     graft.ml.Similarity.writePqIndex(first, cbt, pqB)
     val pqAppended = graft.ml.Similarity.appendPqIndex(
@@ -602,7 +597,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       "appended PQ index diverged from the one-shot build")
     // IVF-PQ, residual flavor: append must pick the flavor up from
     // meta.json, not from a caller argument
-    val (ipA, ipB) = (tmp("graft_appendIpA"), tmp("graft_appendIpB"))
+    val (ipA, ipB) = (tempDir("appendIpA"), tempDir("appendIpB"))
     graft.ml.Similarity.writeIvfPqIndex(emb, codebook, cbt, ipA,
       residual = true)
     graft.ml.Similarity.writeIvfPqIndex(first, codebook, cbt, ipB,
@@ -616,8 +611,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
         graft.ml.Similarity.openIvfPqIndex(spark, ipA), queries,
         k = 6, nprobe = 2)),
       "appended IVF-PQ index diverged from the one-shot build")
-    Seq(ivfA, ivfB, pqA, pqB, ipA, ipB).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
   test("index delete: search == rebuild-without-deleted for all three " +
@@ -641,12 +634,10 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sortBy(t => (t._1, t._2)).toSeq
-    def tmp(p: String) =
-      java.nio.file.Files.createTempDirectory(p).toString
 
     // ---- IVF (also exercises drift telemetry + retrain interplay)
     val (dLive, dRef, dRef2) =
-      (tmp("graft_delA"), tmp("graft_delB"), tmp("graft_delC"))
+      (tempDir("delA"), tempDir("delB"), tempDir("delC"))
     writeIndex(emb, codebook, dLive)
     writeIndex(kept, codebook, dRef)
     val before = rows(ivfSearchIndex(openIndex(spark, dLive), queries,
@@ -689,7 +680,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(!pendingDeletes(spark, dLive), "retrain clears tombstones")
 
     // ---- PQ
-    val (pLive, pRef) = (tmp("graft_delPqA"), tmp("graft_delPqB"))
+    val (pLive, pRef) = (tempDir("delPqA"), tempDir("delPqB"))
     writePqIndex(emb, cbt, pLive)
     writePqIndex(kept, cbt, pRef)
     val pqDeleted = deletePqIndex(openPqIndex(spark, pLive), delIds)
@@ -705,7 +696,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(rows(pqSearchIndex(pqCompacted, queries, k = 6)) === pqAfter)
 
     // ---- IVF-PQ (residual: the stored flavor must survive the cycle)
-    val (iLive, iRef) = (tmp("graft_delIpA"), tmp("graft_delIpB"))
+    val (iLive, iRef) = (tempDir("delIpA"), tempDir("delIpB"))
     writeIvfPqIndex(emb, codebook, cbt, iLive, residual = true)
     writeIvfPqIndex(kept, codebook, cbt, iRef, residual = true)
     val ipDeleted = deleteIvfPqIndex(openIvfPqIndex(spark, iLive), delIds)
@@ -723,8 +714,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(rows(ivfPqSearchIndex(ipCompacted, queries, k = 6, nprobe = 2))
       === ipAfter)
 
-    Seq(dLive, dRef, dRef2, pLive, pRef, iLive, iRef).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
   test("dedup purge composition: near-dup verdicts drive index deletes; " +
@@ -741,7 +730,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val queries = emb.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val idxDir =
-      java.nio.file.Files.createTempDirectory("graft_purge").toString
+      tempDir("purge")
     writeIndex(emb, codebook, idxDir)
     // the dedup verdict: losers = vectors owned by an earlier near-dup
     // (the stream_vec_dedup banded transform, batch-rendered)
@@ -767,8 +756,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       s"${storeDataDir(spark, idxDir)}/lists.parquet").count() ===
       emb.count() - nLosers,
       "compaction must leave exactly the keepers on disk")
-    org.apache.commons.io.FileUtils.deleteDirectory(
-      new java.io.File(idxDir))
   }
 
   test("residual IVF-PQ: recall holds vs plain encoding; " +
@@ -806,7 +793,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     // persisted: the flavor is part of the index — a reopened residual
     // index must score with the residual decomposition automatically
     val idxDir =
-      java.nio.file.Files.createTempDirectory("graft_ivfpqres").toString
+      tempDir("ivfpqres")
     graft.ml.Similarity.writeIvfPqIndex(emb, codebook, cbt, idxDir,
       residual = true)
     val index = graft.ml.Similarity.openIvfPqIndex(spark, idxDir)
@@ -815,7 +802,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       index, queries, k = 6, nprobe = 2))
     assert(persisted.toSeq === res.toSeq,
       "persisted residual index must reproduce the in-memory results")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idxDir))
   }
 
   test("pagerankFit: iters=3 == the emb_pagerank query bit-for-bit; " +
@@ -904,7 +890,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     * corpus-scaled quantizer derives, so each axis becomes one cluster. */
   private def scaledCorpus(n: Int): String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory(s"graft_scaled$n").toString
+    val d = tempDir(s"scaled$n")
     val k = math.max(16, n / 50)
     val dims = math.max(64, k)
     (0L until n.toLong).map { i =>
@@ -937,7 +923,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
 
   test("emb_outliers auto-rescales on a big label and keeps the rank order") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_biglabel").toString
+    val d = tempDir("biglabel")
     val n = 30000
     // one hot label of 30k near-origin vectors + 5 planted outliers whose
     // offsets grow with id: max|x| ~ 3.5 makes nm = 30005 * 4 > 18000, so
@@ -984,98 +970,93 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val codebook = graft.ml.Embeddings.kmeansFit(emb, k = 8, iters = 3)
       .select(col("cid"), col("cv"))
-    val idir = java.nio.file.Files.createTempDirectory("graft_rt").toString
-    val fdir = java.nio.file.Files.createTempDirectory("graft_rtref").toString
-    try {
-      graft.ml.Similarity.writeIndex(emb, codebook, idir)
-      var idx = graft.ml.Similarity.openIndex(spark, idir)
-      // a 5x shifted population built to DEGRADE recall under the
-      // frozen codebook: 8 types of noisy THREE-axis mixtures, so each
-      // type's members scatter across three frozen axis lists (the
-      // per-vector noise decides which of the three equidistant
-      // centroids wins) — nprobe=2 then structurally misses ~1/3 of a
-      // query's true neighbors until retraining gives each mixture type
-      // its own centroid
-      val shifted = (0L until 400L).map { i =>
-        val t = (i % 8).toInt
-        val axes = Set(t, (t + 3) % 8, (t + 5) % 8)
-        val v = Array.tabulate(64)(j =>
-          (if (axes(j)) 0.577f else 0.0f) +
-            0.05f * (((i * 31 + j * 7) % 11) - 5))
-        (1000000L + i, v.toSeq)
-      }.toDF("vec_id", "embedding")
-        .withColumn("embedding", col("embedding").cast("array<float>"))
-      idx = graft.ml.Similarity.appendIndex(idx, shifted)
-      val stale = graft.ml.Similarity.driftStats(spark, idir)
-      assert(stale.drift > 0.05, f"fixture did not drift: ${stale.drift}%.4f")
-      // shifted-region queries: 8 of the mixture vectors themselves
-      val queries = shifted.filter(col("vec_id") < 1000008L)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      def cosd(a: Array[Float], b: Array[Float]): Double = {
-        var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-        while (i < a.length) {
-          d += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
-          nb += b(i).toDouble * b(i); i += 1
-        }
-        d / math.sqrt(na * nb)
+    val idir = tempDir("rt")
+    val fdir = tempDir("rtref")
+    graft.ml.Similarity.writeIndex(emb, codebook, idir)
+    var idx = graft.ml.Similarity.openIndex(spark, idir)
+    // a 5x shifted population built to DEGRADE recall under the
+    // frozen codebook: 8 types of noisy THREE-axis mixtures, so each
+    // type's members scatter across three frozen axis lists (the
+    // per-vector noise decides which of the three equidistant
+    // centroids wins) — nprobe=2 then structurally misses ~1/3 of a
+    // query's true neighbors until retraining gives each mixture type
+    // its own centroid
+    val shifted = (0L until 400L).map { i =>
+      val t = (i % 8).toInt
+      val axes = Set(t, (t + 3) % 8, (t + 5) % 8)
+      val v = Array.tabulate(64)(j =>
+        (if (axes(j)) 0.577f else 0.0f) +
+          0.05f * (((i * 31 + j * 7) % 11) - 5))
+      (1000000L + i, v.toSeq)
+    }.toDF("vec_id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+    idx = graft.ml.Similarity.appendIndex(idx, shifted)
+    val stale = graft.ml.Similarity.driftStats(spark, idir)
+    assert(stale.drift > 0.05, f"fixture did not drift: ${stale.drift}%.4f")
+    // shifted-region queries: 8 of the mixture vectors themselves
+    val queries = shifted.filter(col("vec_id") < 1000008L)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    def cosd(a: Array[Float], b: Array[Float]): Double = {
+      var d = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < a.length) {
+        d += a(i).toDouble * b(i); na += a(i).toDouble * a(i)
+        nb += b(i).toDouble * b(i); i += 1
       }
-      def recallOf(ix: graft.ml.Similarity.IvfIndex): Double = {
-        val approx = graft.ml.Similarity
-          .ivfSearchIndex(ix, queries, k = 10, nprobe = 2)
-          .collect().map(r => (r.getLong(0), r.getLong(2)))
-          .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
-        val all = ix.lists.select("vec_id", "embedding").collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-        val qs = queries.collect()
-          .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-        val rs = qs.map { case (q, qv) =>
-          val exact = all.filter(_._1 != q)
-            .map { case (id, v) => (id, cosd(qv, v)) }
-            .sortBy(t => (-t._2, t._1)).take(10).map(_._1).toSet
-          (approx.getOrElse(q, Set.empty) - q & exact).size / 10.0
-        }
-        rs.sum / rs.length
-      }
-      val recallStale = recallOf(idx)
-      // REPAIR: refit from the stored corpus, in place
-      idx = graft.ml.Similarity.retrainIndex(idx, iters = 3)
-      val repaired = graft.ml.Similarity.driftStats(spark, idir)
-      assert(repaired.appendedN === 0L && repaired.drift === 0.0,
-        "retrain must reset drift telemetry to the new build")
-      assert(repaired.builtN === 480L)
-      // the refit codebook describes the corpus strictly better than
-      // the frozen one did (combined mean assignment cosine)
-      val staleCombined =
-        (stale.builtMeanCos * stale.builtN +
-          stale.appendedMeanCos * stale.appendedN) /
-          (stale.builtN + stale.appendedN)
-      assert(repaired.builtMeanCos > staleCombined + 0.01,
-        f"refit codebook no better: ${repaired.builtMeanCos}%.4f vs " +
-          f"stale ${staleCombined}%.4f")
-      val recallNew = recallOf(idx)
-      info(f"shifted-region recall@10: stale $recallStale%.2f -> " +
-        f"retrained $recallNew%.2f (drift ${stale.drift}%.4f -> 0)")
-      assert(recallNew >= recallStale + 0.1,
-        f"retrain must RECOVER the degraded shifted-region recall " +
-          f"($recallStale%.2f -> $recallNew%.2f)")
-      assert(recallNew >= 0.9,
-        f"retrained recall $recallNew%.2f below the build-time floor")
-      // retrain IS a rebuild: result parity with a from-scratch index
-      // over the same corpus (the fit/assign rules are deterministic)
-      val union = emb.unionByName(shifted)
-      val cb2 = graft.ml.Embeddings.kmeansFit(union, k = 8, iters = 3)
-        .select(col("cid"), col("cv"))
-      graft.ml.Similarity.writeIndex(union, cb2, fdir)
-      val freshIdx = graft.ml.Similarity.openIndex(spark, fdir)
-      val a = graft.ml.Similarity.ivfSearchIndex(idx, queries, 10, 2)
-        .collect().map(_.toSeq).toSet
-      val b = graft.ml.Similarity.ivfSearchIndex(freshIdx, queries, 10, 2)
-        .collect().map(_.toSeq).toSet
-      assert(a === b, "retrain must equal a from-scratch rebuild")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idir))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(fdir))
+      d / math.sqrt(na * nb)
     }
+    def recallOf(ix: graft.ml.Similarity.IvfIndex): Double = {
+      val approx = graft.ml.Similarity
+        .ivfSearchIndex(ix, queries, k = 10, nprobe = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(2)))
+        .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
+      val all = ix.lists.select("vec_id", "embedding").collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      val qs = queries.collect()
+        .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+      val rs = qs.map { case (q, qv) =>
+        val exact = all.filter(_._1 != q)
+          .map { case (id, v) => (id, cosd(qv, v)) }
+          .sortBy(t => (-t._2, t._1)).take(10).map(_._1).toSet
+        (approx.getOrElse(q, Set.empty) - q & exact).size / 10.0
+      }
+      rs.sum / rs.length
+    }
+    val recallStale = recallOf(idx)
+    // REPAIR: refit from the stored corpus, in place
+    idx = graft.ml.Similarity.retrainIndex(idx, iters = 3)
+    val repaired = graft.ml.Similarity.driftStats(spark, idir)
+    assert(repaired.appendedN === 0L && repaired.drift === 0.0,
+      "retrain must reset drift telemetry to the new build")
+    assert(repaired.builtN === 480L)
+    // the refit codebook describes the corpus strictly better than
+    // the frozen one did (combined mean assignment cosine)
+    val staleCombined =
+      (stale.builtMeanCos * stale.builtN +
+        stale.appendedMeanCos * stale.appendedN) /
+        (stale.builtN + stale.appendedN)
+    assert(repaired.builtMeanCos > staleCombined + 0.01,
+      f"refit codebook no better: ${repaired.builtMeanCos}%.4f vs " +
+        f"stale ${staleCombined}%.4f")
+    val recallNew = recallOf(idx)
+    info(f"shifted-region recall@10: stale $recallStale%.2f -> " +
+      f"retrained $recallNew%.2f (drift ${stale.drift}%.4f -> 0)")
+    assert(recallNew >= recallStale + 0.1,
+      f"retrain must RECOVER the degraded shifted-region recall " +
+        f"($recallStale%.2f -> $recallNew%.2f)")
+    assert(recallNew >= 0.9,
+      f"retrained recall $recallNew%.2f below the build-time floor")
+    // retrain IS a rebuild: result parity with a from-scratch index
+    // over the same corpus (the fit/assign rules are deterministic)
+    val union = emb.unionByName(shifted)
+    val cb2 = graft.ml.Embeddings.kmeansFit(union, k = 8, iters = 3)
+      .select(col("cid"), col("cv"))
+    graft.ml.Similarity.writeIndex(union, cb2, fdir)
+    val freshIdx = graft.ml.Similarity.openIndex(spark, fdir)
+    val a = graft.ml.Similarity.ivfSearchIndex(idx, queries, 10, 2)
+      .collect().map(_.toSeq).toSet
+    val b = graft.ml.Similarity.ivfSearchIndex(freshIdx, queries, 10, 2)
+      .collect().map(_.toSeq).toSet
+    assert(a === b, "retrain must equal a from-scratch rebuild")
   }
 
   test("retrainIvfPqIndex refits both codebooks, keeps the residual " +
@@ -1086,46 +1067,41 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val cb0 = graft.ml.Embeddings.kmeansFit(emb, k = 8, iters = 2)
       .select(col("cid"), col("cv"))
     val pq0 = graft.ml.Embeddings.pqFit(emb, m = 8, ks = 16, iters = 1)
-    val idir = java.nio.file.Files.createTempDirectory("graft_rtpq").toString
-    val fdir = java.nio.file.Files.createTempDirectory("graft_rtpqf").toString
-    try {
-      graft.ml.Similarity.writeIvfPqIndex(emb, cb0, pq0, idir,
-        residual = true)
-      var idx = graft.ml.Similarity.openIvfPqIndex(spark, idir)
-      val shifted = (0L until 80L).map { i =>
-        val (a, b) = ((i % 8).toInt, ((i + 3) % 8).toInt)
-        val v = Array.tabulate(64)(j =>
-          if (j == a || j == b) 0.7071f else 0.0f)
-        (1000000L + i, v.toSeq)
-      }.toDF("vec_id", "embedding")
-        .withColumn("embedding", col("embedding").cast("array<float>"))
-      idx = graft.ml.Similarity.appendIvfPqIndex(idx, shifted)
-      assert(graft.ml.Similarity.driftStats(spark, idir).drift > 0.02)
-      // the codes are lossy, so the raw corpus comes from the caller
-      val union = emb.unionByName(shifted)
-      idx = graft.ml.Similarity.retrainIvfPqIndex(idx, union, iters = 2)
-      assert(idx.residual, "retrain must preserve the residual flavor")
-      val repaired = graft.ml.Similarity.driftStats(spark, idir)
-      assert(repaired.appendedN === 0L && repaired.drift === 0.0)
-      assert(repaired.builtN === 160L)
-      // parity with a from-scratch residual build on the same corpus
-      val cb2 = graft.ml.Embeddings.kmeansFit(union, k = 8, iters = 2)
-        .select(col("cid"), col("cv"))
-      val pq2 = graft.ml.Embeddings.pqFit(union, m = 8, ks = 16, iters = 2)
-      graft.ml.Similarity.writeIvfPqIndex(union, cb2, pq2, fdir,
-        residual = true)
-      val freshIdx = graft.ml.Similarity.openIvfPqIndex(spark, fdir)
-      val queries = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-      val a = graft.ml.Similarity.ivfPqSearchIndex(idx, queries, 5, 2)
-        .collect().map(_.toSeq).toSet
-      val b = graft.ml.Similarity.ivfPqSearchIndex(freshIdx, queries, 5, 2)
-        .collect().map(_.toSeq).toSet
-      assert(a === b, "retrain must equal a from-scratch rebuild")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idir))
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(fdir))
-    }
+    val idir = tempDir("rtpq")
+    val fdir = tempDir("rtpqf")
+    graft.ml.Similarity.writeIvfPqIndex(emb, cb0, pq0, idir,
+      residual = true)
+    var idx = graft.ml.Similarity.openIvfPqIndex(spark, idir)
+    val shifted = (0L until 80L).map { i =>
+      val (a, b) = ((i % 8).toInt, ((i + 3) % 8).toInt)
+      val v = Array.tabulate(64)(j =>
+        if (j == a || j == b) 0.7071f else 0.0f)
+      (1000000L + i, v.toSeq)
+    }.toDF("vec_id", "embedding")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+    idx = graft.ml.Similarity.appendIvfPqIndex(idx, shifted)
+    assert(graft.ml.Similarity.driftStats(spark, idir).drift > 0.02)
+    // the codes are lossy, so the raw corpus comes from the caller
+    val union = emb.unionByName(shifted)
+    idx = graft.ml.Similarity.retrainIvfPqIndex(idx, union, iters = 2)
+    assert(idx.residual, "retrain must preserve the residual flavor")
+    val repaired = graft.ml.Similarity.driftStats(spark, idir)
+    assert(repaired.appendedN === 0L && repaired.drift === 0.0)
+    assert(repaired.builtN === 160L)
+    // parity with a from-scratch residual build on the same corpus
+    val cb2 = graft.ml.Embeddings.kmeansFit(union, k = 8, iters = 2)
+      .select(col("cid"), col("cv"))
+    val pq2 = graft.ml.Embeddings.pqFit(union, m = 8, ks = 16, iters = 2)
+    graft.ml.Similarity.writeIvfPqIndex(union, cb2, pq2, fdir,
+      residual = true)
+    val freshIdx = graft.ml.Similarity.openIvfPqIndex(spark, fdir)
+    val queries = emb.filter(col("vec_id") < 8)
+      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+    val a = graft.ml.Similarity.ivfPqSearchIndex(idx, queries, 5, 2)
+      .collect().map(_.toSeq).toSet
+    val b = graft.ml.Similarity.ivfPqSearchIndex(freshIdx, queries, 5, 2)
+      .collect().map(_.toSeq).toSet
+    assert(a === b, "retrain must equal a from-scratch rebuild")
   }
 
   test("index drift telemetry: stable appends stay flat, a shifted batch " +
@@ -1135,8 +1111,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val codebook = graft.ml.Embeddings.kmeansFit(emb, k = 8, iters = 3)
       .select(col("cid"), col("cv"))
-    val idir = java.nio.file.Files.createTempDirectory("graft_drifttel")
-      .toString
+    val idir = tempDir("drifttel")
     graft.ml.Similarity.writeIndex(emb, codebook, idir)
     val s0 = graft.ml.Similarity.driftStats(spark, idir)
     assert(s0.builtN === 80L && s0.appendedN === 0L && s0.drift === 0.0)
@@ -1204,7 +1179,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(sShift.drift > sStable.drift + 0.05,
       f"shifted batch did not move drift: ${sShift.drift}%.4f vs " +
         f"stable ${sStable.drift}%.4f")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(idir))
   }
 
   test("text index: indexed BM25 == the t_bm25 operator's rows; " +
@@ -1214,8 +1188,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_textidx").toString
+    val root = tempDir("textidx")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     // 1. build on the full corpus: indexed search must be row-identical
@@ -1245,7 +1218,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("In(t"),
       s"the term filter must push into the postings scan:\n$plan")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
   test("text index delete/compact: tombstoned search == rebuild on the " +
@@ -1255,8 +1227,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_textdel").toString
+    val root = tempDir("textdel")
     val terms = graft.queries.PipelineQueries.bm25Terms
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -1294,7 +1265,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     val st = idx3.stats.collect()
     assert(st.length === 1 &&
       st.head.getLong(0) === idx3.docstats.count())
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
   test("text index crash contracts: any tombstone prefix is a valid " +
@@ -1305,8 +1275,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_textcrash").toString
+    val root = tempDir("textcrash")
     val terms = graft.queries.PipelineQueries.bm25Terms
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -1361,7 +1330,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(newDataDir !== dataDir, "compaction flips the generation")
     assert(!new java.io.File(dataDir).exists,
       "the old generation (with the crashed-append cruft) is reclaimed")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
   test("compaction is openable at every instant: text and IVF stores " +
@@ -1369,8 +1337,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     import graft.ml.Similarity
     val sfDir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_genprobe").toString
+    val root = tempDir("genprobe")
     // ---- text store
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -1416,7 +1383,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(vrows(s"$root/ivf") === vExpected)
     assert(!Similarity.pendingDeletes(spark, s"$root/ivf"),
       "the tombstone drop rides the generation flip")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
   test("single-writer lock: a second writer fails loudly and never " +
@@ -1426,8 +1392,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_lock").toString
+    val root = tempDir("lock")
     val terms = graft.queries.PipelineQueries.bm25Terms
     def search() = Similarity.textSearchIndex(
       Similarity.openTextIndex(spark, s"$root/text"), terms, 10)
@@ -1464,7 +1429,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       Similarity.openTextIndex(spark, s"$root/ref"), terms, 10)
       .collect().map(_.toString).toSeq)
     assert(!lock.exists, "the lock releases when the op completes")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
   test("vector append batches are all-or-nothing: an uncommitted batch " +
@@ -1476,8 +1440,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
     val codebook = graft.ml.Embeddings.kmeansFit(emb, k = 8, iters = 2)
       .select(col("cid"), col("cv"))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_vecbatch").toString
+    val root = tempDir("vecbatch")
     def rows(d: String) = Similarity.ivfSearchIndex(
       Similarity.openIndex(spark, d), queries, k = 4, nprobe = 2)
       .collect().map(_.toString).sorted.toSeq
@@ -1511,7 +1474,6 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assert(!new java.io.File(newDataDir).listFiles()
       .exists(_.getName.startsWith("batch-")),
       "no batch dirs survive consolidation")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
   test("streaming text-index ingest: stream-built == batch-built; a " +
@@ -1523,8 +1485,7 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     assume(new java.io.File(s"$sfDir/documents.parquet").exists)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_textstream").toString
+    val root = tempDir("textstream")
     val terms = graft.queries.PipelineQueries.bm25Terms
     def search(d: String) = Similarity.textSearchIndex(
       Similarity.openTextIndex(spark, d), terms, 10)
@@ -1566,6 +1527,5 @@ class SimilaritySpec extends AnyFunSuite with SparkSpec {
     Similarity.appendTextIndexStreamBatch(b2df, s"$root/replay", 1L)
     assert(search(s"$root/replay") === expected,
       "a replayed micro-batch must be idempotent")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 }

@@ -1,19 +1,26 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one per suite, lazily created). */
-trait SparkSpec { self: AnyFunSuite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.timestampType", "TIMESTAMP_NTZ")
-    .config("spark.ui.enabled", "false")
-    // engine default (mirrors the Bench/Verify mains): bounded
-    // TypedImperativeAggregate folds hold ~n groups in the partial map
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      "4000000")
-    .getOrCreate()
+import graft.queries.SessionScoped
+
+/** Shared local SparkSession for specs (one per suite, lazily created),
+  * plus temp directories that are deleted when the suite ends. */
+trait SparkSpec extends BeforeAndAfterAll { self: AnyFunSuite =>
+  lazy val spark: SparkSession = GraftSession("local[4]")
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+  /** A fresh `graft_<prefix>*` temp directory, deleted in `afterAll`. */
+  def tempDir(prefix: String): String = {
+    val d = SessionScoped.tempDir(prefix)
+    tempDirs.add(d)
+    d
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.forEach(d => SessionScoped.deleteDir(d))
+    finally super.afterAll()
 }

@@ -47,4 +47,21 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
       org.apache.commons.io.FileUtils.deleteDirectory(dir)
     }
   }
+
+  test("Tables.load memoizes in SessionScoped; evict re-lists the files") {
+    import graft.queries.SessionScoped
+    val dir = tempDir("tables-memo")
+    def rows(): Seq[Long] =
+      Tables.load(spark, dir, "t").as[Long](
+        org.apache.spark.sql.Encoders.scalaLong).collect().toSeq.sorted
+    spark.range(3).write.parquet(s"$dir/t.parquet")
+    assert(rows() === Seq(0L, 1L, 2L))
+    spark.range(3, 5).write.mode("append").parquet(s"$dir/t.parquet")
+    assert(rows() === Seq(0L, 1L, 2L), "a memo hit keeps the first listing")
+    assert(SessionScoped.count(spark, dir, _.startsWith("table:")) === 1)
+    SessionScoped.evict(spark, dir)
+    assert(SessionScoped.count(spark, dir, _.startsWith("table:")) === 0)
+    assert(rows() === Seq(0L, 1L, 2L, 3L, 4L), "evict must re-list the files")
+    SessionScoped.evict(spark, dir)
+  }
 }
