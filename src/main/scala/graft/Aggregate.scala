@@ -19,7 +19,8 @@ import graft.sources.ParquetGranuleSink
   * granule set is a multi-path parquet scan (partition-parallel at any
   * scale), the regularization is [[TSA]]'s chunk-partitioned pipeline, and
   * the output is a range-partitioned chunk-size-controlled parquet granule
-  * set plus a `_global_attrs.json` sidecar.
+  * set plus a `_global_attrs.json` sidecar ([[Aggregated.writeParquet]]),
+  * or a NetCDF product the frame goes straight into.
   */
 object Aggregate {
 
@@ -176,14 +177,37 @@ object Aggregate {
     }: _*)
   }
 
-  /** Aggregate `srcs` (parquet granule paths/globs) into `dst`.
+  /** What [[run]] built for `dst`: the regularized frame, lazy (no job
+    * has run its pipeline yet), the column it is ordered by, and the
+    * finalized global attributes. A caller writes it once, with
+    * [[writeParquet]] or a NetCDF writer, so the pipeline runs inside
+    * that write. */
+  final case class Aggregated(frame: DataFrame, sortCol: String,
+      attrs: Map[String, String], dst: String) {
+
+    /** Write the frame to `dst` as a range-partitioned, chunk-size-
+      * controlled parquet granule set plus its `_global_attrs.json`
+      * sidecar; returns the attributes. */
+    def writeParquet(maxRecordsPerFile: Int = 1 << 20): Map[String, String] = {
+      ParquetGranuleSink.write(frame, dst, sortCol, maxRecordsPerFile)
+      val json = attrs.map { case (k, v) =>
+        "\"" + escape(k) + "\": \"" + escape(v) + "\""
+      }.mkString("{", ", ", "}")
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(dst, "_global_attrs.json"), json)
+      attrs
+    }
+  }
+
+  /** Aggregate `srcs` (parquet granule paths/globs) for `dst`: build the
+    * regularized frame and the global attributes once (`dst` names the
+    * output in the provenance attributes; nothing is written here).
     *
     * @param granuleAttrs per-granule global attributes (the analog of
     *                     NetCDF per-file attrs; parquet has no portable
     *                     equivalent, so they arrive as a sidecar map keyed
     *                     by granule path — pass Map.empty to only use
     *                     provenance strategies)
-    * @return the finalized global attributes
     */
   def run(
       spark: SparkSession,
@@ -191,8 +215,7 @@ object Aggregate {
       dst: String,
       config: AggConfig.Config,
       granuleAttrs: Map[String, Map[String, String]] = Map.empty,
-      maxRecordsPerFile: Int = 1 << 20,
-      now: () => Instant = () => Instant.now()): Map[String, String] = {
+      now: () => Instant = () => Instant.now()): Aggregated = {
 
     require(srcs.nonEmpty, "no input granules")
     val sorted = srcs.sorted // reference aggregator.py:65 sorted(files)
@@ -233,8 +256,6 @@ object Aggregate {
         // no indexed unlimited dim: plain concatenation in granule order
         (data.withColumn("is_fill", lit(false)), data.columns.head)
     }
-    ParquetGranuleSink.write(applyVarMetadata(out, config), dst, sortCol,
-      maxRecordsPerFile)
 
     // Hierarchical re-aggregation (the reference's daily -> monthly
     // workflow): a granule that is itself a previous run's output carries
@@ -251,12 +272,7 @@ object Aggregate {
           case (Some(lo), Some(hi)) => Some((lo, hi)); case _ => None
         }),
       now)
-    val json = attrs.map { case (k, v) =>
-      "\"" + escape(k) + "\": \"" + escape(v) + "\""
-    }.mkString("{", ", ", "}")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(dst, "_global_attrs.json"), json)
-    attrs
+    Aggregated(applyVarMetadata(out, config), sortCol, attrs, dst)
   }
 
   /** Continuous variant of [[run]]: watch a granule directory and maintain

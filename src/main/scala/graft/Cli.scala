@@ -17,9 +17,12 @@ import graft.core.{AggConfig, Bounds}
   * `.nc` sources are ingested first via [[graft.sources.NetCDFIngest]]
   * (so the reference's own `ncagg out.nc *.nc -u ...` invocation carries
   * over verbatim), and the default config comes from the NetCDF header.
-  * A `.ncd` DST writes a DISTRIBUTED `.nc` granule-set directory
-  * (executor-side, one file per range partition) instead of one
-  * driver-assembled file — the corpus-scale output path.
+  * A `.nc` DST writes one NetCDF product file: the aggregated frame goes
+  * straight into [[graft.sources.NetCDFWrite.write]], no intermediate
+  * parquet. A `.ncd` DST writes a DISTRIBUTED `.nc` granule-set
+  * directory from the same frame (executor-side, one file per range
+  * partition) instead of one driver-assembled file — the corpus-scale
+  * output path. Any other DST is a parquet granule set.
   * `-b` accepts `min:max` (epoch micros) or `TYYYY[MM[DD[HH[MM]]]]`
   * bound specs with inferred end. With no `-t`, a default config is
   * derived from the first granule (reference Config.from_nc). With no
@@ -90,7 +93,7 @@ object Cli {
     require(srcs.nonEmpty, "No files provided as argument or via stdin.")
 
     // `.nc` sources run the reference's own input path: ingest the NetCDF
-    // granules to parquet first (one decode task per granule), then
+    // granules to parquet first (slot-sized decode tasks), then
     // aggregate the converted granule dirs — `ncagg out.nc *.nc -u ...`
     // becomes `graft.Cli out *.nc -u ...` verbatim
     val ncSrcs = srcs.count(_.endsWith(".nc"))
@@ -146,32 +149,29 @@ object Cli {
     val maxRecords = chunkSize.getOrElse(1 << 20)
 
     // a `.nc` DST produces an actual NetCDF output file (the reference's
-    // product, aggregator.py:239-359) via the pure-JVM writer: aggregate
-    // into a work directory, then write the finished frame as one .nc;
-    // `-c udim:chunksize` becomes the file's real HDF5 chunk extent
-    // (reference cli.py:207-218 → aggregator.py:391-398). A `.ncd` DST is
-    // the DISTRIBUTED twin: a directory of `.nc` granules written
-    // executor-side (NetCDFWrite.writeGranules) — the path a corpus-sized
-    // output must take, since one .nc file is single-writer by
-    // construction (the single-file path refuses above its row gate,
-    // naming this one)
-    val ncOut = dst.endsWith(".nc")
-    val ncdOut = dst.endsWith(".ncd")
-    val aggDst = if (ncOut || ncdOut) s"$dst.__work" else dst
-    val attrs = Aggregate.run(spark, granules, aggDst, config,
-      maxRecordsPerFile = maxRecords)
-    if (ncOut)
-      graft.sources.NetCDFWrite.write(spark, aggDst, dst, config,
-        Some(attrs),
-        graft.sources.NetCDFWrite.NcOpts(chunkRows = chunkSize))
-    else if (ncdOut)
-      graft.sources.NetCDFWrite.writeGranules(
-        spark.read.parquet(aggDst), dst, config, attrs,
-        maxRecordsPerFile = maxRecords,
-        opts = graft.sources.NetCDFWrite.NcOpts(chunkRows = chunkSize))
-    attrs.foreach { case (k, v) => println(s"$k = $v") }
+    // product, aggregator.py:239-359) via the pure-JVM writer: the
+    // aggregated frame goes straight into the writer, so the pipeline
+    // runs once, inside the write; `-c udim:chunksize` becomes the file's
+    // real HDF5 chunk extent (reference cli.py:207-218 →
+    // aggregator.py:391-398). A `.ncd` DST is the DISTRIBUTED twin: a
+    // directory of `.nc` granules written executor-side
+    // (NetCDFWrite.writeGranules) — the path a corpus-sized output must
+    // take, since one .nc file is single-writer by construction (above
+    // its row gate the single-file write streams in bounded memory
+    // instead, but stays one writer). Any other DST is a parquet granule
+    // set plus its attribute sidecar
+    val agg = Aggregate.run(spark, granules, dst, config)
+    val ncOpts = graft.sources.NetCDFWrite.NcOpts(chunkRows = chunkSize)
+    if (dst.endsWith(".nc"))
+      graft.sources.NetCDFWrite.write(agg.frame, dst, config, agg.attrs,
+        ncOpts)
+    else if (dst.endsWith(".ncd"))
+      graft.sources.NetCDFWrite.writeGranules(agg.frame, dst, config,
+        agg.attrs, maxRecordsPerFile = maxRecords, opts = ncOpts)
+    else agg.writeParquet(maxRecords)
+    agg.attrs.foreach { case (k, v) => println(s"$k = $v") }
     println(s"Finished: $dst")
-    attrs
+    agg.attrs
   }
 
   private def parseArgs(args: List[String],

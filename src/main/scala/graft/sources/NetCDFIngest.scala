@@ -18,8 +18,13 @@ import org.apache.spark.sql.types._
   * ("<unit> since <instant>") become TIMESTAMP_NTZ; `_FillValue` matches
   * become SQL nulls.
   *
-  * Scale shape: two distributed passes, both one task per granule file
-  * (the pure-JVM [[Hdf5Reader]] needs no native lib). Pass 1 parses each
+  * Scale shape: two distributed passes (the pure-JVM [[Hdf5Reader]]
+  * needs no native lib), each over contiguous slices of granule files
+  * packed by file size the way Spark packs a file scan's splits
+  * ([[packSlices]]): a feed of small granules runs one task per slot, so
+  * task overhead is paid per slot rather than per file, while a large
+  * granule keeps a task of its own, and every failure is still
+  * attributed to its own granule. Pass 1 parses each
   * granule's HEADER on an executor and collects only tiny metadata
   * (schema fields, global-attr JSON, record count — a few hundred bytes
   * per granule); the driver unions the per-granule schemas (erroring
@@ -27,9 +32,10 @@ import org.apache.spark.sql.types._
   * and writes the attr sidecars from the collected strings. Pass 2
   * decodes records, and a single `partitionBy("__granule")` write lays
   * out one directory per input granule. The driver does O(#granules)
-  * string work only — it never opens or re-parses a granule file. A
-  * 100 TB feed of ~100 MB granules is ~1M tasks of independent decode —
-  * embarrassingly parallel, no shuffle.
+  * string work (plus one file-size stat per granule) — it never opens
+  * or re-parses a granule file. A 100 TB feed of ~100 MB granules is
+  * ~1M tasks of independent decode — embarrassingly parallel, no
+  * shuffle.
   */
 object NetCDFIngest {
 
@@ -348,6 +354,35 @@ object NetCDFIngest {
       extends RuntimeException(
         s"granule ${record.path} failed ${record.stage}: ${record.error}")
 
+  /** Contiguous slices of granule indices (source order kept) for the
+    * ingest passes, packed the way Spark packs a file scan's splits
+    * (`FilePartition`): each granule costs its file size plus
+    * `openCost`, and a slice closes before it would pass
+    * `min(maxBytes, max(openCost, total / slots))`. Small granules share
+    * a slot-sized task; a granule near `maxBytes` gets a task of its own;
+    * a slice holds at most `maxBytes` beyond its first granule, so a
+    * retried task or the write's per-task sort on `__granule` stays
+    * bounded whatever the feed size. */
+  private[graft] def packSlices(sizes: IndexedSeq[Long], slots: Int,
+      maxBytes: Long, openCost: Long): Seq[Range] = {
+    val total = sizes.map(_ + openCost).sum
+    val target = math.min(maxBytes,
+      math.max(openCost, total / math.max(slots, 1)))
+    val out = Seq.newBuilder[Range]
+    var from = 0
+    var acc = 0L
+    sizes.indices.foreach { i =>
+      if (i > from && acc + sizes(i) > target) {
+        out += (from until i)
+        from = i
+        acc = 0L
+      }
+      acc += sizes(i) + openCost
+    }
+    if (sizes.nonEmpty) out += (from until sizes.size)
+    out.result()
+  }
+
   /** Run one granule's `stage`, attributing any parse error to `path`. */
   private def attempt[T](path: String, stage: String)(
       body: => T): Either[Quarantined, T] =
@@ -395,8 +430,15 @@ object NetCDFIngest {
       permissive: Boolean = false): IngestResult = {
     require(srcs.nonEmpty, "no input granules")
     val paths = srcs.toIndexedSeq
-    val metaTries = spark.sparkContext
-      .parallelize(paths, paths.size)
+    val sc = spark.sparkContext
+    val conf = spark.sessionState.conf
+    def sliced(ps: IndexedSeq[String]) = {
+      val groups = packSlices(ps.map(p => new java.io.File(p).length()),
+        sc.defaultParallelism, conf.filesMaxPartitionBytes,
+        conf.filesOpenCostInBytes).map(_.map(ps))
+      sc.parallelize(groups, math.max(groups.size, 1)).flatMap(g => g)
+    }
+    val metaTries = sliced(paths)
       .map(p => attempt(p, "header")(granuleMeta(p, recDim)))
       .collect().toSeq
     val headerBad = metaTries.collect { case Left(q) => q }
@@ -408,9 +450,8 @@ object NetCDFIngest {
       StructField("__granule", StringType, nullable = false))
     val goodPaths = metas.map(_.path).toIndexedSeq
     val decodeBad =
-      spark.sparkContext.collectionAccumulator[Quarantined]("quarantined")
-    val rdd = spark.sparkContext
-      .parallelize(goodPaths, math.max(goodPaths.size, 1))
+      sc.collectionAccumulator[Quarantined]("quarantined")
+    val rdd = sliced(goodPaths)
       .flatMap { p =>
         val g = granuleName(p)
         // granuleRows does all nc reads (incl. fletcher32 checks) before

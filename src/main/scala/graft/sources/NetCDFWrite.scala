@@ -44,8 +44,7 @@ object NetCDFWrite {
     * since the last reset — instrumentation for the NetCdfWriteSpec
     * pass-count pin. The structural invariant: ONE stats aggregate +
     * ONE row pass = 2, independent of variable count (the cache-
-    * materializing count() when the caller didn't pre-count is the
-    * load, not a pass). A regression back to per-variable column
+    * materializing count() is the load, not a pass). A regression back to per-variable column
     * passes bumps this by the variable count. */
   private[graft] val passCounter =
     new java.util.concurrent.atomic.AtomicInteger(0)
@@ -444,48 +443,45 @@ object NetCDFWrite {
   /** Row-count switchover for the single-file path: up to this many rows
     * the frame is row-buffered driver-side (fast, one pass); above it,
     * [[write]] fails over to the streamed columnar assembly
-    * ([[writeSingleStreamed]]: bounded memory, K column passes). */
+    * ([[writeSingleStreamed]]: bounded memory, two passes). */
   val DefaultSingleFileMaxRows: Long = 16L << 20
 
-  /** Write an aggregated parquet output (as produced by
-    * [[graft.Aggregate.run]]) back out as ONE `.nc` file, global attrs
-    * from its `_global_attrs.json` sidecar unless given explicitly.
+  /** Write an aggregated frame (as built by [[graft.Aggregate.run]]) out
+    * as ONE `.nc` file.
     *
-    * Scale guard: counts first; above `maxRows` the write FAILS OVER to
-    * [[writeSingleStreamed]] — columnar, one chunk in driver memory,
-    * unbounded output size — so a corpus-sized single `.nc` always
-    * succeeds with bounded memory (the reference's single process
-    * streams node-by-node into one file the same way,
-    * aggregator.py:239-359; [[writeGranules]] / CLI `.ncd` remains the
-    * PARALLEL path). Under the gate the rows stream to the driver per
-    * range-partition (`toLocalIterator`) instead of one all-partitions
-    * `collect()`, so peak driver memory is the row buffer plus ONE
-    * partition's fetch block, not 2x the frame. */
-  def write(spark: SparkSession, srcParquet: String, dst: String,
-      config: AggConfig.Config,
-      globalAttrs: Option[Map[String, String]] = None,
+    * The frame is persisted and counted first, as in [[writeGranules]]:
+    * the count runs the frame's pipeline once, on every slot, and both
+    * branches read back from that cache. Up to `maxRows` the cached rows
+    * are sorted by the index column in one task
+    * (`coalesce(1).sortWithinPartitions`) and stream to the driver
+    * (`toLocalIterator`, never one all-partitions `collect()`) into the
+    * row buffer. Above it the write FAILS OVER to [[writeSingleStreamed]]
+    * on the cached frame (columnar, one chunk in driver memory,
+    * distributed total-order sort, unbounded output size), so a
+    * corpus-sized single `.nc` always succeeds with bounded memory (the
+    * reference's single process streams node-by-node into one file the
+    * same way, aggregator.py:239-359; [[writeGranules]] / CLI `.ncd`
+    * remains the PARALLEL path). */
+  def write(df: DataFrame, dst: String, config: AggConfig.Config,
+      globalAttrs: Map[String, String],
       opts: NcOpts = NcOpts(),
       maxRows: Long = DefaultSingleFileMaxRows): Unit = {
-    val df = spark.read.parquet(srcParquet)
-    val total = df.count()
-    if (total > maxRows) {
-      // CORPUS-SIZED single file: fail over to the streamed columnar
-      // assembly — one variable at a time, one chunk in driver memory —
-      // the same node-by-node streaming model the reference uses
-      // (aggregator.py:239-359). writeGranules (CLI: .ncd) remains the
-      // PARALLEL scale path; this one is single-writer but bounded-memory.
-      writeSingleStreamed(spark, srcParquet, dst, config, globalAttrs, opts,
-        knownTotal = Some(total))
-      return
-    }
-    val sorted = sortColOf(config, df.columns.toSet)
-      .map(c => df.orderBy(col(c))).getOrElse(df)
-    val attrs = globalAttrs.getOrElse(readSidecar(srcParquet))
-    val buf = new scala.collection.mutable.ArrayBuffer[Row](total.toInt)
-    val it = sorted.toLocalIterator()
-    while (it.hasNext) buf += it.next()
-    writeFile(java.nio.file.Paths.get(dst), sorted.schema,
-      buf, config, attrs, opts)
+    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val total = cached.count()
+      if (total > maxRows)
+        writeSingleStreamed(cached, dst, config, globalAttrs, opts)
+      else {
+        val sorted = sortColOf(config, df.columns.toSet)
+          .map(c => cached.coalesce(1).sortWithinPartitions(col(c)))
+          .getOrElse(cached)
+        val buf = new scala.collection.mutable.ArrayBuffer[Row](total.toInt)
+        val it = sorted.toLocalIterator()
+        while (it.hasNext) buf += it.next()
+        writeFile(java.nio.file.Paths.get(dst), sorted.schema, buf, config,
+          globalAttrs, opts)
+      }
+    } finally cached.unpersist()
   }
 
   /** Default record count per streamed chunk (bounded further so one
@@ -494,23 +490,19 @@ object NetCDFWrite {
 
   /** Streamed single-file `.nc` assembly for outputs too large to hold
     * driver-side: ONE stats job plans every variable's encoding (string
-    * width, int narrowing, ragged inner-dim extents), then each record
-    * variable streams through the driver column-at-a-time in
-    * `chunkRows`-row chunks ([[Hdf5Writer.StreamWriter.datasetChunks]]).
+    * width, int narrowing, ragged inner-dim extents), then ONE row pass
+    * streams every record variable through the driver in `chunkRows`-row
+    * chunks (interleaved chunk streams, [[Hdf5Writer.StreamWriter]]).
     * Peak driver memory is one chunk (≤ ~256 MiB), independent of row
     * count; the output file size is unbounded (64-bit writer sink).
-    * Single-writer by construction — wall-clock is K linear passes over
-    * the cached sorted frame (the reference's own streaming model);
+    * Single-writer by construction — wall-clock is two linear passes
+    * over the cached sorted frame (the reference's own streaming model);
     * [[writeGranules]] stays the parallel path. */
-  def writeSingleStreamed(spark: SparkSession, srcParquet: String,
-      dst: String, config: AggConfig.Config,
-      globalAttrs: Option[Map[String, String]] = None,
-      opts: NcOpts = NcOpts(),
-      knownTotal: Option[Long] = None): Unit = {
+  def writeSingleStreamed(df: DataFrame, dst: String,
+      config: AggConfig.Config, globalAttrs: Map[String, String],
+      opts: NcOpts = NcOpts()): Unit = {
     import org.apache.spark.sql.functions.{expr, max, min, size}
-    val df = spark.read.parquet(srcParquet)
-    val attrs = globalAttrs.getOrElse(readSidecar(srcParquet))
-    // TOTAL-ORDER sort: the K column passes must see the SAME row order
+    // TOTAL-ORDER sort: the two passes must see the SAME row order
     // even if a cached partition is evicted and recomputed mid-write — a
     // sort on the index column alone leaves tie order shuffle-dependent,
     // which would tear records across columns. Tie-breaking on every
@@ -524,8 +516,8 @@ object NetCDFWrite {
       .getOrElse(df)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // the count doubles as cache materialization when not pre-counted
-      val total = knownTotal.getOrElse(sorted.count())
+      // the count doubles as cache materialization
+      val total = sorted.count()
       val schema = sorted.schema
       val fieldIdx = schema.fieldNames.zipWithIndex.toMap
       val recDim = config.primaryUdim
@@ -775,7 +767,7 @@ object NetCDFWrite {
           if (rs.rowsInBuf > 0) flush(rs)
           w.closeChunked(rs.stream)
         }
-        w.finish(attrs.toSeq.sortBy(_._1).map { case (k, s) =>
+        w.finish(globalAttrs.toSeq.sortBy(_._1).map { case (k, s) =>
           k -> WStrAttr(s)
         })
       }

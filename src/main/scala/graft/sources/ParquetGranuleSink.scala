@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions.col
   */
 object ParquetGranuleSink {
   def write(df: DataFrame, path: String, sortCol: String,
-      maxRecordsPerFile: Int, numRangePartitions: Int = 0): DataFrame = {
+      maxRecordsPerFile: Int, numRangePartitions: Int = 0): Unit = {
     val parts =
       if (numRangePartitions > 0) numRangePartitions
       else df.sparkSession.sparkContext.defaultParallelism
@@ -25,6 +25,5 @@ object ParquetGranuleSink {
       .write.mode("overwrite")
       .option("maxRecordsPerFile", maxRecordsPerFile.toLong)
       .parquet(path)
-    df.sparkSession.read.parquet(path)
   }
 }

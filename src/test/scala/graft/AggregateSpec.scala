@@ -68,7 +68,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
       granuleAttrs = Map(
         a -> Map("site" -> "boulder", "secret" -> "x"),
         b -> Map("site" -> "boulder, toulouse")),
-      now = () => Instant.ofEpochSecond(1700000000L))
+      now = () => Instant.ofEpochSecond(1700000000L)).writeParquet()
 
     val out = spark.read.parquet(dst).orderBy("time")
     val times = out.select(unix_micros(col("time").cast(TimestampType)))
@@ -209,7 +209,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
         VarSpec("ob_time", Seq("record", "samples"), "timestamp"),
         VarSpec("payload", Seq("record"), "string")),
       attrs = Nil)
-    Aggregate.run(spark, Seq(s"$tmp/g"), s"$tmp/out", cfg)
+    Aggregate.run(spark, Seq(s"$tmp/g"), s"$tmp/out", cfg).writeParquet()
     val out = spark.read.parquet(s"$tmp/out").orderBy("index_time")
     assert(out.columns.contains("index_time"))
     assert(out.select("payload").collect().map(_.getString(0)).toSeq ===
@@ -241,7 +241,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
         VarSpec("ob_time", Seq("record", "samples"), "timestamp"),
         VarSpec("payload", Seq("record"), "string")),
       attrs = Nil)
-    Aggregate.run(spark, Seq(s"$tmp/g"), s"$tmp/out", cfg)
+    Aggregate.run(spark, Seq(s"$tmp/g"), s"$tmp/out", cfg).writeParquet()
     val out = spark.read.parquet(s"$tmp/out").orderBy("index_time")
     val fills = out.filter(col("is_fill"))
       .select("ob_time", "index_time").collect()
@@ -371,7 +371,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
         VarSpec("c", Seq("a_dim", "b_dim"), "int64")),
       attrs = Nil)
     Aggregate.run(spark, (0 until 3).map(i => s"$tmp/g_$i"), s"$tmp/out",
-      cfg)
+      cfg).writeParquet()
     val out = spark.read.parquet(s"$tmp/out").orderBy("a")
       .select("a", "b", "c").collect()
     assert(out.length === 9)
@@ -405,6 +405,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
       attrs = Nil)
     // granule order b, a: the first footer read must not decide the schema
     Aggregate.run(spark, Seq(s"$tmp/g_b", s"$tmp/g_a"), s"$tmp/out", cfg)
+      .writeParquet()
     val out = spark.read.parquet(s"$tmp/out").orderBy("time")
     assert(out.columns.contains("extra"))
     val extras = out.select("extra").collect().map(r =>
@@ -441,7 +442,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
           "long_name" -> "record time")),
       VarSpec("payload", Seq("record"), "string")))
     Aggregate.run(spark, Seq(a), s"$tmp/out", cfg,
-      now = () => Instant.ofEpochSecond(1700000000L))
+      now = () => Instant.ofEpochSecond(1700000000L)).writeParquet()
     // parquet round-trips Spark column metadata through the schema blob
     val md = spark.read.parquet(s"$tmp/out").schema("time").metadata
     assert(md.getString("units") === "microseconds since epoch")
@@ -453,7 +454,7 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
     val a = writeGranule(tmp, "g_a", Seq(base, base + 1 * us))
     val e = writeGranule(tmp, "g_empty", Seq.empty)
     val attrs = Aggregate.run(spark, Seq(a, e), s"$tmp/out", config,
-      now = () => Instant.ofEpochSecond(1700000000L))
+      now = () => Instant.ofEpochSecond(1700000000L)).writeParquet()
     val out = spark.read.parquet(s"$tmp/out")
     assert(out.filter(!col("is_fill")).count() === 2)
     assert(attrs("input_count") === "2") // provenance counts granules
@@ -532,15 +533,15 @@ class AggregateSpec extends AnyFunSuite with SparkSpec {
     // level 1: two runs, each writing a _global_attrs.json sidecar
     Aggregate.run(spark, Seq(a), s"$tmp/day1", config,
       granuleAttrs = Map(a -> Map("site" -> "boulder")),
-      now = () => Instant.ofEpochSecond(1700000000L))
+      now = () => Instant.ofEpochSecond(1700000000L)).writeParquet()
     Aggregate.run(spark, Seq(b), s"$tmp/day2", config,
       granuleAttrs = Map(b -> Map("site" -> "toulouse")),
-      now = () => Instant.ofEpochSecond(1700000000L))
+      now = () => Instant.ofEpochSecond(1700000000L)).writeParquet()
     // level 2: aggregate the aggregates — the sidecars must be read as
     // the granules' attributes without being passed explicitly
     val attrs = Aggregate.run(spark, Seq(s"$tmp/day1", s"$tmp/day2"),
       s"$tmp/month", config,
-      now = () => Instant.ofEpochSecond(1700000000L))
+      now = () => Instant.ofEpochSecond(1700000000L)).writeParquet()
     assert(attrs("site") === "boulder, toulouse")
     assert(attrs("input_count") === "2")
   }

@@ -29,6 +29,21 @@ class IngestErrorSpec extends AnyFunSuite with SparkSpec {
       (0 until 4096).map(i => Row(t0 + i, i * 0.5)), cfg, Map.empty,
       NetCDFWrite.NcOpts(chunkRows = Some(512), deflate = Some(1)))
 
+  /** Flip the first byte past the midpoint that leaves the header
+    * readable but breaks a deflated data chunk. */
+  private def corruptDataChunk(bad: java.nio.file.Path): Unit = {
+    val bytes = Files.readAllBytes(bad)
+    val hit = (bytes.length / 2 until bytes.length by 16).find { at =>
+      val b = bytes.clone()
+      b(at) = (b(at) ^ 0x5a).toByte
+      Files.write(bad, b)
+      scala.util.Try(NetCDFIngest.granuleMeta(bad.toString, Some("time")))
+        .toOption.exists(m => scala.util.Try(NetCDFIngest.granuleRows(
+          bad.toString, m.schema, Some("time")).size).isFailure)
+    }
+    assert(hit.nonEmpty, "no data-chunk offset found")
+  }
+
   /** Strict and permissive ingest of `good` plus `bad`: the strict
     * error's record, after checking permissive quarantines the same
     * file at the same stage. */
@@ -72,20 +87,69 @@ class IngestErrorSpec extends AnyFunSuite with SparkSpec {
       val bad = tmp.resolve("corrupt.nc")
       granule(good, 0.0)
       granule(bad, 5000.0)
-      val bytes = Files.readAllBytes(bad)
-      // the first byte flip past the midpoint that leaves the header
-      // readable but breaks a deflated data chunk
-      val hit = (bytes.length / 2 until bytes.length by 16).find { at =>
-        val b = bytes.clone()
-        b(at) = (b(at) ^ 0x5a).toByte
-        Files.write(bad, b)
-        scala.util.Try(NetCDFIngest.granuleMeta(bad.toString, Some("time")))
-          .toOption.exists(m => scala.util.Try(NetCDFIngest.granuleRows(
-            bad.toString, m.schema, Some("time")).size).isFailure)
-      }
-      assert(hit.nonEmpty, "no data-chunk offset found")
+      corruptDataChunk(bad)
       val rec = strictError(tmp, good, bad)
       assert(rec.path === bad.toString && rec.stage === "decode")
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
+  test("slot-sized ingest tasks: one bad granule among more granules " +
+      "than slots costs only that file") {
+    val tmp = java.nio.file.Paths.get(tempDir("ingest_slots"))
+    val paths = (0 until 10).map { i =>
+      val p = tmp.resolve(f"g$i%02d.nc")
+      granule(p, i * 5000.0)
+      p
+    }
+    val bad = paths(5)
+    corruptDataChunk(bad)
+    val srcs = paths.map(_.toString)
+    val slots = spark.sparkContext.defaultParallelism
+    assert(slots < srcs.size)
+    val conf = spark.sessionState.conf
+    val slices = NetCDFIngest.packSlices(paths.map(Files.size),
+      slots, conf.filesMaxPartitionBytes, conf.filesOpenCostInBytes)
+    assert(slices.size === slots && slices.find(_.contains(5)).get.size > 1,
+      s"the bad granule must share a task: $slices")
+
+    val strict = intercept[NetCDFIngest.GranuleIngestException] {
+      NetCDFIngest.convert(spark, srcs, s"$tmp/strict", Some("time"))
+    }
+    assert(strict.record.path === bad.toString &&
+      strict.record.stage === "decode")
+    assert(strict.getMessage.contains(bad.toString), strict.getMessage)
+
+    val res = NetCDFIngest.convertChecked(spark, srcs, s"$tmp/perm",
+      Some("time"), permissive = true)
+    assert(res.quarantined.map(q => (q.path, q.stage)) ===
+      Seq((bad.toString, "decode")))
+    assert(res.granuleDirs.size === 9)
+    // every other granule keeps all its rows, the ones decoded in the
+    // bad granule's task included
+    val perGranule = spark.read.option("basePath", s"$tmp/perm")
+      .parquet(res.granuleDirs: _*)
+      .groupBy("__granule").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(perGranule ===
+      (0 until 10).filter(_ != 5).map(i => f"g$i%02d" -> 4096L).toMap)
+  }
+
+  test("ingest slices pack granules by file size, like a file scan's " +
+      "splits") {
+    val MB = 1L << 20
+    def pack(n: Int, size: Long, slots: Int) = NetCDFIngest.packSlices(
+      IndexedSeq.fill(n)(size), slots, 128 * MB, 4 * MB)
+    // a small feed: one task per slot (24 x 100 KiB on 4 slots)
+    assert(pack(24, 100 << 10, 4).map(_.size) === Seq(6, 6, 6, 6))
+    // many more granules than slots: slices stay contiguous and in source
+    // order, and a task holds at most 128 MiB of granules plus open cost
+    // (26 x 1 MiB + 25 x 4 MiB), however many granules there are
+    val many = pack(10000, MB, 4)
+    assert(many.flatten === (0 until 10000))
+    assert(many.map(_.size).max === 26)
+    // large granules keep a task each
+    assert(pack(1000, 100 * MB, 16).forall(_.size == 1))
+    assert(NetCDFIngest.packSlices(IndexedSeq.empty, 4, 128 * MB, 4 * MB)
+      .isEmpty)
   }
 }

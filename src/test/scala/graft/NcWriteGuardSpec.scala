@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.AggConfig._
@@ -23,20 +24,22 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
       VarSpec("x", Seq("record"), "double")),
     attrs = Nil)
 
-  private def shuffledFrame(tmp: String, n: Int): Unit =
+  private def shuffledFrame(n: Int): DataFrame =
     spark.range(n).selectExpr(
         s"cast((id * 7919) % $n as double) as t", "cast(id as double) * 2 as x")
       .repartition(8)
-      .write.parquet(s"$tmp/agg")
 
   test("above maxRows, write fails over to the streamed columnar assembly") {
-    val tmp = Files.createTempDirectory("ncguard").toString
-    shuffledFrame(tmp, 2000)
+    val tmp = tempDir("ncguard")
     // maxRows = 100 forces the streamed path; chunkRows = 64 forces real
     // multi-chunk output through datasetChunks
-    NetCDFWrite.write(spark, s"$tmp/agg", s"$tmp/out.nc", cfg,
-      globalAttrs = Some(Map("title" -> "streamed")), maxRows = 100,
+    NetCDFWrite.passCounter.set(0)
+    NetCDFWrite.write(shuffledFrame(2000), s"$tmp/out.nc", cfg,
+      globalAttrs = Map("title" -> "streamed"), maxRows = 100,
       opts = NetCDFWrite.NcOpts(chunkRows = Some(64)))
+    // the streamed assembly's one data pass (doubles need no stats job)
+    assert(NetCDFWrite.passCounter.get === 1,
+      "over the gate the write must run the streamed assembly")
     val nc = NetCDF4.open(s"$tmp/out.nc")
     assert(nc.attrs("title") === "streamed")
     val t = nc.read(nc.vars.find(_.name == "t").get).asInstanceOf[Array[Double]]
@@ -53,12 +56,11 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streamed and in-memory assemblies produce equivalent files") {
-    val tmp = Files.createTempDirectory("ncguard_eq").toString
-    shuffledFrame(tmp, 500)
-    NetCDFWrite.write(spark, s"$tmp/agg", s"$tmp/mem.nc", cfg,
-      globalAttrs = Some(Map("k" -> "v")), maxRows = 10000)
-    NetCDFWrite.writeSingleStreamed(spark, s"$tmp/agg", s"$tmp/str.nc", cfg,
-      globalAttrs = Some(Map("k" -> "v")))
+    val tmp = tempDir("ncguard_eq")
+    NetCDFWrite.write(shuffledFrame(500), s"$tmp/mem.nc", cfg,
+      globalAttrs = Map("k" -> "v"), maxRows = 10000)
+    NetCDFWrite.writeSingleStreamed(shuffledFrame(500), s"$tmp/str.nc", cfg,
+      Map("k" -> "v"))
     val (a, b) = (NetCDF4.open(s"$tmp/mem.nc"), NetCDF4.open(s"$tmp/str.nc"))
     assert(a.attrs === b.attrs)
     assert(a.vars.map(_.name).toSet === b.vars.map(_.name).toSet)
@@ -71,13 +73,12 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streamed path: strings and ragged arrays with stats-planned extents") {
-    val tmp = Files.createTempDirectory("ncguard_str").toString
+    val tmp = tempDir("ncguard_str")
     import spark.implicits._
-    (0 until 300).map { i =>
+    val df = (0 until 300).map { i =>
       (i.toDouble, s"s$i" * (1 + i % 3), Seq.tabulate(1 + i % 3)(j => i + j * 0.5))
     }.toDF("t", "name", "vals")
       .repartition(4)
-      .write.parquet(s"$tmp/agg")
     val c = Config(
       dims = Seq(DimSpec("record", None, indexBy = Some("t")),
         DimSpec("d2", None)),
@@ -86,8 +87,7 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
         VarSpec("name", Seq("record"), "string"),
         VarSpec("vals", Seq("record", "d2"), "double")),
       attrs = Nil)
-    NetCDFWrite.writeSingleStreamed(spark, s"$tmp/agg", s"$tmp/out.nc", c,
-      globalAttrs = Some(Map.empty),
+    NetCDFWrite.writeSingleStreamed(df, s"$tmp/out.nc", c, Map.empty,
       opts = NetCDFWrite.NcOpts(chunkRows = Some(32)))
     val nc = NetCDF4.open(s"$tmp/out.nc")
     val names = nc.read(nc.vars.find(_.name == "name").get)
@@ -106,7 +106,7 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
   test("a single .nc OVER 2 GiB streams out and reads back (64-bit both ways)") {
     import graft.sources.{Hdf5Reader, Hdf5Writer}
     import Hdf5Writer._
-    val tmp = Files.createTempDirectory("ncguard_big").toString
+    val tmp = tempDir("ncguard_big")
     val dst = java.nio.file.Paths.get(tmp, "big.nc")
     // 3 record datasets x 96M doubles (768 MiB each) = 2.25 GiB of data;
     // 8 MiB chunks fed from an iterator that reuses one buffer — driver
@@ -149,7 +149,7 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     for (seed <- Seq(7, 21, 1717); n <- Seq(0, 1, 137)) {
       val rnd = new scala.util.Random(seed * 1000 + n)
-      val tmp = Files.createTempDirectory(s"ncguard_prop$seed$n").toString
+      val tmp = tempDir(s"ncguard_prop$seed$n")
       val rows = (0 until n).map { i =>
         (i.toDouble,
           if (rnd.nextInt(10) == 0) null
@@ -162,8 +162,7 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
           else java.lang.Float.valueOf(rnd.nextFloat()),
           Seq.tabulate(rnd.nextInt(4))(j => i + j * 0.25)) // ragged 0..3
       }
-      rows.toDF("t", "s", "l", "f", "a").repartition(3)
-        .write.parquet(s"$tmp/agg")
+      val df = rows.toDF("t", "s", "l", "f", "a").repartition(3)
       val c = Config(
         dims = Seq(DimSpec("record", None, indexBy = Some("t")),
           DimSpec("d2", None)),
@@ -174,10 +173,10 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
           VarSpec("f", Seq("record"), "float"),
           VarSpec("a", Seq("record", "d2"), "double")),
         attrs = Nil)
-      NetCDFWrite.write(spark, s"$tmp/agg", s"$tmp/mem.nc", c,
-        globalAttrs = Some(Map("seed" -> seed.toString)), maxRows = 1 << 20)
-      NetCDFWrite.writeSingleStreamed(spark, s"$tmp/agg", s"$tmp/str.nc", c,
-        globalAttrs = Some(Map("seed" -> seed.toString)),
+      NetCDFWrite.write(df, s"$tmp/mem.nc", c,
+        globalAttrs = Map("seed" -> seed.toString), maxRows = 1 << 20)
+      NetCDFWrite.writeSingleStreamed(df, s"$tmp/str.nc", c,
+        Map("seed" -> seed.toString),
         opts = NetCDFWrite.NcOpts(chunkRows = Some(13))) // force multi-chunk
       val (x, y) = (NetCDF4.open(s"$tmp/mem.nc"), NetCDF4.open(s"$tmp/str.nc"))
       assert(x.attrs === y.attrs, s"seed=$seed n=$n attrs")
@@ -200,7 +199,6 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
               b.asInstanceOf[Array[_]].toSeq, s"seed=$seed n=$n ${vx.name}")
         }
       }
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
     }
   }
 
@@ -209,12 +207,11 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
     // + one interleaved row pass. A regression to per-variable column
     // passes would count 1 + nVars (here 6) instead of 2.
     import spark.implicits._
-    val tmp = Files.createTempDirectory("ncguard_pass").toString
-    (0 until 200).map { i =>
+    val tmp = tempDir("ncguard_pass")
+    val df = (0 until 200).map { i =>
       (i.toDouble, s"n$i", i.toLong, i * 0.5f, i * 2.0,
         Seq.tabulate(1 + i % 3)(j => i + j * 0.25))
     }.toDF("t", "s", "l", "f", "x", "a").repartition(4)
-      .write.parquet(s"$tmp/agg")
     val c = Config(
       dims = Seq(DimSpec("record", None, indexBy = Some("t")),
         DimSpec("d2", None)),
@@ -227,8 +224,7 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
         VarSpec("a", Seq("record", "d2"), "double")),
       attrs = Nil)
     NetCDFWrite.passCounter.set(0)
-    NetCDFWrite.writeSingleStreamed(spark, s"$tmp/agg", s"$tmp/out.nc", c,
-      globalAttrs = Some(Map.empty),
+    NetCDFWrite.writeSingleStreamed(df, s"$tmp/out.nc", c, Map.empty,
       opts = NetCDFWrite.NcOpts(chunkRows = Some(16)))
     assert(NetCDFWrite.passCounter.get === 2,
       "streamed assembly must stay at stats + data = 2 full passes")
@@ -239,13 +235,12 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
     assert(t.length == 200 && x.length == 200)
     assert(t.indices.forall(i => x(i) == t(i) * 2.0),
       "columns must stay row-aligned through the interleaved streams")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
   }
 
   test("a failed write never truncates a pre-existing output file") {
     import graft.sources.Hdf5Writer
     import Hdf5Writer._
-    val tmp = Files.createTempDirectory("ncguard_atomic")
+    val tmp = java.nio.file.Paths.get(tempDir("ncguard_atomic"))
     val dst = tmp.resolve("out.nc")
     val good = java.nio.ByteBuffer.allocate(32)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -268,10 +263,12 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("under the gate, the in-memory path writes a sorted file") {
-    val tmp = Files.createTempDirectory("ncguard2").toString
-    shuffledFrame(tmp, 1000)
-    NetCDFWrite.write(spark, s"$tmp/agg", s"$tmp/out.nc", cfg,
-      globalAttrs = Some(Map("title" -> "guard spec")), maxRows = 1000)
+    val tmp = tempDir("ncguard2")
+    NetCDFWrite.passCounter.set(0)
+    NetCDFWrite.write(shuffledFrame(1000), s"$tmp/out.nc", cfg,
+      globalAttrs = Map("title" -> "guard spec"), maxRows = 1000)
+    assert(NetCDFWrite.passCounter.get === 0,
+      "at the gate the rows stay on the in-memory path")
     val nc = NetCDF4.open(s"$tmp/out.nc")
     val t = nc.read(nc.vars.find(_.name == "t").get).asInstanceOf[Array[Double]]
     assert(t.length == 1000)

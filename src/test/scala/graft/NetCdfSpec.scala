@@ -118,7 +118,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
           min = Some(lo), max = Some(hi))
       else d
     })
-    Aggregate.run(spark, granules, s"$tmp/out", cfg)
+    Aggregate.run(spark, granules, s"$tmp/out", cfg).writeParquet()
     val out = spark.read.parquet(s"$tmp/out").orderBy(ivar)
     val times = out
       .select(unix_micros(col(ivar).cast(TimestampType)))
@@ -188,7 +188,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
           expectedCadence = Map("report_number" -> 1.0))
       else d
     })
-    Aggregate.run(spark, granules, s"$tmp/out", cfg)
+    Aggregate.run(spark, granules, s"$tmp/out", cfg).writeParquet()
     val out = spark.read.parquet(s"$tmp/out").orderBy("time")
     val times = out
       .select(unix_micros(col("time").cast(TimestampType)))
@@ -281,7 +281,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
           min = Some(lo), max = Some(hi))
       else d
     })
-    Aggregate.run(spark, granules, s"$tmp/out", cfg)
+    Aggregate.run(spark, granules, s"$tmp/out", cfg).writeParquet()
     val out = spark.read.parquet(s"$tmp/out").orderBy("index_time")
     val times = out
       .select(unix_micros(col("index_time").cast(TimestampType)))
@@ -363,7 +363,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
           min = Some(lo), max = Some(hi))
       else d
     })
-    Aggregate.run(spark, granules, s"$tmp/out", cfg)
+    Aggregate.run(spark, granules, s"$tmp/out", cfg).writeParquet()
     val out = spark.read.parquet(s"$tmp/out").orderBy("index_time")
     val times = out
       .select(unix_micros(col("index_time").cast(TimestampType)))
