@@ -31,11 +31,12 @@ package graft.sources
   * 64-bit file sink ([[FileOut]]) — the file is never held in memory and
   * output size is unbounded; back-references (superblock slots, OH
   * sizes, B-tree siblings, GCOL addresses) patch via positional writes.
-  * [[StreamWriter]] exposes the same assembly incrementally: feed each
-  * dataset's chunk payloads from an iterator (one chunk in memory at a
-  * time — the reference's node-by-node streaming model,
-  * aggregator.py:239-359), then `finish()` writes the metadata. The
-  * in-memory [[build]] remains for byte-level tests.
+  * [[StreamWriter]] exposes the same assembly incrementally: open a
+  * chunk stream per chunked dataset and append chunks to them in any
+  * interleaving (one chunk per dataset in memory at a time — the
+  * reference's node-by-node streaming model, aggregator.py:239-359),
+  * then `finish()` writes the metadata. The in-memory [[build]] remains
+  * for byte-level tests.
   */
 object Hdf5Writer {
 
@@ -84,7 +85,7 @@ object Hdf5Writer {
     * element bytes (`shape.product * dtype.size` long); `None` leaves the
     * storage unallocated (reads back as zeros/fill — how netcdf-c leaves
     * never-written phony dimension scales) unless chunk payloads are fed
-    * through [[StreamWriter.datasetChunks]]. `unlimited0` marks dimension
+    * through [[StreamWriter.openChunked]]. `unlimited0` marks dimension
     * 0 as unlimited (maxdims entry unlimited + chunked layout). */
   final case class WDataset(
       name: String,
@@ -465,7 +466,7 @@ object Hdf5Writer {
 
   /** Incremental single-file assembly: construct over an [[Out]], feed
     * each dataset (whole-array via [[dataset]], or chunk-at-a-time via
-    * [[datasetChunks]] — the streamed path holds ONE chunk in memory),
+    * [[openChunked]] — the streamed path holds ONE chunk in memory),
     * then [[finish]] writes object headers, the root group, and the
     * global heap, and patches the superblock. Dimension-scale datasets
     * must be fed before the variables whose `DIMENSION_LIST` references
@@ -528,6 +529,23 @@ object Hdf5Writer {
 
     private val openStreams = scala.collection.mutable.Set[String]()
 
+    private def rowBytesOf(ds: WDataset): Long =
+      math.max(ds.shape.drop(1).product, 1L) * ds.dtype.size
+
+    /** Open `ds`'s chunk stream with `cr` records per chunk. A declared
+      * chunk must stay under HDF5's 4 GiB/chunk limit and the u32
+      * chunk-dim field, or the layout message silently truncates for
+      * readers. */
+    private def open(ds: WDataset, cr: Long): ChunkStream = {
+      val rowBytes = rowBytesOf(ds)
+      require(cr * rowBytes < (4L << 30) && cr <= 0xffffffffL,
+        s"${ds.name}: chunk of $cr rows x $rowBytes B exceeds the HDF5 " +
+          "4 GiB/chunk limit; pass a smaller chunkRows")
+      openStreams += ds.name
+      chunkRowsUsed(ds.name) = cr
+      new ChunkStream(ds, cr)
+    }
+
     /** Open an interleaved chunk stream for `ds` (data must be None,
       * `unlimited0` + `chunkRows` set, shape.head = final row count). */
     def openChunked(ds: WDataset): ChunkStream = {
@@ -537,17 +555,7 @@ object Hdf5Writer {
       require(!openStreams.contains(ds.name),
         s"${ds.name}: chunk stream already open")
       validate(ds)
-      val cr = ds.chunkRows.get.toLong
-      // same clamp dataset() enforces: a declared chunk must stay under
-      // HDF5's 4 GiB/chunk limit and the u32 chunk-dim field, or the
-      // layout message silently truncates for readers
-      val rowBytes = math.max(ds.shape.drop(1).product, 1L) * ds.dtype.size
-      require(cr * rowBytes < (4L << 30) && cr <= 0xffffffffL,
-        s"${ds.name}: chunk of $cr rows x $rowBytes B exceeds the HDF5 " +
-          "4 GiB/chunk limit; pass a smaller chunkRows")
-      openStreams += ds.name
-      chunkRowsUsed(ds.name) = cr
-      new ChunkStream(ds, cr)
+      open(ds, ds.chunkRows.get.toLong)
     }
 
     /** Append one LOGICAL chunk (cr rows x rowBytes, edge chunk already
@@ -588,90 +596,40 @@ object Hdf5Writer {
       openStreams -= h.ds.name
     }
 
-    /** Shared chunked-data writer for the non-interleaved paths:
-      * `payloads` yields LOGICAL chunk bytes, one dataset at a time. */
-    private def writeChunks(ds: WDataset, cr: Long,
-        payloads: Iterator[Array[Byte]]): Unit = {
-      chunkRowsUsed(ds.name) = cr
-      val h = new ChunkStream(ds, cr)
-      payloads.foreach(appendChunk(h, _))
-      h.closed = true
-      chunkBt(ds.name) = writeChunkBtree(out, ds.shape.length,
-        h.entries.toSeq, ds.shape, cr)
-    }
-
     /** Feed one dataset whose data (if any) is fully in memory. */
     def dataset(ds: WDataset): Unit = {
       validate(ds)
-      val total = ds.data.map(_.length.toLong).getOrElse(0L)
       if (ds.unlimited0) {
         val nRows = ds.shape.headOption.getOrElse(0L)
-        val rowBytes = math.max(ds.shape.drop(1).product, 1L) * ds.dtype.size
+        val rowBytes = rowBytesOf(ds)
         // chunk extent along dim 0: caller's chunkRows, else one chunk
         // spanning the whole current extent (the pre-r5 shape) — CLAMPED
         // so a declared chunk never exceeds HDF5's 4 GiB-per-chunk limit
-        // or the u32 chunk-dim field (a phony unlimited dim with
-        // billions of rows and no data would otherwise declare an
-        // illegal chunk in the layout message)
+        // (a phony unlimited dim with billions of rows and no data would
+        // otherwise declare an illegal chunk in the layout message)
         val cr = ds.chunkRows.map(_.toLong).filter(_ > 0)
-          .getOrElse(math.max(1L,
-            math.min(nRows, (1L << 30) / math.max(rowBytes, 1L))))
-        require(cr * rowBytes < (4L << 30) && cr <= 0xffffffffL,
-          s"${ds.name}: chunk of $cr rows x $rowBytes B exceeds the HDF5 " +
-            "4 GiB/chunk limit; pass a smaller chunkRows")
-        val payloads: Iterator[Array[Byte]] =
-          if (ds.data.isEmpty || total == 0) Iterator.empty
-          else {
-            val data = ds.data.get
-            val logical = (cr * rowBytes).toInt
-            Iterator.unfold(0L) { off =>
-              if (off >= nRows) None
-              else {
-                val at = (off * rowBytes).toInt
-                val avail = (math.min(nRows - off, cr) * rowBytes).toInt
-                val p =
-                  if (avail == logical)
-                    java.util.Arrays.copyOfRange(data, at, at + logical)
-                  else { // edge chunk: pad to the full chunk extent
-                    val q = new Array[Byte](logical)
-                    System.arraycopy(data, at, q, 0, avail)
-                    q
-                  }
-                Some((p, off + cr))
-              }
-            }
+          .getOrElse(math.max(1L, math.min(nRows, (1L << 30) / rowBytes)))
+        // the stream keeps meta only; the data is sliced into chunks here
+        val h = open(ds.copy(data = None), cr)
+        ds.data.filter(_.nonEmpty).foreach { data =>
+          val logical = (cr * rowBytes).toInt
+          var off = 0L
+          while (off < nRows) {
+            val at = (off * rowBytes).toInt
+            // copyOfRange zero-pads the edge chunk to the full extent
+            appendChunk(h, java.util.Arrays.copyOfRange(data, at, at + logical))
+            off += cr
           }
-        writeChunks(ds, cr, payloads)
-      } else if (ds.data.isDefined) {
-        out.align8()
-        contAddr(ds.name) = (out.pos, total)
-        ds.data.foreach(out.bytes)
-      } // else: unallocated contiguous storage (address undefined)
-      metas += ds.copy(data = None) // free the data; finish needs meta only
-    }
-
-    /** Feed one chunked dataset from an iterator of logical chunk
-      * payloads (each `chunkRows x rowBytes`, the last one padded to the
-      * full extent by the CALLER) — one chunk in driver memory at a
-      * time. `ds.data` must be None; `ds.shape.head` must already be the
-      * final row count; `ds.chunkRows` must be set. */
-    def datasetChunks(ds: WDataset, payloads: Iterator[Array[Byte]]): Unit = {
-      require(ds.data.isEmpty, s"${ds.name}: datasetChunks takes payloads")
-      require(ds.unlimited0 && ds.chunkRows.exists(_ > 0),
-        s"${ds.name}: streamed chunks need unlimited0 + chunkRows")
-      validate(ds)
-      // same clamp dataset() enforces: a declared chunk must stay under
-      // HDF5's 4 GiB/chunk limit and the u32 chunk-dim field, or the
-      // layout message silently truncates for readers
-      locally {
-        val cr = ds.chunkRows.get.toLong
-        val rowBytes = math.max(ds.shape.drop(1).product, 1L) * ds.dtype.size
-        require(cr * rowBytes < (4L << 30) && cr <= 0xffffffffL,
-          s"${ds.name}: chunk of $cr rows x $rowBytes B exceeds the HDF5 " +
-            "4 GiB/chunk limit; pass a smaller chunkRows")
+        }
+        closeChunked(h)
+      } else {
+        ds.data.foreach { d =>
+          out.align8()
+          contAddr(ds.name) = (out.pos, d.length.toLong)
+          out.bytes(d)
+        } // else: unallocated contiguous storage (address undefined)
+        metas += ds.copy(data = None) // free the data; finish needs meta only
       }
-      writeChunks(ds, ds.chunkRows.get.toLong, payloads)
-      metas += ds
     }
 
     // gheap address slots of the attr body being built (body-relative;

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.time.ZoneOffset
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
@@ -26,12 +28,21 @@ import Hdf5Writer._
   * or the `_FillValue` (ints, written as a typed attribute so a re-ingest
   * restores the nulls).
   *
+  * One assembler writes every `.nc` file. [[planFile]] decides what is
+  * fixed per file (record dimension, dimension sizes, attributes, each
+  * variable's encoding, the chunk extent) from a small per-variable
+  * [[VarStats]]; [[assemble]] then makes ONE pass over the rows in record
+  * order. [[writeFile]] takes the stats from its row buffer,
+  * [[writeSingleStreamed]] from one Spark aggregate — so the same rows
+  * give the same bytes (`.nc` and `.stats.json`) on both sides of
+  * [[write]]'s row gate.
+  *
   * Scale shape: one `.nc` file is inherently a single-writer artifact
   * (the reference is a single process for the same reason), so
   * [[write]] streams the FINISHED aggregate — already reduced by the
   * distributed pipeline — through the driver: row-buffered up to
-  * `maxRows`, then failing over to [[writeSingleStreamed]] (columnar,
-  * one chunk in memory, unbounded output size — the reference's own
+  * `maxRows`, then failing over to [[writeSingleStreamed]] (one chunk
+  * per variable in memory, unbounded output size — the reference's own
   * node-by-node streaming, aggregator.py:239-359). For PARALLEL large
   * outputs, [[writeGranules]] writes a partitioned `.nc` granule SET
   * instead: each range partition writes its own file executor-side,
@@ -41,22 +52,22 @@ import Hdf5Writer._
 object NetCDFWrite {
 
   /** Full passes over the sorted frame made by [[writeSingleStreamed]]
-    * since the last reset — instrumentation for the NetCdfWriteSpec
-    * pass-count pin. The structural invariant: ONE stats aggregate +
-    * ONE row pass = 2, independent of variable count (the cache-
-    * materializing count() is the load, not a pass). A regression back to per-variable column
+    * since the last reset — instrumentation for the pass-count pins. The
+    * structural invariant: ONE stats aggregate (skipped when no variable
+    * needs stats) + ONE row pass = 2, independent of variable count (the
+    * cache-materializing count() is the load, not a pass). The in-memory
+    * side never touches it. A regression back to per-variable column
     * passes bumps this by the variable count. */
   private[graft] val passCounter =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Storage options for record (unlimited-dim) variables: records per
     * HDF5 chunk (the reference's `-c udim:chunksize`), zlib deflate
-    * level, and fletcher32 chunk checksums. `chunkRows = None` writes one
-    * chunk per dataset on the in-memory path (clamped to the 4 GiB HDF5
-    * chunk limit) but [[DefaultStreamChunkRows]]-row chunks on the
-    * streamed path (a single chunk cannot span an unbounded row count);
-    * an explicit value (or a variable's configured `chunksizes`) makes
-    * the chunking deterministic on both paths. */
+    * level, and fletcher32 chunk checksums. The chunk extent is
+    * `chunkRows`, else the variable's configured `chunksizes`, else
+    * [[DefaultStreamChunkRows]] — never more than the row count, and
+    * bounded so the chunks of all record variables together stay under
+    * ~256 MiB. */
   final case class NcOpts(
       chunkRows: Option[Int] = None,
       deflate: Option[Int] = None,
@@ -91,17 +102,24 @@ object NetCDFWrite {
       throw new IllegalArgumentException(s"not a timestamp: $other")
   }
 
-  private final case class Built(
-      dtype: WType, data: Array[Byte], extraAttrs: Seq[(String, WAttrVal)])
-
   /** An encoding PLAN for one variable: the on-disk type and attrs are
-    * decided once (from whole-dataset knowledge), then `put` converts any
-    * value batch to bytes — so the streamed path can encode
-    * chunk-at-a-time under decisions made from one stats pass, and the
-    * in-memory path derives the same decisions from its full batch. */
+    * decided once (from whole-dataset stats), then `put(vals, n)`
+    * converts the first `n` values of a batch to bytes — one cell per
+    * slot of `vals`, the slots past `n` left zero (a chunk's padded
+    * tail). */
   private final case class Enc(
       dtype: WType, extraAttrs: Seq[(String, WAttrVal)],
-      put: Array[Any] => Array[Byte])
+      put: (Array[Any], Int) => Array[Byte])
+
+  /** `put` for `size`-byte cells written by `cell`. */
+  private def cells(size: Int)(cell: (java.nio.ByteBuffer, Any) => Unit)
+      : (Array[Any], Int) => Array[Byte] = { (vals, n) =>
+    val b = java.nio.ByteBuffer.allocate(vals.length * size)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    var i = 0
+    while (i < n) { cell(b, vals(i)); i += 1 }
+    b.array()
+  }
 
   /** Plan the encoding of one variable. `strWidth` is the cell width for
     * StringType (max UTF-8 bytes + 1 over the WHOLE dataset); `intFits`
@@ -119,36 +137,21 @@ object NetCDFWrite {
           if (v.attributes.get("units").flatMap(NetCDF4.timeUnits).isDefined)
             Nil
           else Seq("units" -> WStrAttr(EpochUnits))
-        Enc(WF64, unitsAttr, { vals =>
-          val b = java.nio.ByteBuffer.allocate(vals.length * 8)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          vals.foreach { x =>
-            b.putDouble(if (x == null) Double.NaN else (usOf(x) - base) / per)
-          }
-          b.array()
+        Enc(WF64, unitsAttr, cells(8) { (b, x) =>
+          b.putDouble(if (x == null) Double.NaN else (usOf(x) - base) / per)
         })
       case DoubleType =>
         Enc(WF64, cfgFillNum.map(f => "_FillValue" -> WDoubleAttr(f)).toSeq,
-          { vals =>
-            val b = java.nio.ByteBuffer.allocate(vals.length * 8)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            vals.foreach { x =>
-              b.putDouble(if (x == null) Double.NaN
-                else x.asInstanceOf[Number].doubleValue())
-            }
-            b.array()
+          cells(8) { (b, x) =>
+            b.putDouble(if (x == null) Double.NaN
+              else x.asInstanceOf[Number].doubleValue())
           })
       case FloatType =>
         Enc(WF32,
           cfgFillNum.map(f => "_FillValue" -> WFloatAttr(f.toFloat)).toSeq,
-          { vals =>
-            val b = java.nio.ByteBuffer.allocate(vals.length * 4)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            vals.foreach { x =>
-              b.putFloat(if (x == null) Float.NaN
-                else x.asInstanceOf[Number].floatValue())
-            }
-            b.array()
+          cells(4) { (b, x) =>
+            b.putFloat(if (x == null) Float.NaN
+              else x.asInstanceOf[Number].floatValue())
           })
       case LongType | IntegerType | ShortType | ByteType =>
         val narrow = v.datatype.toLowerCase match {
@@ -160,161 +163,140 @@ object NetCDFWrite {
         val fill = cfgFillNum.map(_.toLong)
           .getOrElse(if (size == 4) FillInt else FillInt64)
         Enc(WInt(size), Seq("_FillValue" -> WLongAttr(fill, size)),
-          { vals =>
-            val b = java.nio.ByteBuffer.allocate(vals.length * size)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            vals.foreach { x =>
-              val l = if (x == null) fill
-                else x.asInstanceOf[Number].longValue()
-              if (size == 4) b.putInt(l.toInt) else b.putLong(l)
-            }
-            b.array()
+          cells(size) { (b, x) =>
+            val l = if (x == null) fill else x.asInstanceOf[Number].longValue()
+            if (size == 4) b.putInt(l.toInt) else b.putLong(l)
           })
       case StringType =>
         val width = math.max(strWidth, 1)
-        Enc(WStr(width), Nil, { vals =>
-          val out = new Array[Byte](vals.length * width)
-          vals.zipWithIndex.foreach { case (s0, i) =>
-            val raw = (if (s0 == null) "" else s0.toString).getBytes("UTF-8")
-            System.arraycopy(raw, 0, out, i * width,
-              math.min(raw.length, width - 1))
-          }
-          out
+        Enc(WStr(width), Nil, cells(width) { (b, x) =>
+          val at = b.position()
+          val raw = (if (x == null) "" else x.toString).getBytes("UTF-8")
+          b.put(raw, 0, math.min(raw.length, width - 1))
+          b.position(at + width)
         })
       case BooleanType =>
-        Enc(WInt(1, signed = false), Nil, _.map {
-          case null => 0.toByte
-          case b: java.lang.Boolean => if (b) 1.toByte else 0.toByte
-        })
+        Enc(WInt(1, signed = false), Nil,
+          cells(1)((b, x) => b.put(if (x == true) 1.toByte else 0.toByte)))
       case other =>
         throw new IllegalArgumentException(
           s"cannot write column type ${other.simpleString} to NetCDF")
     }
   }
 
-  /** Encode flat element values (row-major, nulls = fill) for one
-    * variable — the in-memory path: encoding decisions derive from the
-    * full batch (same results as before the plan/put split). */
-  private def encode(vals: Array[Any], elemType: DataType,
-      v: AggConfig.VarSpec): Built = {
-    // maxOption: a zero-row record variable must write an empty dataset,
-    // not crash on empty.max
-    val strWidth = elemType match {
-      case StringType => vals.map {
-        case null => 0
-        case s => s.toString.getBytes("UTF-8").length
-      }.maxOption.getOrElse(0) + 1
-      case _ => 1
-    }
-    val intFits = elemType match {
-      case LongType | IntegerType | ShortType | ByteType =>
-        vals.forall { x =>
-          x == null || {
-            val l = x.asInstanceOf[Number].longValue()
-            l >= Int.MinValue && l <= Int.MaxValue
-          }
-        }
-      case _ => true
-    }
-    val e = planEnc(elemType, v, strWidth, intFits)
-    Built(e.dtype, e.put(vals), e.extraAttrs)
+  // --------------------------------------------------------- file plan
+
+  /** Whole-frame facts one variable's plan needs: its longest string
+    * (UTF-8 bytes), its integer range, and its longest inner array.
+    * Zero where the column has none; an integer column with no value
+    * may read as (0, 0) or as an empty range (lo > hi) — both fit 32
+    * bits. */
+  private final case class VarStats(strBytes: Long = 0L, lo: Long = 0L,
+      hi: Long = 0L, arrLen: Long = 0L)
+
+  /** One output variable as [[assemble]] writes it: its dataset (no data
+    * yet), the row field it reads, its encoding, and how many rows its
+    * buffer holds — one chunk for a chunked record variable, every row
+    * for a contiguous one, one row for a constant. */
+  private final case class VarPlan(ds: WDataset, field: Int, isArr: Boolean,
+      innerN: Int, enc: Enc, rec: Boolean, bufRows: Int)
+
+  /** Everything decided once per file: the phony dimension scales, every
+    * output variable in dataset order (coordinates first, so
+    * `DIMENSION_LIST` references resolve), and the scalar numeric/time
+    * columns the stats sidecar covers (name, field, is-timestamp). */
+  private final case class FilePlan(recDim: String, phony: Seq[WDataset],
+      vars: Seq[VarPlan], statCols: Seq[(String, Int, Boolean)])
+
+  private def outNameOf(v: AggConfig.VarSpec): String =
+    v.mapTo.getOrElse(v.name)
+
+  private def elemOf(t: DataType): (DataType, Boolean) = t match {
+    case ArrayType(e, _) => (e, true)
+    case e => (e, false)
   }
 
-  // --------------------------------------------------------- file build
+  /** The config's variables a frame of `schema` writes. Only these go to
+    * the file (pipeline bookkeeping columns like `is_fill` stay out of
+    * the product, matching the reference output's shape). */
+  private def outVarsOf(config: AggConfig.Config, schema: StructType)
+      : Seq[AggConfig.VarSpec] =
+    config.vars.filter(v => schema.fieldNames.contains(outNameOf(v)))
 
-  /** Build one `.nc` file from rows in record order. Only the config's
-    * variables are written (pipeline bookkeeping columns like `is_fill`
-    * stay out of the product, matching the reference output's shape). */
-  def writeFile(dst: java.nio.file.Path, schema: StructType,
-      rows: collection.IndexedSeq[Row], config: AggConfig.Config,
-      globalAttrs: Map[String, String], opts: NcOpts = NcOpts()): Unit = {
-    val n = rows.size
+  /** [[VarStats]] of rows held in memory: the figures
+    * [[writeSingleStreamed]]'s one aggregate computes in Spark. */
+  private def statsOf(schema: StructType, rows: Iterable[Row],
+      outVars: Seq[AggConfig.VarSpec]): Map[String, VarStats] =
+    outVars.flatMap { v =>
+      val c = outNameOf(v)
+      val i = schema.fieldIndex(c)
+      val (elemT, isArr) = elemOf(schema(c).dataType)
+      val isStr = elemT == StringType
+      val isInt = elemT match {
+        case LongType | IntegerType | ShortType | ByteType => true
+        case _ => false
+      }
+      if (!isStr && !isInt && !isArr) None
+      else {
+        var w, len = 0L
+        var lo = Long.MaxValue
+        var hi = Long.MinValue
+        def elem(x: Any): Unit = if (x != null) {
+          if (isStr) w = math.max(w, x.toString.getBytes("UTF-8").length)
+          else if (isInt) {
+            val l = x.asInstanceOf[Number].longValue()
+            if (l < lo) lo = l
+            if (l > hi) hi = l
+          }
+        }
+        rows.foreach { r =>
+          r.get(i) match {
+            case s: scala.collection.Seq[_] if isArr =>
+              len = math.max(len, s.length.toLong)
+              if (isStr || isInt) s.foreach(elem)
+            case x if !isArr => elem(x)
+            case _ => // null array
+          }
+        }
+        Some(c -> VarStats(w, lo, hi, len))
+      }
+    }.toMap
+
+  /** Plan one file of `total` rows of `schema`. */
+  private def planFile(schema: StructType, config: AggConfig.Config,
+      total: Long, stats: Map[String, VarStats], opts: NcOpts): FilePlan = {
     val recDim = config.primaryUdim
       .orElse(config.dims.find(_.isUnlimited))
       .map(_.name)
       .getOrElse(config.dims.headOption.map(_.name).getOrElse("record"))
-    val fieldIdx = schema.fieldNames.zipWithIndex.toMap
-    val outVars = config.vars.filter(v =>
-      fieldIdx.contains(v.mapTo.getOrElse(v.name)))
+    val unlimited = config.dim(recDim).exists(_.isUnlimited)
+    val outVars = outVarsOf(config, schema)
+    def statOf(v: AggConfig.VarSpec) =
+      stats.getOrElse(outNameOf(v), VarStats())
 
     // resolved dimension sizes: record dim = row count; fixed dims from
-    // the config, falling back to the MAX observed array length across
-    // every row of every variable on the dim — covering [recDim, dn]
-    // record vars and 1-D non-record vars, and sizing a ragged column
-    // (a second unlimited dim is packed-left arrays of varying length,
-    // see Hdf5Reader's multi-unlim model) to its longest row so shorter
-    // rows pad with fill instead of longer rows being truncated
-    def observedInner(dn: String): Option[Long] = {
-      val lens = for {
-        v <- outVars
-        if (v.dimensions == Seq(recDim, dn) && dn != recDim) ||
-          (v.dimensions == Seq(dn) && dn != recDim)
-        i = fieldIdx(v.mapTo.getOrElse(v.name))
-        row <- rows.iterator
-        s <- Option(row.get(i)).collect { case s: scala.collection.Seq[_] => s }
-      } yield s.length.toLong
-      lens.maxOption
-    }
+    // the config, falling back to the MAX observed array length of every
+    // variable on the dim — covering [recDim, dn] record vars and 1-D
+    // non-record vars, and sizing a ragged column (a second unlimited dim
+    // is packed-left arrays of varying length, see Hdf5Reader's
+    // multi-unlim model) to its longest row so shorter rows pad with
+    // fill instead of longer rows being truncated. A dim whose arrays are
+    // all EMPTY is 1 wide (innerN is floored at 1; a 0-length inner dim
+    // would break the shape == data invariant)
+    def observedInner(dn: String): Option[Long] =
+      outVars.filter(v => dn != recDim &&
+          (v.dimensions == Seq(recDim, dn) || v.dimensions == Seq(dn)))
+        .map(statOf(_).arrLen).filter(_ > 0).maxOption
     val dimSize: Map[String, Long] = config.dims.map { d =>
       d.name -> (
-        if (d.name == recDim) n.toLong
+        if (d.name == recDim) total
         else d.size.filter(_ > 0)
-          // filter(_ > 0): every row's array may be EMPTY — a 0-length
-          // inner dim would break the shape==data invariant (innerN is
-          // floored at 1); write a 1-wide fill column instead
-          .orElse(observedInner(d.name).filter(_ > 0))
+          .orElse(observedInner(d.name))
           .getOrElse(1L))
     }.toMap
 
-    // flat element values per variable + its dataset shape
-    def flatVals(v: AggConfig.VarSpec): (Seq[Long], Array[Any], DataType) = {
-      val outName = v.mapTo.getOrElse(v.name)
-      val i = fieldIdx(outName)
-      val fieldType = schema(outName).dataType
-      val innerDims = if (v.dimensions.headOption.contains(recDim))
-        v.dimensions.drop(1) else v.dimensions
-      val inner = innerDims.map(dimSize.getOrElse(_, 1L))
-      require(inner.product <= Int.MaxValue,
-        s"$outName: inner extent ${inner.product} exceeds the " +
-          "per-record element bound")
-      val innerN = inner.product.toInt max 1
-      def elems(x: Any): Array[Any] = (x, fieldType) match {
-        case (s: scala.collection.Seq[_], _: ArrayType) =>
-          val a = s.toArray[Any]
-          if (a.length == innerN) a
-          else { // pad with nulls / truncate to the configured inner size
-            val out = new Array[Any](innerN)
-            System.arraycopy(a, 0, out, 0, math.min(a.length, innerN))
-            out
-          }
-        case (null, _: ArrayType) => new Array[Any](innerN)
-        case (x0, _) => Array[Any](x0)
-      }
-      if (v.dimensions.headOption.contains(recDim)) {
-        val out = new Array[Any](n * innerN)
-        var r = 0
-        while (r < n) {
-          val e = elems(rows(r).get(i))
-          System.arraycopy(e, 0, out, r * innerN, innerN)
-          r += 1
-        }
-        (n.toLong +: inner, out,
-          fieldType match { case ArrayType(t, _) => t; case t => t })
-      } else {
-        // constant (non-record) variable: first non-null record's value,
-        // like the reference copying static vars from the first granule
-        val x = rows.iterator.map(_.get(i)).collectFirst {
-          case v0 if v0 != null => v0
-        }.orNull
-        (inner, elems(x),
-          fieldType match { case ArrayType(t, _) => t; case t => t })
-      }
-    }
-
     val dimIds = config.dims.map(_.name).zipWithIndex.toMap
-    val coordVars = outVars.filter(v =>
-      dimIds.contains(v.mapTo.getOrElse(v.name))).map(v =>
-      v.mapTo.getOrElse(v.name)).toSet
+    val coordVars = outVars.map(outNameOf).filter(dimIds.contains).toSet
 
     def scaleAttrs(dimName: String, phonySize: Option[Long])
         : Seq[(String, WAttrVal)] = Seq(
@@ -332,51 +314,175 @@ object NetCDFWrite {
         case (k, s) if k != "_FillValue" => k -> WStrAttr(s)
       }
 
-    def varDataset(v: AggConfig.VarSpec): WDataset = {
-      val outName = v.mapTo.getOrElse(v.name)
-      val (shape, vals, elemT) = flatVals(v)
-      val built = encode(vals, elemT, v)
-      val isCoord = coordVars(outName)
-      val dimList =
-        if (isCoord) Nil
-        else Seq("DIMENSION_LIST" -> WDimListAttr(
-          v.dimensions.filter(dimIds.contains)))
-      val scale =
-        if (isCoord) scaleAttrs(outName, None) else Nil
-      val unlim = v.dimensions.headOption.contains(recDim) &&
-        config.dim(recDim).exists(_.isUnlimited)
-      // chunk extent: CLI/caller option first, else the variable's own
-      // configured chunksizes (reference template field; record dim leads)
-      val cr = if (!unlim) None
-        else opts.chunkRows.orElse(
-          v.chunksizes.flatMap(_.headOption).filter(_ > 0))
-          .filter(_ < shape.headOption.getOrElse(0L))
-      WDataset(outName, shape, built.dtype, Some(built.data),
-        scale ++ userAttrs(v) ++ built.extraAttrs ++
-          (if (v.dimensions.nonEmpty && !isCoord) dimList else Nil),
-        unlimited0 = unlim,
-        fletcher32 = unlim && opts.fletcher32,
-        chunkRows = cr,
-        deflate = if (unlim) opts.deflate else None,
-        shuffle = unlim && opts.shuffle)
+    def isRec(v: AggConfig.VarSpec) = v.dimensions.headOption.contains(recDim)
+    val (coords, data) = outVars.partition(v => coordVars(outNameOf(v)))
+    // the per-chunk memory budget (~256 MiB of logical bytes) is SHARED
+    // across the record variables' simultaneously-open streams, so
+    // buffered data stays bounded whatever the variable count
+    val nRec = math.max(1, outVars.count(isRec))
+    val vars = (coords ++ data).map { v =>
+      val name = outNameOf(v)
+      val (elemT, isArr) = elemOf(schema(name).dataType)
+      val isCoord = coordVars(name)
+      val rec = isRec(v)
+      val inner = (if (rec) v.dimensions.drop(1) else v.dimensions)
+        .map(dimSize.getOrElse(_, 1L))
+      require(inner.product <= Int.MaxValue,
+        s"$name: inner extent ${inner.product} exceeds the per-record " +
+          "element bound — a silent Int wrap here would write garbage-" +
+          "width rows against a wider declared shape")
+      val innerN = inner.product.toInt max 1
+      val st = statOf(v)
+      val enc = planEnc(elemT, v, st.strBytes.toInt + 1,
+        intFits = st.lo >= Int.MinValue && st.hi <= Int.MaxValue)
+      val attrs = (if (isCoord) scaleAttrs(name, None) else Nil) ++
+        userAttrs(v) ++ enc.extraAttrs ++
+        (if (v.dimensions.nonEmpty && !isCoord)
+          Seq("DIMENSION_LIST" -> WDimListAttr(
+            v.dimensions.filter(dimIds.contains)))
+        else Nil)
+      val ds = WDataset(name, if (rec) total +: inner else inner, enc.dtype,
+        None, attrs)
+      val field = schema.fieldIndex(name)
+      if (!rec) VarPlan(ds, field, isArr, innerN, enc, rec, bufRows = 1)
+      else if (!unlimited) { // contiguous: only rows held in memory
+        require(total * innerN <= Int.MaxValue,
+          s"$name: $total records x $innerN cells do not fit one " +
+            s"contiguous buffer; make $recDim unlimited")
+        VarPlan(ds, field, isArr, innerN, enc, rec, bufRows = total.toInt)
+      } else {
+        val rowBytes = innerN.toLong * enc.dtype.size
+        require(rowBytes <= Int.MaxValue,
+          s"$name: one record is $rowBytes B ($innerN elems x " +
+            s"${enc.dtype.size} B cells) — exceeds the per-chunk " +
+            "addressable bound; narrow the cell width or split the variable")
+        val want = opts.chunkRows
+          .orElse(v.chunksizes.flatMap(_.headOption).filter(_ > 0))
+          .getOrElse(DefaultStreamChunkRows).toLong
+        val cr = math.max(1L, math.min(math.min(want, total max 1L),
+          ((1L << 28) / nRec) / rowBytes))
+        require(cr * rowBytes <= Int.MaxValue,
+          s"$name: chunk of $cr rows x $rowBytes B/row does not fit one " +
+            "byte array; lower chunkRows")
+        VarPlan(ds.copy(unlimited0 = true, fletcher32 = opts.fletcher32,
+          chunkRows = Some(cr.toInt), deflate = opts.deflate,
+          shuffle = opts.shuffle), field, isArr, innerN, enc, rec,
+          bufRows = cr.toInt)
+      }
     }
 
     // phony dims (no variable of the same name) are bare scales
-    val phonyDims = config.dims.filterNot(d => coordVars(d.name)).map { d =>
+    val phony = config.dims.filterNot(d => coordVars(d.name)).map { d =>
       WDataset(d.name, Seq(dimSize(d.name)), WF32, None,
         scaleAttrs(d.name, Some(dimSize(d.name))),
         unlimited0 = d.name == recDim && d.isUnlimited)
     }
-    val coordDatasets = outVars.filter(v => coordVars(v.mapTo.getOrElse(v.name)))
-      .map(varDataset)
-    val dataDatasets = outVars.filterNot(v => coordVars(v.mapTo.getOrElse(v.name)))
-      .map(varDataset)
+    val statCols = outVars.map(outNameOf).flatMap { c =>
+      schema(c).dataType match {
+        case TimestampNTZType | TimestampType =>
+          Some((c, schema.fieldIndex(c), true))
+        case _: NumericType => Some((c, schema.fieldIndex(c), false))
+        case _ => None // non-scalar / non-orderable: no stats entry
+      }
+    }
+    FilePlan(recDim, phony, vars, statCols)
+  }
 
-    // dimension-scale datasets first so DIMENSION_LIST references resolve
-    Hdf5Writer.write(dst,
-      (phonyDims ++ coordDatasets) ++ dataDatasets,
-      globalAttrs.toSeq.sortBy(_._1).map { case (k, s) => k -> WStrAttr(s) })
-    if (opts.stats) writeStatsSidecar(dst, schema, rows, outVars, fieldIdx)
+  // ---------------------------------------------------------- assembler
+
+  /** The one `.nc` assembler: ONE pass over `rows` (record order) writes
+    * the planned file. Record variables append interleaved chunk streams
+    * ([[Hdf5Writer.StreamWriter.openChunked]]), so memory is one chunk
+    * per variable whatever the row count; constant (non-record)
+    * variables take their first non-null value in row order, like the
+    * reference copying static vars from the first granule; the stats
+    * sidecar's min/max accumulate in the same pass (the reference
+    * likewise streams all variables in one node-by-node traversal,
+    * aggregator.py:239-359). */
+  private def assemble(dst: java.nio.file.Path, plan: FilePlan,
+      rows: Iterator[Row], globalAttrs: Map[String, String],
+      opts: NcOpts): Unit = {
+    final class Col(val p: VarPlan, w: StreamWriter) {
+      val buf = new Array[Any](p.bufRows * p.innerN)
+      var n = 0 // rows in buf
+      val stream: ChunkStream =
+        if (p.ds.unlimited0) w.openChunked(p.ds) else null
+      def add(x: Any): Unit = {
+        val at = n * p.innerN
+        if (!p.isArr) buf(at) = x
+        else x match { // pad with nulls / truncate to the inner extent
+          case s: scala.collection.Seq[_] =>
+            val it = s.iterator
+            var j = 0
+            while (j < p.innerN) {
+              buf(at + j) = if (it.hasNext) it.next() else null
+              j += 1
+            }
+          case _ => java.util.Arrays.fill(buf, at, at + p.innerN, null)
+        }
+        n += 1
+      }
+      def bytes: Array[Byte] = p.enc.put(buf, n * p.innerN)
+      def flush(): Unit = { w.appendChunk(stream, bytes); n = 0 }
+    }
+
+    val stats = plan.statCols.filter(_ => opts.stats).toArray
+    val mn = Array.fill(stats.length)(Double.PositiveInfinity)
+    val mx = Array.fill(stats.length)(Double.NegativeInfinity)
+    Hdf5Writer.streamTo(dst) { w =>
+      // dimension-scale datasets first so DIMENSION_LIST references resolve
+      plan.phony.foreach(w.dataset)
+      val (rec, consts) =
+        plan.vars.map(new Col(_, w)).toArray.partition(_.p.rec)
+      while (rows.hasNext) {
+        val row = rows.next()
+        var k = 0
+        while (k < rec.length) {
+          val c = rec(k)
+          c.add(row.get(c.p.field))
+          if (c.stream != null && c.n == c.p.bufRows) c.flush()
+          k += 1
+        }
+        k = 0
+        while (k < consts.length) {
+          val c = consts(k)
+          if (c.n == 0 && !row.isNullAt(c.p.field)) c.add(row.get(c.p.field))
+          k += 1
+        }
+        k = 0
+        while (k < stats.length) {
+          val i = stats(k)._2
+          if (!row.isNullAt(i)) {
+            val d =
+              if (stats(k)._3) usOf(row.get(i)).toDouble
+              else row.get(i).asInstanceOf[Number].doubleValue()
+            if (d < mn(k)) mn(k) = d // NaN compares false: skipped
+            if (d > mx(k)) mx(k) = d
+          }
+          k += 1
+        }
+      }
+      // constants register BEFORE the record streams close, so a
+      // constant coordinate's dataset precedes any DIMENSION_LIST that
+      // references it
+      consts.foreach { c =>
+        if (c.n == 0) c.add(null)
+        w.dataset(c.p.ds.copy(data = Some(c.bytes)))
+      }
+      rec.foreach { c =>
+        if (c.stream == null) w.dataset(c.p.ds.copy(data = Some(c.bytes)))
+        else {
+          if (c.n > 0) c.flush()
+          w.closeChunked(c.stream)
+        }
+      }
+      w.finish(globalAttrs.toSeq.sortBy(_._1).map { case (k, s) =>
+        k -> WStrAttr(s)
+      })
+    }
+    if (opts.stats)
+      writeStatsSidecar(dst, stats.indices.filter(k => mn(k) <= mx(k))
+        .map(k => (stats(k)._1, mn(k), mx(k))))
   }
 
   /** Per-granule column-stats sidecar: `<granule>.nc.stats.json` holding
@@ -387,43 +493,12 @@ object NetCDFWrite {
     * range predicate on ANY stats-covered column prunes non-matching
     * granules without opening them ([[graft.sources.NetCdfSource]]);
     * without it (foreign granules, `stats = false`) the scan keeps the
-    * granule — the sidecar only ever NARROWS I/O. One extra pass over
-    * the in-memory row buffer per granule; nulls and NaNs are skipped,
-    * an all-null column is omitted. */
+    * granule — the sidecar only ever NARROWS I/O. Nulls and NaNs are
+    * skipped, an all-null column is omitted. */
   private def writeStatsSidecar(dst: java.nio.file.Path,
-      schema: StructType, rows: collection.IndexedSeq[Row],
-      outVars: Seq[AggConfig.VarSpec], fieldIdx: Map[String, Int]): Unit = {
-    val entries = outVars.flatMap { v =>
-      val outName = v.mapTo.getOrElse(v.name)
-      val i = fieldIdx(outName)
-      val toD: Any => Option[Double] = schema(outName).dataType match {
-        case TimestampNTZType | TimestampType =>
-          x => scala.util.Try(usOf(x).toDouble).toOption
-        case _: NumericType => {
-          case n: Number =>
-            val d = n.doubleValue()
-            if (d.isNaN) None else Some(d)
-          case _ => None
-        }
-        case _ => null // non-scalar / non-orderable: no stats entry
-      }
-      if (toD == null) None
-      else {
-        var mn = Double.PositiveInfinity
-        var mx = Double.NegativeInfinity
-        var seen = false
-        rows.foreach { r =>
-          if (!r.isNullAt(i)) toD(r.get(i)).foreach { d =>
-            seen = true
-            if (d < mn) mn = d
-            if (d > mx) mx = d
-          }
-        }
-        if (seen) Some(outName -> (mn, mx)) else None
-      }
-    }
+      entries: Seq[(String, Double, Double)]): Unit = {
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val json = entries.sortBy(_._1).map { case (c, (mn, mx)) =>
+    val json = entries.sortBy(_._1).map { case (c, mn, mx) =>
       s""""${esc(c)}": [$mn, $mx]"""
     }.mkString("{", ", ", "}")
     java.nio.file.Files.writeString(
@@ -431,6 +506,16 @@ object NetCDFWrite {
   }
 
   // ------------------------------------------------------------- fronts
+
+  /** Build one `.nc` file from rows in record order: the plan's stats
+    * come from one pass over the buffer, then [[assemble]] writes it. */
+  def writeFile(dst: java.nio.file.Path, schema: StructType,
+      rows: collection.IndexedSeq[Row], config: AggConfig.Config,
+      globalAttrs: Map[String, String], opts: NcOpts = NcOpts()): Unit = {
+    val stats = statsOf(schema, rows, outVarsOf(config, schema))
+    assemble(dst, planFile(schema, config, rows.size, stats, opts),
+      rows.iterator, globalAttrs, opts)
+  }
 
   /** The sort/order column of an aggregated frame (scalar `index_time`
     * stands in for a multidim index variable, matching Aggregate.run). */
@@ -441,9 +526,10 @@ object NetCDFWrite {
     }.filter(columns.contains)
 
   /** Row-count switchover for the single-file path: up to this many rows
-    * the frame is row-buffered driver-side (fast, one pass); above it,
-    * [[write]] fails over to the streamed columnar assembly
-    * ([[writeSingleStreamed]]: bounded memory, two passes). */
+    * the frame is row-buffered driver-side and the plan's stats come
+    * from the buffer; above it, [[write]] fails over to
+    * [[writeSingleStreamed]] (stats from one Spark aggregate, one chunk
+    * per variable in memory). Both sides write the same bytes. */
   val DefaultSingleFileMaxRows: Long = 16L << 20
 
   /** Write an aggregated frame (as built by [[graft.Aggregate.run]]) out
@@ -455,13 +541,16 @@ object NetCDFWrite {
     * are sorted by the index column in one task
     * (`coalesce(1).sortWithinPartitions`) and stream to the driver
     * (`toLocalIterator`, never one all-partitions `collect()`) into the
-    * row buffer. Above it the write FAILS OVER to [[writeSingleStreamed]]
-    * on the cached frame (columnar, one chunk in driver memory,
-    * distributed total-order sort, unbounded output size), so a
-    * corpus-sized single `.nc` always succeeds with bounded memory (the
-    * reference's single process streams node-by-node into one file the
-    * same way, aggregator.py:239-359; [[writeGranules]] / CLI `.ncd`
-    * remains the PARALLEL path). */
+    * row buffer that [[writeFile]] writes. Above it the write FAILS OVER
+    * to [[writeSingleStreamed]] on the cached frame (distributed
+    * total-order sort, one chunk per variable in driver memory,
+    * unbounded output size), so a corpus-sized single `.nc` always
+    * succeeds with bounded memory (the reference's single process
+    * streams node-by-node into one file the same way,
+    * aggregator.py:239-359; [[writeGranules]] / CLI `.ncd` remains the
+    * PARALLEL path). Both branches run the same assembler, so for a
+    * frame with a unique index they write identical `.nc` and
+    * `.stats.json` bytes. */
   def write(df: DataFrame, dst: String, config: AggConfig.Config,
       globalAttrs: Map[String, String],
       opts: NcOpts = NcOpts(),
@@ -484,19 +573,20 @@ object NetCDFWrite {
     } finally cached.unpersist()
   }
 
-  /** Default record count per streamed chunk (bounded further so one
-    * chunk stays under ~256 MiB). */
+  /** Default record count per chunk (bounded further so the chunks of
+    * all record variables stay under ~256 MiB together). */
   val DefaultStreamChunkRows: Int = 1 << 18
 
   /** Streamed single-file `.nc` assembly for outputs too large to hold
-    * driver-side: ONE stats job plans every variable's encoding (string
-    * width, int narrowing, ragged inner-dim extents), then ONE row pass
-    * streams every record variable through the driver in `chunkRows`-row
-    * chunks (interleaved chunk streams, [[Hdf5Writer.StreamWriter]]).
-    * Peak driver memory is one chunk (≤ ~256 MiB), independent of row
-    * count; the output file size is unbounded (64-bit writer sink).
-    * Single-writer by construction — wall-clock is two linear passes
-    * over the cached sorted frame (the reference's own streaming model);
+    * driver-side: ONE stats aggregate feeds the file plan (string width,
+    * int narrowing, ragged inner-dim extents), then [[assemble]] makes
+    * ONE row pass over the cached sorted frame (`toLocalIterator`). Peak
+    * driver memory is one chunk per record variable (≤ ~256 MiB
+    * together), independent of row count; the output file size is
+    * unbounded (64-bit writer sink). Writes the same bytes as
+    * [[writeFile]] on the same rows, stats sidecar included. A record
+    * dimension that is not unlimited is rejected: contiguous storage
+    * needs every row in memory. Single-writer by construction;
     * [[writeGranules]] stays the parallel path. */
   def writeSingleStreamed(df: DataFrame, dst: String,
       config: AggConfig.Config, globalAttrs: Map[String, String],
@@ -519,23 +609,14 @@ object NetCDFWrite {
       // the count doubles as cache materialization
       val total = sorted.count()
       val schema = sorted.schema
-      val fieldIdx = schema.fieldNames.zipWithIndex.toMap
-      val recDim = config.primaryUdim
-        .orElse(config.dims.find(_.isUnlimited))
-        .map(_.name)
-        .getOrElse(config.dims.headOption.map(_.name).getOrElse("record"))
-      val outVars = config.vars.filter(v =>
-        fieldIdx.contains(v.mapTo.getOrElse(v.name)))
+      val outVars = outVarsOf(config, schema)
 
       // ---- ONE stats job: per-variable string width / int range /
-      // observed inner length (the global decisions planEnc needs)
+      // observed inner length ([[VarStats]], as statsOf computes it)
       val aggs = Seq.newBuilder[org.apache.spark.sql.Column]
       outVars.foreach { v =>
-        val c = v.mapTo.getOrElse(v.name)
-        val (elemT, isArr) = schema(c).dataType match {
-          case ArrayType(t, _) => (t, true)
-          case t => (t, false)
-        }
+        val c = outNameOf(v)
+        val (elemT, isArr) = elemOf(schema(c).dataType)
         elemT match {
           case StringType =>
             aggs += (if (isArr)
@@ -555,222 +636,29 @@ object NetCDFWrite {
         if (isArr) aggs += max(size(col(s"`$c`"))).as(s"__n_$c")
       }
       val aggCols = aggs.result()
-      val stats: Map[String, Any] =
+      val stats: Map[String, VarStats] =
         if (aggCols.isEmpty) Map.empty
         else {
           passCounter.incrementAndGet()
           val r = sorted.agg(aggCols.head, aggCols.tail: _*).head()
-          r.schema.fieldNames.zipWithIndex.map { case (n, i) =>
-            n -> r.get(i)
-          }.toMap
+          def stat(key: String): Long =
+            if (!r.schema.fieldNames.contains(key) ||
+                r.isNullAt(r.fieldIndex(key))) 0L
+            else r.getAs[Number](key).longValue()
+          outVars.map(outNameOf).map(c => c -> VarStats(stat(s"__w_$c"),
+            stat(s"__lo_$c"), stat(s"__hi_$c"), stat(s"__n_$c"))).toMap
         }
-      def statLong(key: String, dflt: Long): Long =
-        stats.get(key).flatMap(Option(_))
-          .map(_.asInstanceOf[Number].longValue()).getOrElse(dflt)
 
-      // ---- dimension sizes: record = total; fixed from config, else the
-      // observed max inner length (ragged second-dim rule of writeFile)
-      def observedInner(dn: String): Option[Long] = {
-        val lens = outVars.filter(v =>
-          (v.dimensions == Seq(recDim, dn) && dn != recDim) ||
-            (v.dimensions == Seq(dn) && dn != recDim))
-          .map(v => statLong(s"__n_${v.mapTo.getOrElse(v.name)}", 0L))
-          .filter(_ > 0)
-        if (lens.isEmpty) None else Some(lens.max)
+      val plan = planFile(schema, config, total, stats, opts)
+      plan.vars.find(p => p.rec && !p.ds.unlimited0).foreach { p =>
+        throw new IllegalArgumentException(s"${p.ds.name}: streamed " +
+          s"single-file output needs the record dimension ${plan.recDim} " +
+          "to be unlimited (chunked layout)")
       }
-      val dimSize: Map[String, Long] = config.dims.map { d =>
-        d.name -> (
-          if (d.name == recDim) total
-          else d.size.filter(_ > 0)
-            .orElse(observedInner(d.name))
-            .getOrElse(1L))
-      }.toMap
-
-      val dimIds = config.dims.map(_.name).zipWithIndex.toMap
-      val coordVars = outVars.filter(v =>
-        dimIds.contains(v.mapTo.getOrElse(v.name))).map(v =>
-        v.mapTo.getOrElse(v.name)).toSet
-
-      def scaleAttrs(dimName: String, phonySize: Option[Long])
-          : Seq[(String, WAttrVal)] = Seq(
-        "CLASS" -> WStrAttr("DIMENSION_SCALE"),
-        "NAME" -> WStrAttr(phonySize match {
-          case Some(sz) =>
-            "This is a netCDF dimension but not a netCDF variable." +
-              f"$sz%10d"
-          case None => dimName
-        }),
-        "_Netcdf4Dimid" -> WLongAttr(dimIds(dimName).toLong, 4))
-
-      def userAttrs(v: AggConfig.VarSpec): Seq[(String, WAttrVal)] =
-        v.attributes.toSeq.sortBy(_._1).collect {
-          case (k, s) if k != "_FillValue" => k -> WStrAttr(s)
-        }
-
-      def planFor(v: AggConfig.VarSpec, elemT: DataType): Enc = {
-        val c = v.mapTo.getOrElse(v.name)
-        val strWidth = statLong(s"__w_$c", 0L).toInt + 1
-        val lo = statLong(s"__lo_$c", 0L)
-        val hi = statLong(s"__hi_$c", 0L)
-        planEnc(elemT, v, strWidth,
-          intFits = lo >= Int.MinValue && hi <= Int.MaxValue)
-      }
-
-      def elemsOf(x: Any, innerN: Int, isArr: Boolean): Array[Any] =
-        if (!isArr) Array[Any](x)
-        else x match {
-          case null => new Array[Any](innerN)
-          case s: scala.collection.Seq[_] =>
-            val a = s.toArray[Any]
-            if (a.length == innerN) a
-            else {
-              val out = new Array[Any](innerN)
-              System.arraycopy(a, 0, out, 0, math.min(a.length, innerN))
-              out
-            }
-        }
-
-      Hdf5Writer.streamTo(java.nio.file.Paths.get(dst)) { w =>
-        // phony dims first (bare scales), then coord vars, then data vars
-        config.dims.filterNot(d => coordVars(d.name)).foreach { d =>
-          w.dataset(WDataset(d.name, Seq(dimSize(d.name)), WF32, None,
-            scaleAttrs(d.name, Some(dimSize(d.name))),
-            unlimited0 = d.name == recDim && d.isUnlimited))
-        }
-
-        // ---- plan every output variable up front (coords before data
-        // vars — DIMENSION_LIST referencing order), then run ONE data
-        // pass: record variables append interleaved chunk streams
-        // ([[Hdf5Writer.StreamWriter.openChunked]]), constant variables
-        // capture their first non-null value in row order (writeFile's
-        // rule) from the same rows. Pass count is structural: the stats
-        // aggregate + this row pass — 2, independent of variable count
-        // (the reference likewise streams all variables in one
-        // node-by-node traversal, aggregator.py:239-359).
-        final case class Planned(v: AggConfig.VarSpec, outName: String,
-            fi: Int, enc: Enc, isArr: Boolean, isCoord: Boolean,
-            inner: Seq[Long], innerN: Int,
-            attrsOut: Seq[(String, WAttrVal)])
-        val ordered = outVars.filter(v =>
-          coordVars(v.mapTo.getOrElse(v.name))) ++
-          outVars.filterNot(v => coordVars(v.mapTo.getOrElse(v.name)))
-        val planned = ordered.map { v =>
-          val outName = v.mapTo.getOrElse(v.name)
-          val (elemT, isArr) = schema(outName).dataType match {
-            case ArrayType(t, _) => (t, true)
-            case t => (t, false)
-          }
-          val isCoord = coordVars(outName)
-          val isRec = v.dimensions.headOption.contains(recDim)
-          val innerDims = if (isRec) v.dimensions.drop(1) else v.dimensions
-          val inner = innerDims.map(dimSize.getOrElse(_, 1L))
-          require(inner.product <= Int.MaxValue,
-            s"$outName: inner extent ${inner.product} exceeds the " +
-              "per-record element bound — a silent Int wrap here would " +
-              "write garbage-width rows against a wider declared shape")
-          val innerN = inner.product.toInt max 1
-          val enc = planFor(v, elemT)
-          val dimList =
-            if (isCoord) Nil
-            else Seq("DIMENSION_LIST" -> WDimListAttr(
-              v.dimensions.filter(dimIds.contains)))
-          val attrsOut =
-            (if (isCoord) scaleAttrs(outName, None) else Nil) ++
-              userAttrs(v) ++ enc.extraAttrs ++
-              (if (v.dimensions.nonEmpty && !isCoord) dimList else Nil)
-          Planned(v, outName, fieldIdx(outName), enc, isArr, isCoord,
-            inner, innerN, attrsOut)
-        }
-        val (recPlans, constPlans) = planned.partition(
-          _.v.dimensions.headOption.contains(recDim))
-
-        // one interleaved stream per record variable; the per-chunk
-        // memory budget (~256 MiB of logical bytes) is SHARED across
-        // the simultaneously-open streams so total buffered data stays
-        // bounded regardless of variable count
-        final class RecState(val p: Planned,
-            val cr: Int, val logical: Int,
-            val stream: Hdf5Writer.ChunkStream) {
-          val buf = new scala.collection.mutable.ArrayBuffer[Any](
-            cr * p.innerN)
-          var rowsInBuf = 0
-        }
-        val nRec = math.max(1, recPlans.size)
-        val recStates = recPlans.map { p =>
-          require(config.dim(recDim).exists(_.isUnlimited),
-            s"${p.outName}: streamed single-file output needs the record " +
-              s"dimension $recDim to be unlimited (chunked layout)")
-          val rowBytes = p.innerN.toLong * p.enc.dtype.size
-          require(rowBytes > 0 && rowBytes <= Int.MaxValue,
-            s"${p.outName}: one record is $rowBytes B (${p.innerN} elems " +
-              s"x ${p.enc.dtype.size} B cells) — exceeds the per-chunk " +
-              "addressable bound; narrow the cell width or split the " +
-              "variable")
-          val crReq = opts.chunkRows.orElse(
-            p.v.chunksizes.flatMap(_.headOption).filter(_ > 0))
-            .getOrElse(DefaultStreamChunkRows).toLong
-          val cr = math.max(1L, math.min(math.min(crReq, total max 1L),
-            ((1L << 28) / nRec) / math.max(rowBytes, 1L))).toInt
-          val logicalL = cr.toLong * rowBytes
-          require(logicalL <= Int.MaxValue,
-            s"${p.outName}: chunk of $cr rows x $rowBytes B/row does not " +
-              "fit one byte array; lower chunkRows")
-          val stream = w.openChunked(WDataset(p.outName,
-            total +: p.inner, p.enc.dtype, None, p.attrsOut,
-            unlimited0 = true, fletcher32 = opts.fletcher32,
-            chunkRows = Some(cr), deflate = opts.deflate,
-            shuffle = opts.shuffle))
-          new RecState(p, cr, logicalL.toInt, stream)
-        }
-        val constVals = new Array[Any](constPlans.size)
-        val constSeen = new Array[Boolean](constPlans.size)
-
-        def flush(rs: RecState): Unit = {
-          val bytes = rs.p.enc.put(rs.buf.toArray)
-          w.appendChunk(rs.stream,
-            if (bytes.length == rs.logical) bytes
-            else java.util.Arrays.copyOf(bytes, rs.logical)) // edge: pad
-          rs.buf.clear()
-          rs.rowsInBuf = 0
-        }
-
-        // ---- THE single data pass
-        passCounter.incrementAndGet()
-        val rowIt = sorted.toLocalIterator()
-        while (rowIt.hasNext) {
-          val row = rowIt.next()
-          recStates.foreach { rs =>
-            rs.buf ++= elemsOf(row.get(rs.p.fi), rs.p.innerN, rs.p.isArr)
-            rs.rowsInBuf += 1
-            if (rs.rowsInBuf == rs.cr) flush(rs)
-          }
-          var ci = 0
-          while (ci < constPlans.size) {
-            if (!constSeen(ci)) {
-              val x = row.get(constPlans(ci).fi)
-              if (x != null) { constVals(ci) = x; constSeen(ci) = true }
-            }
-            ci += 1
-          }
-        }
-        // constant (non-record) variables: first non-null value in row
-        // order, like the reference copying static vars from the first
-        // granule — registered BEFORE the record streams close so a
-        // constant coordinate's dataset precedes any DIMENSION_LIST
-        // that references it
-        constPlans.zipWithIndex.foreach { case (p, ci) =>
-          val vals = elemsOf(constVals(ci), p.innerN, p.isArr)
-          w.dataset(WDataset(p.outName, p.inner, p.enc.dtype,
-            Some(p.enc.put(vals)), p.attrsOut))
-        }
-        recStates.foreach { rs =>
-          if (rs.rowsInBuf > 0) flush(rs)
-          w.closeChunked(rs.stream)
-        }
-        w.finish(globalAttrs.toSeq.sortBy(_._1).map { case (k, s) =>
-          k -> WStrAttr(s)
-        })
-      }
+      // ---- THE single data pass
+      passCounter.incrementAndGet()
+      assemble(java.nio.file.Paths.get(dst), plan,
+        sorted.toLocalIterator().asScala, globalAttrs, opts)
     } finally sorted.unpersist()
   }
 

@@ -17,7 +17,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
     * doc 1; doc 4 shares nothing. */
   private lazy val dir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_corpus3").toString
+    val d = tempDir("corpus3")
     val base = "the quick brown fox jumps over the lazy dog and runs far away " * 4
     Seq(
       (0L, base + "benchmark tail", "en", "web", 0L),
@@ -37,7 +37,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
     * one fresh doc and one bandless short doc. */
   private lazy val incDir: String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_incdedup").toString
+    val d = tempDir("incdedup")
     val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 6
     val b = "query engines shuffle exchange partitions broadcast joins " * 6
     val c = "rivers forests mountains valleys deserts oceans islands shores " * 6
@@ -179,7 +179,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("bottom-k carries multiplicity: duplicate rows rank like row_number") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_dupdoc").toString
+    val d = tempDir("dupdoc")
     // doc 7 appears twice in the same source — row_number gives it two
     // ranks, so the bounded-state aggregate must keep both copies
     Seq((7L, "dup text", "en", "web", 1L),
@@ -412,7 +412,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
   test("collocations: an always-adjacent pair outranks an equally " +
     "frequent independent pair") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_colloc").toString
+    val d = tempDir("colloc")
     // "alpha beta" always adjacent (8 docs); gamma and delta equally
     // frequent but never adjacent; enough filler for df spread
     val docs = (0 until 8).map { i =>
@@ -478,7 +478,7 @@ class CorpusOpsSpec extends AnyFunSuite with SparkSpec {
 
   test("quantile filter gates per source, not globally") {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_qf").toString
+    val d = tempDir("qf")
     def doc(n: Int) = ("tok " * n).trim
     // source a: 10/20/30/40 tokens -> p25 = 17.5, only the 10-token doc
     // drops; source b: all 5 tokens -> p25 = 5, everything passes (a

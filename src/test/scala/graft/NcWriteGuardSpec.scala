@@ -9,11 +9,13 @@ import graft.core.AggConfig._
 import graft.sources.{NetCDF4, NetCDFWrite}
 
 /** Single-file `.nc` output at corpus scale: up to `maxRows` the frame is
-  * assembled in driver memory; above it, `write` FAILS OVER to the
-  * streamed columnar assembly — one variable at a time, one chunk in
-  * driver memory, unbounded output size — the reference's own
-  * node-by-node streaming model (aggregator.py:239-359). Both paths must
-  * produce semantically identical files.
+  * buffered in driver memory; above it, `write` FAILS OVER to the
+  * streamed assembly — one row pass, one chunk per variable in driver
+  * memory, unbounded output size — the reference's own node-by-node
+  * streaming model (aggregator.py:239-359). Both sides plan the file the
+  * same way and run the same assembler, so for a frame with a unique
+  * index (what `Aggregate` emits) they must write byte-identical `.nc`
+  * and `.stats.json` files.
   */
 class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
 
@@ -24,6 +26,16 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
       VarSpec("x", Seq("record"), "double")),
     attrs = Nil)
 
+  /** The `.nc` and `.stats.json` bytes of `a` and `b` are equal. */
+  private def assertSameBytes(a: String, b: String, clue: String): Unit =
+    Seq("", ".stats.json").foreach { ext =>
+      def bytes(p: String) =
+        Files.readAllBytes(java.nio.file.Paths.get(p + ext))
+      // mismatch = the first differing byte offset, -1 when identical
+      assert(java.util.Arrays.mismatch(bytes(a), bytes(b)) === -1,
+        s"$clue: $a$ext and $b$ext differ")
+    }
+
   private def shuffledFrame(n: Int): DataFrame =
     spark.range(n).selectExpr(
         s"cast((id * 7919) % $n as double) as t", "cast(id as double) * 2 as x")
@@ -32,7 +44,7 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
   test("above maxRows, write fails over to the streamed columnar assembly") {
     val tmp = tempDir("ncguard")
     // maxRows = 100 forces the streamed path; chunkRows = 64 forces real
-    // multi-chunk output through datasetChunks
+    // multi-chunk output through the interleaved chunk streams
     NetCDFWrite.passCounter.set(0)
     NetCDFWrite.write(shuffledFrame(2000), s"$tmp/out.nc", cfg,
       globalAttrs = Map("title" -> "streamed"), maxRows = 100,
@@ -61,15 +73,35 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
       globalAttrs = Map("k" -> "v"), maxRows = 10000)
     NetCDFWrite.writeSingleStreamed(shuffledFrame(500), s"$tmp/str.nc", cfg,
       Map("k" -> "v"))
-    val (a, b) = (NetCDF4.open(s"$tmp/mem.nc"), NetCDF4.open(s"$tmp/str.nc"))
-    assert(a.attrs === b.attrs)
-    assert(a.vars.map(_.name).toSet === b.vars.map(_.name).toSet)
-    a.vars.foreach { va =>
-      val vb = b.vars.find(_.name == va.name).get
-      assert(va.dtype === vb.dtype, s"${va.name} dtype")
-      assert(a.read(va).asInstanceOf[Array[Double]].toSeq ===
-        b.read(vb).asInstanceOf[Array[Double]].toSeq, s"${va.name} values")
-    }
+    assertSameBytes(s"$tmp/mem.nc", s"$tmp/str.nc", "default chunking")
+  }
+
+  test("over the gate, write leaves the same stats sidecar as under it") {
+    import spark.implicits._
+    val tmp = tempDir("ncguard_sidecar")
+    val t0 = java.time.LocalDateTime.of(2026, 1, 1, 0, 0)
+    val df = (0 until 300).map { i =>
+      (t0.plusSeconds(i.toLong), if (i % 7 == 0) Double.NaN else i * 0.5,
+        if (i % 5 == 0) null else java.lang.Integer.valueOf(i - 100))
+    }.toDF("time", "x", "q").repartition(4)
+    val c = Config(
+      dims = Seq(DimSpec("time", None, indexBy = Some("time"))),
+      vars = Seq(
+        VarSpec("time", Seq("time"), "double"),
+        VarSpec("x", Seq("time"), "double"),
+        VarSpec("q", Seq("time"), "int")),
+      attrs = Nil)
+    val opts = NetCDFWrite.NcOpts(chunkRows = Some(64))
+    NetCDFWrite.write(df, s"$tmp/mem.nc", c, Map.empty, opts,
+      maxRows = 1 << 20)
+    NetCDFWrite.passCounter.set(0)
+    NetCDFWrite.write(df, s"$tmp/str.nc", c, Map.empty, opts, maxRows = 0)
+    assert(NetCDFWrite.passCounter.get === 2, "maxRows = 0 must stream")
+    val sidecar =
+      Files.readString(java.nio.file.Paths.get(s"$tmp/str.nc.stats.json"))
+    assert(Seq("time", "x", "q").forall(k => sidecar.contains(s"\"$k\"")),
+      sidecar)
+    assertSameBytes(s"$tmp/mem.nc", s"$tmp/str.nc", "sidecar frame")
   }
 
   test("streamed path: strings and ragged arrays with stats-planned extents") {
@@ -118,14 +150,15 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
       for (d <- 0 until 3) {
         val buf = java.nio.ByteBuffer.allocate(rowsPerChunk * 8)
           .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-        val payloads = Iterator.tabulate(chunksPerDs) { ci =>
+        val s = w.openChunked(WDataset(s"v$d", Seq(nRows), WF64, None, Nil,
+          unlimited0 = true, chunkRows = Some(rowsPerChunk)))
+        (0 until chunksPerDs).foreach { ci =>
           buf.clear()
           var i = 0
           while (i < rowsPerChunk) { buf.putDouble(d * 1000.0 + ci); i += 1 }
-          buf.array()
+          w.appendChunk(s, buf.array())
         }
-        w.datasetChunks(WDataset(s"v$d", Seq(nRows), WF64, None, Nil,
-          unlimited0 = true, chunkRows = Some(rowsPerChunk)), payloads)
+        w.closeChunked(s)
       }
       w.finish(Seq("title" -> WStrAttr("big streamed")))
     }
@@ -173,32 +206,17 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
           VarSpec("f", Seq("record"), "float"),
           VarSpec("a", Seq("record", "d2"), "double")),
         attrs = Nil)
+      val opts = NetCDFWrite.NcOpts(chunkRows = Some(13)) // multi-chunk
       NetCDFWrite.write(df, s"$tmp/mem.nc", c,
-        globalAttrs = Map("seed" -> seed.toString), maxRows = 1 << 20)
+        globalAttrs = Map("seed" -> seed.toString), opts = opts,
+        maxRows = 1 << 20)
       NetCDFWrite.writeSingleStreamed(df, s"$tmp/str.nc", c,
-        Map("seed" -> seed.toString),
-        opts = NetCDFWrite.NcOpts(chunkRows = Some(13))) // force multi-chunk
-      val (x, y) = (NetCDF4.open(s"$tmp/mem.nc"), NetCDF4.open(s"$tmp/str.nc"))
-      assert(x.attrs === y.attrs, s"seed=$seed n=$n attrs")
-      x.vars.foreach { vx =>
-        val vy = y.vars.find(_.name == vx.name).get
-        assert(vx.dtype === vy.dtype, s"seed=$seed n=$n ${vx.name} dtype")
-        assert(vx.shape === vy.shape, s"seed=$seed n=$n ${vx.name} shape")
-        (x.read(vx), y.read(vy)) match {
-          case (a: Array[Double], b: Array[Double]) =>
-            assert(a.length == b.length)
-            assert(a.indices.forall(i =>
-              a(i) == b(i) || (a(i).isNaN && b(i).isNaN)),
-              s"seed=$seed n=$n ${vx.name} doubles")
-          case (a: Array[Float], b: Array[Float]) =>
-            assert(a.indices.forall(i =>
-              a(i) == b(i) || (a(i).isNaN && b(i).isNaN)),
-              s"seed=$seed n=$n ${vx.name} floats")
-          case (a, b) =>
-            assert(a.asInstanceOf[Array[_]].toSeq ===
-              b.asInstanceOf[Array[_]].toSeq, s"seed=$seed n=$n ${vx.name}")
-        }
-      }
+        Map("seed" -> seed.toString), opts = opts)
+      assertSameBytes(s"$tmp/mem.nc", s"$tmp/str.nc", s"seed=$seed n=$n")
+      val y = NetCDF4.open(s"$tmp/str.nc")
+      assert(y.attrs("seed") === seed.toString)
+      assert(y.vars.find(_.name == "t").get.shape === Seq(n.toLong),
+        s"seed=$seed n=$n record count")
     }
   }
 

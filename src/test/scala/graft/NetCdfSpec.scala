@@ -132,7 +132,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
 
   test("reference magnl2hires_5min aggregation end-to-end") {
     assume(fixtures.size == 7)
-    val tmp = Files.createTempDirectory("graft_nc").toString
+    val tmp = tempDir("nc")
     // reference test bounds: 2017-03-05 02:10:00 .. 02:15:00, 10 Hz
     val lo = utcUs(2017, 3, 5, 2, 10)
     val hi = utcUs(2017, 3, 5, 2, 15)
@@ -156,7 +156,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
 
   test("Cli aggregates raw .nc granules like the reference command line") {
     assume(fixtures.size == 7)
-    val tmp = Files.createTempDirectory("graft_cli_nc").toString
+    val tmp = tempDir("cli_nc")
     // ncagg OUT SRC.nc... -u time:time:10  — verbatim reference usage
     Cli.run(spark, Array(s"$tmp/out") ++ fixtures.take(3) ++
       Array("-u", "time:time:10"))
@@ -178,7 +178,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
     val exis = fixturesIn(
       "/root/reference/test/exis/EXISL1bSFXR_interleaved/data")
     assume(exis.nonEmpty)
-    val tmp = Files.createTempDirectory("graft_nc_exis").toString
+    val tmp = tempDir("nc_exis")
     val granules = NetCDFIngest.convert(spark, exis, s"$tmp/gr")
     var cfg = NetCDF4.configFor(exis.head)
     assert(cfg.dims.exists(d => d.name == "report_number" && d.size.isEmpty))
@@ -211,7 +211,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
     val seis = fixturesIn(
       "/root/reference/test/seis/SEISL1bMPSH_boundbetween/data")
     assume(seis.size == 3)
-    val tmp = Files.createTempDirectory("graft_nc_seis").toString
+    val tmp = tempDir("nc_seis")
     val lo = utcUs(2017, 1, 9, 0, 0)
     val hi = utcUs(2017, 1, 9, 0, 1) - 1L
     val (times, out) = runFixture(seis, tmp, lo, hi,
@@ -228,7 +228,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
     val gapFixtures =
       fixturesIn("/root/reference/test/mag/magnl2hires_gap/data")
     assume(gapFixtures.size == 6)
-    val tmp = Files.createTempDirectory("graft_nc_gap").toString
+    val tmp = tempDir("nc_gap")
     // reference TestEvaluateAggregationList: 19:23:00 .. 20:30:00
     val lo = utcUs(2017, 4, 14, 19, 23)
     val hi = utcUs(2017, 4, 14, 20, 30)
@@ -265,7 +265,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
     val geof = fixturesIn(
       "/root/reference/test/mag/MAGL1bGEOF_5min_with0timestamp/data")
     assume(geof.size == 7)
-    val tmp = Files.createTempDirectory("graft_nc_geof").toString
+    val tmp = tempDir("nc_geof")
     val lo = utcUs(2017, 3, 16, 15, 25)
     val hi = utcUs(2017, 3, 16, 15, 30)
     val granules = NetCDFIngest.convert(spark, geof, s"$tmp/gr")
@@ -316,7 +316,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
     val lo = utcUs(2017, 1, 18, 0, 37)
     val hi = utcUs(2017, 1, 18, 0, 38) - 1L // exclusive end, 60 x 1 Hz
     def runOrder(srcs: Seq[String], tag: String): Seq[Long] = {
-      val tmp = Files.createTempDirectory(s"graft_nc_mpsl_$tag").toString
+      val tmp = tempDir(s"nc_mpsl_$tag")
       val (times, _) = runFixture(srcs, tmp, lo, hi,
         dimName = "report_number", ivar = "L1a_SciData_TimeStamp", hz = 1.0)
       times
@@ -344,7 +344,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
     val ehis = fixturesIn(
       "/root/reference/test/seis/SEISL1bEHIS_overlaps/data")
     assume(ehis.size == 20)
-    val tmp = Files.createTempDirectory("graft_nc_ehis").toString
+    val tmp = tempDir("nc_ehis")
     val lo = utcUs(2018, 1, 17, 15, 5)
     val hi = utcUs(2018, 1, 17, 15, 56)
     // report_number is neither unlimited nor the largest dim in this
@@ -381,7 +381,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
   test("compound (class 6) variables decode to Spark struct columns") {
     import graft.sources.Hdf5Writer
     import Hdf5Writer._
-    val tmp = Files.createTempDirectory("nc_compound").toString
+    val tmp = tempDir("nc_compound")
     val dst = java.nio.file.Paths.get(tmp, "granule.nc")
     // compound element: a: i32 @0, x: f64 @4, tag: char[4] @12 -> 16 B
     val comp = WCompound(Seq(
@@ -453,7 +453,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
       "name->value map surfaces as column metadata") {
     import graft.sources.Hdf5Writer
     import Hdf5Writer._
-    val tmp = Files.createTempDirectory("nc_enum").toString
+    val tmp = tempDir("nc_enum")
     val dst = java.nio.file.Paths.get(tmp, "granule.nc")
     val labels = Seq("clear" -> 0L, "cloudy" -> 1L, "missing" -> -1L)
     val enum1 = WEnum(WInt(1), labels, v1 = true)
@@ -518,7 +518,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
   test("szip-filtered granule decodes byte-identically to its deflate twin") {
     import graft.sources.{Hdf5Writer, Szip}
     import Hdf5Writer._
-    val tmp = Files.createTempDirectory("nc_szip_ok").toString
+    val tmp = tempDir("nc_szip_ok")
     val dst = java.nio.file.Paths.get(tmp, "szip.nc")
     // a realistic smooth signal (what szip's NN predictor is FOR), as
     // 32-bit ints, plus an 8-bit flags variable — two sample widths
@@ -554,10 +554,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
       assert(longs("v_szip").take(3) ===
         Seq(1000000L, 1000503L, 1001006L))
       assert(longs("f_szip") === flags.map(_.toLong).toSeq)
-    } finally {
-      h5.close()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    } finally h5.close()
   }
 
   test("szip composes with shuffle and fletcher32 in one filter pipeline") {
@@ -566,7 +563,7 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
     // the h5repack `-f SHUF -f SZIP=8,NN` shape: byte-shuffle, then
     // szip, then a fletcher32 chunk checksum — decode must unwind the
     // declared pipeline in reverse
-    val tmp = Files.createTempDirectory("nc_szip_pipe").toString
+    val tmp = tempDir("nc_szip_pipe")
     val dst = java.nio.file.Paths.get(tmp, "pipe.nc")
     val n = 96
     val vals = java.nio.ByteBuffer.allocate(n * 4)
@@ -584,16 +581,13 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
       val got = h5.read(h5.datasets.find(_.name == "v").get)
         .asInstanceOf[Array[Long]].toSeq
       assert(got === (0 until n).map(i => 500000L + 37 * i))
-    } finally {
-      h5.close()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    } finally h5.close()
   }
 
   test("szip with a malformed parameter set fails with an actionable error") {
     import graft.sources.Hdf5Writer
     import Hdf5Writer._
-    val tmp = Files.createTempDirectory("nc_szip").toString
+    val tmp = tempDir("nc_szip")
     val dst = java.nio.file.Paths.get(tmp, "szip.nc")
     val vals = java.nio.ByteBuffer.allocate(64 * 8)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -629,9 +623,6 @@ class NetCdfSpec extends AnyFunSuite with SparkSpec {
       assert(ex.getMessage.contains("H5Z_FILTER_SZIP"), ex.getMessage)
       assert(ex.getMessage.contains("h5repack") ||
         ex.getMessage.contains("nccopy"), ex.getMessage)
-    } finally {
-      h5.close()
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    } finally h5.close()
   }
 }

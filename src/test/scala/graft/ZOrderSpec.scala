@@ -39,8 +39,8 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
       day <- 0L until 64L; user <- 0L until 64L; r <- 0 until 4
     } yield (day, user, day * 64 + user + r)
     val df = rows.toDF("day", "user", "payload")
-    val linDir = java.nio.file.Files.createTempDirectory("graft_lin").toString
-    val zDir = java.nio.file.Files.createTempDirectory("graft_z").toString
+    val linDir = tempDir("lin")
+    val zDir = tempDir("z")
     // linear baseline: the classic time-sorted layout, same file count
     df.repartitionByRange(64, col("day"))
       .sortWithinPartitions("day", "user")
@@ -77,8 +77,6 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
       graft.sources.ZOrder.zkey(lit(5L), lit(10L)).as("k3")).head()
     assert(probe.getLong(0) < probe.getLong(1))
     assert(probe.getLong(0) < probe.getLong(2))
-    Seq(linDir, zDir).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
   }
 
   test("domains wider than the key width auto-scale: pruning survives " +
@@ -91,7 +89,7 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
     val rows = for {
       day <- 0L until 64L; user <- 0L until 64L; r <- 0 until 4
     } yield (day * S + r, user * S + r, day * 64 + user)
-    val zDir = java.nio.file.Files.createTempDirectory("graft_zw").toString
+    val zDir = tempDir("zw")
     graft.sources.ZOrder.writeClustered(
       rows.toDF("day", "user", "payload"), "day", "user", zDir, files = 64)
     val (dLo, dHi, uLo, uHi) = (8L * S, 16L * S - 1, 8L * S, 16L * S - 1)
@@ -102,17 +100,15 @@ class ZOrderSpec extends AnyFunSuite with SparkSpec {
     val frac = hit.toDouble / d.size
     info(f"wide-domain z-order overlap fraction: $frac%.3f")
     assert(frac <= 0.15, f"wide-domain pruning lost: $frac%.3f")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(zDir))
   }
 
   test("negative key values are rejected loudly (sign-extended shifts would " +
       "silently scramble the Morton layout)") {
     import spark.implicits._
     val df = Seq((1L, 5L), (-3L, 7L), (2L, 9L)).toDF("a", "b")
-    val out = java.nio.file.Files.createTempDirectory("graft_zneg").toString
+    val out = tempDir("zneg")
     val e = intercept[IllegalArgumentException](
       graft.sources.ZOrder.writeClustered(df, "a", "b", out, files = 2))
     assert(e.getMessage.contains("negative") && e.getMessage.contains("'a'"))
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 }
