@@ -156,10 +156,10 @@ object Cli {
     // aggregator.py:391-398). A `.ncd` DST is the DISTRIBUTED twin: a
     // directory of `.nc` granules written executor-side
     // (NetCDFWrite.writeGranules) — the path a corpus-sized output must
-    // take, since one .nc file is single-writer by construction (above
-    // its row gate the single-file write streams in bounded memory
-    // instead, but stays one writer). Any other DST is a parquet granule
-    // set plus its attribute sidecar
+    // take, since one .nc file is single-writer by construction (the
+    // single-file write streams its sorted rows through the driver in
+    // bounded memory, but stays one writer). Any other DST is a parquet
+    // granule set plus its attribute sidecar
     val agg = Aggregate.run(spark, granules, dst, config)
     val ncOpts = graft.sources.NetCDFWrite.NcOpts(chunkRows = chunkSize)
     if (dst.endsWith(".nc"))

@@ -3447,7 +3447,13 @@ object PipelineQueries {
 
   /** The distinct-level verdict pass of [[mmPhashNeardup]], split out so
     * the min-owner decomposition is property-testable against the
-    * pairwise definition on engineered hash sets (MultimodalSpec). */
+    * pairwise definition on engineered hash sets (MultimodalSpec).
+    *
+    * Precondition: `phash` is non-null. The inner `join(dp, "phash")`
+    * drops every row whose `phash` is null, so such an image gets no
+    * verdict row at all (not `kept = true`). [[mmPhashNeardup]] meets it
+    * by keeping only rows with a null `error`, which always carry a
+    * hash; any other caller must filter or handle null hashes first. */
   private[graft] def phashNeardupVerdicts(ph: DataFrame): DataFrame = {
     val dp = ph.groupBy("phash").agg(min(col("event_id")).as("gmin"))
     val bands = dp.select(col("phash"), col("gmin"),

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.core.AggConfig
 import Hdf5Writer._
@@ -32,34 +33,23 @@ import Hdf5Writer._
   * fixed per file (record dimension, dimension sizes, attributes, each
   * variable's encoding, the chunk extent) from a small per-variable
   * [[VarStats]]; [[assemble]] then makes ONE pass over the rows in record
-  * order. [[writeFile]] takes the stats from its row buffer,
-  * [[writeSingleStreamed]] from one Spark aggregate — so the same rows
-  * give the same bytes (`.nc` and `.stats.json`) on both sides of
-  * [[write]]'s row gate.
+  * order. The stats have one definition, [[statsOf]]: [[writeFile]] runs
+  * it over its row buffer, [[write]] per partition inside its count job.
   *
   * Scale shape: one `.nc` file is inherently a single-writer artifact
   * (the reference is a single process for the same reason), so
   * [[write]] streams the FINISHED aggregate — already reduced by the
-  * distributed pipeline — through the driver: row-buffered up to
-  * `maxRows`, then failing over to [[writeSingleStreamed]] (one chunk
-  * per variable in memory, unbounded output size — the reference's own
-  * node-by-node streaming, aggregator.py:239-359). For PARALLEL large
-  * outputs, [[writeGranules]] writes a partitioned `.nc` granule SET
-  * instead: each range partition writes its own file executor-side,
-  * fully parallel, and the set re-ingests through [[NetCDFIngest]] (the
-  * same granule model the inputs use).
+  * distributed pipeline — through the driver in one path: sorted range
+  * partitions of at most about `maxRows` rows, fetched one at a time
+  * straight into the assembler (one chunk per variable in memory,
+  * unbounded output size — the reference's own node-by-node streaming,
+  * aggregator.py:239-359). For PARALLEL large outputs, [[writeGranules]]
+  * writes a partitioned `.nc` granule SET instead: each range partition
+  * writes its own file executor-side, fully parallel, and the set
+  * re-ingests through [[NetCDFIngest]] (the same granule model the
+  * inputs use).
   */
 object NetCDFWrite {
-
-  /** Full passes over the sorted frame made by [[writeSingleStreamed]]
-    * since the last reset — instrumentation for the pass-count pins. The
-    * structural invariant: ONE stats aggregate (skipped when no variable
-    * needs stats) + ONE row pass = 2, independent of variable count (the
-    * cache-materializing count() is the load, not a pass). The in-memory
-    * side never touches it. A regression back to per-variable column
-    * passes bumps this by the variable count. */
-  private[graft] val passCounter =
-    new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Storage options for record (unlimited-dim) variables: records per
     * HDF5 chunk (the reference's `-c udim:chunksize`), zlib deflate
@@ -188,11 +178,23 @@ object NetCDFWrite {
 
   /** Whole-frame facts one variable's plan needs: its longest string
     * (UTF-8 bytes), its integer range, and its longest inner array.
-    * Zero where the column has none; an integer column with no value
-    * may read as (0, 0) or as an empty range (lo > hi) — both fit 32
-    * bits. */
-  private final case class VarStats(strBytes: Long = 0L, lo: Long = 0L,
-      hi: Long = 0L, arrLen: Long = 0L)
+    * The defaults are the facts of no rows (an empty integer range,
+    * lo > hi, which fits 32 bits); `++` merges the facts of two disjoint
+    * row sets, so any split of the rows, in any order, gives the same
+    * result. */
+  private final case class VarStats(strBytes: Long = 0L,
+      lo: Long = Long.MaxValue, hi: Long = Long.MinValue, arrLen: Long = 0L) {
+    def ++(o: VarStats): VarStats = VarStats(strBytes max o.strBytes,
+      lo min o.lo, hi max o.hi, arrLen max o.arrLen)
+  }
+
+  /** The row count and per-column [[VarStats]] of a set of rows; `++`
+    * merges two disjoint sets (the same columns on both sides). */
+  private final case class FrameStats(rows: Long,
+      vars: Map[String, VarStats]) {
+    def ++(o: FrameStats): FrameStats = FrameStats(rows + o.rows,
+      vars.map { case (c, s) => c -> (s ++ o.vars(c)) })
+  }
 
   /** One output variable as [[assemble]] writes it: its dataset (no data
     * yet), the row field it reads, its encoding, and how many rows its
@@ -216,6 +218,11 @@ object NetCDFWrite {
     case e => (e, false)
   }
 
+  private def isIntegral(t: DataType): Boolean = t match {
+    case LongType | IntegerType | ShortType | ByteType => true
+    case _ => false
+  }
+
   /** The config's variables a frame of `schema` writes. Only these go to
     * the file (pipeline bookkeeping columns like `is_fill` stay out of
     * the product, matching the reference output's shape). */
@@ -223,48 +230,60 @@ object NetCDFWrite {
       : Seq[AggConfig.VarSpec] =
     config.vars.filter(v => schema.fieldNames.contains(outNameOf(v)))
 
-  /** [[VarStats]] of rows held in memory: the figures
-    * [[writeSingleStreamed]]'s one aggregate computes in Spark. */
-  private def statsOf(schema: StructType, rows: Iterable[Row],
-      outVars: Seq[AggConfig.VarSpec]): Map[String, VarStats] =
-    outVars.flatMap { v =>
-      val c = outNameOf(v)
-      val i = schema.fieldIndex(c)
+  /** The output columns whose [[VarStats]] the plan reads: strings
+    * (cell width), integers (32- or 64-bit) and arrays (inner extent). */
+  private def statColsOf(config: AggConfig.Config, schema: StructType)
+      : Seq[String] =
+    outVarsOf(config, schema).map(outNameOf).filter { c =>
       val (elemT, isArr) = elemOf(schema(c).dataType)
-      val isStr = elemT == StringType
-      val isInt = elemT match {
-        case LongType | IntegerType | ShortType | ByteType => true
-        case _ => false
-      }
-      if (!isStr && !isInt && !isArr) None
-      else {
-        var w, len = 0L
-        var lo = Long.MaxValue
-        var hi = Long.MinValue
-        def elem(x: Any): Unit = if (x != null) {
-          if (isStr) w = math.max(w, x.toString.getBytes("UTF-8").length)
-          else if (isInt) {
-            val l = x.asInstanceOf[Number].longValue()
-            if (l < lo) lo = l
-            if (l > hi) hi = l
-          }
-        }
-        rows.foreach { r =>
-          r.get(i) match {
-            case s: scala.collection.Seq[_] if isArr =>
-              len = math.max(len, s.length.toLong)
-              if (isStr || isInt) s.foreach(elem)
-            case x if !isArr => elem(x)
-            case _ => // null array
-          }
-        }
-        Some(c -> VarStats(w, lo, hi, len))
-      }
-    }.toMap
+      isArr || elemT == StringType || isIntegral(elemT)
+    }
 
-  /** Plan one file of `total` rows of `schema`. */
+  /** [[FrameStats]] of the columns `cols` over `rows` of `schema`, in one
+    * pass. Row order does not matter and partial results merge, so
+    * [[write]] runs it per partition inside its count job and
+    * [[writeFile]] over its buffer, with the same result. */
+  private def statsOf(schema: StructType, rows: Iterator[Row],
+      cols: Seq[String]): FrameStats = {
+    val idx = cols.map(schema.fieldIndex).toArray
+    val elems = cols.map(c => elemOf(schema(c).dataType)).toArray
+    val isStr = elems.map(_._1 == StringType)
+    val isInt = elems.map(e => isIntegral(e._1))
+    val isArr = elems.map(_._2)
+    val w, len = new Array[Long](cols.length)
+    val lo = Array.fill(cols.length)(Long.MaxValue)
+    val hi = Array.fill(cols.length)(Long.MinValue)
+    def elem(k: Int, x: Any): Unit = if (x != null) {
+      if (isStr(k)) w(k) = math.max(w(k), x.toString.getBytes("UTF-8").length)
+      else if (isInt(k)) {
+        val l = x.asInstanceOf[Number].longValue()
+        if (l < lo(k)) lo(k) = l
+        if (l > hi(k)) hi(k) = l
+      }
+    }
+    var n = 0L
+    rows.foreach { r =>
+      n += 1
+      var k = 0
+      while (k < idx.length) {
+        r.get(idx(k)) match {
+          case s: scala.collection.Seq[_] if isArr(k) =>
+            len(k) = math.max(len(k), s.length.toLong)
+            if (isStr(k) || isInt(k)) s.foreach(elem(k, _))
+          case x if !isArr(k) => elem(k, x)
+          case _ => // null array
+        }
+        k += 1
+      }
+    }
+    FrameStats(n, cols.indices.map(k =>
+      cols(k) -> VarStats(w(k), lo(k), hi(k), len(k))).toMap)
+  }
+
+  /** Plan one file of `schema` from the [[FrameStats]] of its rows. */
   private def planFile(schema: StructType, config: AggConfig.Config,
-      total: Long, stats: Map[String, VarStats], opts: NcOpts): FilePlan = {
+      stats: FrameStats, opts: NcOpts): FilePlan = {
+    val total = stats.rows
     val recDim = config.primaryUdim
       .orElse(config.dims.find(_.isUnlimited))
       .map(_.name)
@@ -272,7 +291,7 @@ object NetCDFWrite {
     val unlimited = config.dim(recDim).exists(_.isUnlimited)
     val outVars = outVarsOf(config, schema)
     def statOf(v: AggConfig.VarSpec) =
-      stats.getOrElse(outNameOf(v), VarStats())
+      stats.vars.getOrElse(outNameOf(v), VarStats())
 
     // resolved dimension sizes: record dim = row count; fixed dims from
     // the config, falling back to the MAX observed array length of every
@@ -511,11 +530,10 @@ object NetCDFWrite {
     * come from one pass over the buffer, then [[assemble]] writes it. */
   def writeFile(dst: java.nio.file.Path, schema: StructType,
       rows: collection.IndexedSeq[Row], config: AggConfig.Config,
-      globalAttrs: Map[String, String], opts: NcOpts = NcOpts()): Unit = {
-    val stats = statsOf(schema, rows, outVarsOf(config, schema))
-    assemble(dst, planFile(schema, config, rows.size, stats, opts),
+      globalAttrs: Map[String, String], opts: NcOpts = NcOpts()): Unit =
+    assemble(dst, planFile(schema, config,
+      statsOf(schema, rows.iterator, statColsOf(config, schema)), opts),
       rows.iterator, globalAttrs, opts)
-  }
 
   /** The sort/order column of an aggregated frame (scalar `index_time`
     * stands in for a multidim index variable, matching Aggregate.run). */
@@ -525,142 +543,83 @@ object NetCDFWrite {
       if (columns.contains("index_time")) "index_time" else ivar
     }.filter(columns.contains)
 
-  /** Row-count switchover for the single-file path: up to this many rows
-    * the frame is row-buffered driver-side and the plan's stats come
-    * from the buffer; above it, [[write]] fails over to
-    * [[writeSingleStreamed]] (stats from one Spark aggregate, one chunk
-    * per variable in memory). Both sides write the same bytes. */
+  /** The one persist/count/arrange step of [[write]] and [[writeGranules]].
+    *
+    * `df` is persisted unless the caller already cached it, and only a
+    * cache made here is released afterwards. ONE job then returns the
+    * row count with the [[VarStats]] of `statCols`, folded per partition
+    * over those columns only (filling the cache on first use; adaptive
+    * execution runs the frame's own shuffles, and the fill of a fresh
+    * cache, as jobs of their own). `body` gets the rows sorted by the
+    * index column into `ceil(total / perPart)` range partitions (a single
+    * partition is `coalesce(1).sortWithinPartitions`, with no sampling
+    * job), or, with no index column, coalesced to that many. `perPart`
+    * must be >= 1. */
+  private def arranged[A](df: DataFrame, config: AggConfig.Config,
+      statCols: Seq[String], perPart: Long)(
+      body: (DataFrame, FrameStats) => A): A = {
+    val mine = df.storageLevel == StorageLevel.NONE
+    val cached = if (mine) df.persist(StorageLevel.MEMORY_AND_DISK) else df
+    try {
+      val sub = cached.select(statCols.map(c => col(s"`$c`")): _*)
+      val schema = sub.schema
+      val stats = sub.rdd
+        .mapPartitions(it => Iterator(statsOf(schema, it, statCols)))
+        .fold(FrameStats(0L, statCols.map(_ -> VarStats()).toMap))(_ ++ _)
+      val parts = math.max(1, math.ceil(stats.rows.toDouble / perPart).toInt)
+      val rows = sortColOf(config, df.columns.toSet) match {
+        case Some(c) if parts > 1 =>
+          cached.repartitionByRange(parts, col(c)).sortWithinPartitions(col(c))
+        case Some(c) => cached.coalesce(1).sortWithinPartitions(col(c))
+        case None => cached.coalesce(parts)
+      }
+      body(rows, stats)
+    } finally if (mine) cached.unpersist()
+  }
+
+  /** Rows [[write]] fetches to the driver at once by default. */
   val DefaultSingleFileMaxRows: Long = 16L << 20
 
   /** Write an aggregated frame (as built by [[graft.Aggregate.run]]) out
-    * as ONE `.nc` file.
+    * as ONE `.nc` file, in one path whatever its size.
     *
-    * The frame is persisted and counted first, as in [[writeGranules]]:
-    * the count runs the frame's pipeline once, on every slot, and both
-    * branches read back from that cache. Up to `maxRows` the cached rows
-    * are sorted by the index column in one task
-    * (`coalesce(1).sortWithinPartitions`) and stream to the driver
-    * (`toLocalIterator`, never one all-partitions `collect()`) into the
-    * row buffer that [[writeFile]] writes. Above it the write FAILS OVER
-    * to [[writeSingleStreamed]] on the cached frame (distributed
-    * total-order sort, one chunk per variable in driver memory,
-    * unbounded output size), so a corpus-sized single `.nc` always
-    * succeeds with bounded memory (the reference's single process
-    * streams node-by-node into one file the same way,
-    * aggregator.py:239-359; [[writeGranules]] / CLI `.ncd` remains the
-    * PARALLEL path). Both branches run the same assembler, so for a
-    * frame with a unique index they write identical `.nc` and
-    * `.stats.json` bytes. */
+    * [[arranged]] persists the frame (unless the caller cached it) and
+    * runs one job for its row count and the plan's [[VarStats]]; the
+    * rows, sorted by the index column into `ceil(total / maxRows)` range
+    * partitions, then stream to the driver one partition per job
+    * (`toLocalIterator`) straight into [[assemble]], with no driver row
+    * buffer. A frame of up to `maxRows` rows is sorted in one task and
+    * fetched in one job. Driver memory is one fetched partition plus one
+    * chunk per record variable, and the output size is unbounded (the
+    * reference's single process likewise streams node-by-node into one
+    * file, aggregator.py:239-359; [[writeGranules]] / CLI `.ncd` is the
+    * PARALLEL path). Neither the plan's stats nor the sidecar's min/max
+    * depend on row order, so for a frame with a unique index every
+    * `maxRows` writes the same `.nc` and `.stats.json` bytes. A record
+    * dimension that is not unlimited is stored contiguous, which needs
+    * every row in one fetch: such a frame over `maxRows` rows is
+    * rejected before the row pass. */
   def write(df: DataFrame, dst: String, config: AggConfig.Config,
       globalAttrs: Map[String, String],
       opts: NcOpts = NcOpts(),
       maxRows: Long = DefaultSingleFileMaxRows): Unit = {
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val total = cached.count()
-      if (total > maxRows)
-        writeSingleStreamed(cached, dst, config, globalAttrs, opts)
-      else {
-        val sorted = sortColOf(config, df.columns.toSet)
-          .map(c => cached.coalesce(1).sortWithinPartitions(col(c)))
-          .getOrElse(cached)
-        val buf = new scala.collection.mutable.ArrayBuffer[Row](total.toInt)
-        val it = sorted.toLocalIterator()
-        while (it.hasNext) buf += it.next()
-        writeFile(java.nio.file.Paths.get(dst), sorted.schema, buf, config,
-          globalAttrs, opts)
-      }
-    } finally cached.unpersist()
+    val fetch = math.max(maxRows, 1L)
+    arranged(df, config, statColsOf(config, df.schema), fetch) {
+      (rows, stats) =>
+        val plan = planFile(rows.schema, config, stats, opts)
+        plan.vars.find(p => p.rec && !p.ds.unlimited0).foreach { p =>
+          require(stats.rows <= fetch, s"${p.ds.name}: ${stats.rows} " +
+            s"records over $fetch rows per fetch need the record " +
+            s"dimension ${plan.recDim} to be unlimited (chunked layout)")
+        }
+        assemble(java.nio.file.Paths.get(dst), plan,
+          rows.toLocalIterator().asScala, globalAttrs, opts)
+    }
   }
 
   /** Default record count per chunk (bounded further so the chunks of
     * all record variables stay under ~256 MiB together). */
   val DefaultStreamChunkRows: Int = 1 << 18
-
-  /** Streamed single-file `.nc` assembly for outputs too large to hold
-    * driver-side: ONE stats aggregate feeds the file plan (string width,
-    * int narrowing, ragged inner-dim extents), then [[assemble]] makes
-    * ONE row pass over the cached sorted frame (`toLocalIterator`). Peak
-    * driver memory is one chunk per record variable (≤ ~256 MiB
-    * together), independent of row count; the output file size is
-    * unbounded (64-bit writer sink). Writes the same bytes as
-    * [[writeFile]] on the same rows, stats sidecar included. A record
-    * dimension that is not unlimited is rejected: contiguous storage
-    * needs every row in memory. Single-writer by construction;
-    * [[writeGranules]] stays the parallel path. */
-  def writeSingleStreamed(df: DataFrame, dst: String,
-      config: AggConfig.Config, globalAttrs: Map[String, String],
-      opts: NcOpts = NcOpts()): Unit = {
-    import org.apache.spark.sql.functions.{expr, max, min, size}
-    // TOTAL-ORDER sort: the two passes must see the SAME row order
-    // even if a cached partition is evicted and recomputed mid-write — a
-    // sort on the index column alone leaves tie order shuffle-dependent,
-    // which would tear records across columns. Tie-breaking on every
-    // remaining column makes reordering observable only between fully
-    // identical rows, where it cannot change the output.
-    val sorted = sortColOf(config, df.columns.toSet)
-      .map { c =>
-        df.orderBy((col(c) +: df.columns.filterNot(_ == c)
-          .map(n => col(s"`$n`"))): _*)
-      }
-      .getOrElse(df)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // the count doubles as cache materialization
-      val total = sorted.count()
-      val schema = sorted.schema
-      val outVars = outVarsOf(config, schema)
-
-      // ---- ONE stats job: per-variable string width / int range /
-      // observed inner length ([[VarStats]], as statsOf computes it)
-      val aggs = Seq.newBuilder[org.apache.spark.sql.Column]
-      outVars.foreach { v =>
-        val c = outNameOf(v)
-        val (elemT, isArr) = elemOf(schema(c).dataType)
-        elemT match {
-          case StringType =>
-            aggs += (if (isArr)
-              max(expr(s"aggregate(`$c`, 0, (a, x) -> greatest(a, octet_length(x)))"))
-            else max(expr(s"octet_length(`$c`)"))).as(s"__w_$c")
-          case LongType | IntegerType | ShortType | ByteType =>
-            aggs += (if (isArr)
-              min(expr(s"aggregate(`$c`, ${Long.MaxValue}L, (a, x) -> least(a, CAST(x AS BIGINT)))"))
-            else min(col(s"`$c`").cast(org.apache.spark.sql.types.LongType)))
-              .as(s"__lo_$c")
-            aggs += (if (isArr)
-              max(expr(s"aggregate(`$c`, ${Long.MinValue}L, (a, x) -> greatest(a, CAST(x AS BIGINT)))"))
-            else max(col(s"`$c`").cast(org.apache.spark.sql.types.LongType)))
-              .as(s"__hi_$c")
-          case _ => ()
-        }
-        if (isArr) aggs += max(size(col(s"`$c`"))).as(s"__n_$c")
-      }
-      val aggCols = aggs.result()
-      val stats: Map[String, VarStats] =
-        if (aggCols.isEmpty) Map.empty
-        else {
-          passCounter.incrementAndGet()
-          val r = sorted.agg(aggCols.head, aggCols.tail: _*).head()
-          def stat(key: String): Long =
-            if (!r.schema.fieldNames.contains(key) ||
-                r.isNullAt(r.fieldIndex(key))) 0L
-            else r.getAs[Number](key).longValue()
-          outVars.map(outNameOf).map(c => c -> VarStats(stat(s"__w_$c"),
-            stat(s"__lo_$c"), stat(s"__hi_$c"), stat(s"__n_$c"))).toMap
-        }
-
-      val plan = planFile(schema, config, total, stats, opts)
-      plan.vars.find(p => p.rec && !p.ds.unlimited0).foreach { p =>
-        throw new IllegalArgumentException(s"${p.ds.name}: streamed " +
-          s"single-file output needs the record dimension ${plan.recDim} " +
-          "to be unlimited (chunked layout)")
-      }
-      // ---- THE single data pass
-      passCounter.incrementAndGet()
-      assemble(java.nio.file.Paths.get(dst), plan,
-        sorted.toLocalIterator().asScala, globalAttrs, opts)
-    } finally sorted.unpersist()
-  }
 
   /** Distributed `.nc` granule-SET output: range-partition on the index
     * column and write one `.nc` file per partition executor-side (the
@@ -676,34 +635,22 @@ object NetCDFWrite {
         * jobs' `part-00000.nc` never collide */
       namePrefix: String = "part"): Seq[String] = {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dstDir))
-    val sortCol = sortColOf(config, df.columns.toSet)
-    // Persist before the sizing count: the count job and the write job
-    // would otherwise each execute the full upstream lineage — doubling
-    // the most expensive scan in exactly the scale path this method
-    // exists for. The write pass reads back from the cache (spilling to
-    // local disk when the aggregate exceeds executor memory).
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val total = cached.count()
-      val parts = math.max(1, math.ceil(total.toDouble /
-        math.max(maxRecordsPerFile, 1)).toInt)
-      val arranged = sortCol match {
-        case Some(c) if parts > 1 =>
-          cached.repartitionByRange(parts, col(c)).sortWithinPartitions(col(c))
-        case Some(c) => cached.coalesce(1).sortWithinPartitions(col(c))
-        case None => cached.coalesce(parts)
-      }
-      val schema = arranged.schema
-      arranged.foreachPartition { (it: Iterator[Row]) =>
-        val rows = it.toIndexedSeq
-        if (rows.nonEmpty) {
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          writeFile(
-            java.nio.file.Paths.get(dstDir, f"$namePrefix%s-$pid%05d.nc"),
-            schema, rows, config, globalAttrs, opts)
+    // the sizing count and the write read the same cache, so the
+    // upstream lineage runs once (spilling to local disk when the
+    // aggregate exceeds executor memory)
+    arranged(df, config, Nil, math.max(maxRecordsPerFile, 1).toLong) {
+      (rows, _) =>
+        val schema = rows.schema
+        rows.foreachPartition { (it: Iterator[Row]) =>
+          val part = it.toIndexedSeq
+          if (part.nonEmpty) {
+            val pid = org.apache.spark.TaskContext.getPartitionId()
+            writeFile(
+              java.nio.file.Paths.get(dstDir, f"$namePrefix%s-$pid%05d.nc"),
+              schema, part, config, globalAttrs, opts)
+          }
         }
-      }
-    } finally cached.unpersist()
+    }
     // keep the fleet-level planning manifest fresh: unchanged granules
     // reuse their prior entries (size-stat only), new ones cost one
     // header parse each — so the per-batch refresh of a streaming feed

@@ -65,32 +65,28 @@ class IngestErrorSpec extends AnyFunSuite with SparkSpec {
 
   test("strict ingest of a truncated granule throws the typed record " +
       "naming the file and the stage") {
-    val tmp = Files.createTempDirectory("graft_ingest_err")
-    try {
-      val good = tmp.resolve("good.nc")
-      val cut = tmp.resolve("truncated.nc")
-      granule(good, 0.0)
-      granule(cut, 5000.0)
-      val bytes = Files.readAllBytes(cut)
-      Files.write(cut, bytes.take(bytes.length / 2))
-      val rec = strictError(tmp, good, cut)
-      assert(rec.path === cut.toString && rec.stage === "header")
-      assert(rec.error.startsWith("IndexOutOfBoundsException"), rec.error)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    val tmp = java.nio.file.Paths.get(tempDir("ingest_err"))
+    val good = tmp.resolve("good.nc")
+    val cut = tmp.resolve("truncated.nc")
+    granule(good, 0.0)
+    granule(cut, 5000.0)
+    val bytes = Files.readAllBytes(cut)
+    Files.write(cut, bytes.take(bytes.length / 2))
+    val rec = strictError(tmp, good, cut)
+    assert(rec.path === cut.toString && rec.stage === "header")
+    assert(rec.error.startsWith("IndexOutOfBoundsException"), rec.error)
   }
 
   test("strict ingest of a granule with a corrupt data chunk names the " +
       "decode stage") {
-    val tmp = Files.createTempDirectory("graft_ingest_err")
-    try {
-      val good = tmp.resolve("good.nc")
-      val bad = tmp.resolve("corrupt.nc")
-      granule(good, 0.0)
-      granule(bad, 5000.0)
-      corruptDataChunk(bad)
-      val rec = strictError(tmp, good, bad)
-      assert(rec.path === bad.toString && rec.stage === "decode")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+    val tmp = java.nio.file.Paths.get(tempDir("ingest_err"))
+    val good = tmp.resolve("good.nc")
+    val bad = tmp.resolve("corrupt.nc")
+    granule(good, 0.0)
+    granule(bad, 5000.0)
+    corruptDataChunk(bad)
+    val rec = strictError(tmp, good, bad)
+    assert(rec.path === bad.toString && rec.stage === "decode")
   }
 
   test("slot-sized ingest tasks: one bad granule among more granules " +

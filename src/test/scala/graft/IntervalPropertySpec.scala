@@ -58,13 +58,11 @@ class IntervalPropertySpec extends AnyFunSuite with SparkSpec {
   }
 
   /** Run `f` on a temp dir holding `rows` as its events table; the dir
-    * is deleted when `f` returns. */
+    * is deleted when the suite ends. */
   private def withDir[T](rows: Seq[(Long, Long, Long)])(f: String => T): T = {
-    val d = java.nio.file.Files.createTempDirectory("graft_prop3").toFile
-    try {
-      eventsDf(rows).write.mode("overwrite").parquet(s"$d/events.parquet")
-      f(d.toString)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(d)
+    val d = tempDir("prop3")
+    eventsDf(rows).write.mode("overwrite").parquet(s"$d/events.parquet")
+    f(d)
   }
 
   test("distributed interval union == naive reference on random inputs") {

@@ -141,30 +141,28 @@ class MultimodalSpec extends AnyFunSuite with SparkSpec {
   test("corrupt stored blob quarantines the row, not the job") {
     import spark.implicits._
     val events = spark.range(0, 10).toDF("event_id")
-    val d = java.nio.file.Files.createTempDirectory("graft_media_spec")
-    try {
-      val path = s"$d/media.parquet"
-      graft.multimodal.MediaStore.write(events, path)
-      // truncate id 3's PNG mid-stream: a stored-blob corruption the
-      // decode pass must survive
-      val broken = spark.read.parquet(path)
-        .as[(Long, Array[Byte], Array[Byte], Array[Byte])]
-        .map { case (id, png, wav, avi) =>
-          (id, if (id == 3L) java.util.Arrays.copyOf(png, png.length - 7)
-          else png, wav, avi)
-        }.toDF("event_id", "png", "wav", "avi")
-      val rows = Multimodal.imageFeaturesChecked(
-        broken.select("event_id", "png")).collect()
-      val bad = rows.filter(!_.isNullAt(6))
-      assert(bad.map(_.getLong(0)).toSeq === Seq(3L),
-        "exactly the corrupted row must quarantine")
-      assert(bad.head.isNullAt(1), "quarantined rows carry no features")
-      // the surviving rows decode to the exact formula features
-      val r7 = rows.find(_.getLong(0) == 7L).get
-      assert(r7.getLong(1) === MediaSynth.imageWidth(7L).toLong)
-      assert(r7.getLong(2) === MediaSynth.imageHeight(7L).toLong)
-      assert(rows.count(_.isNullAt(6)) === 9)
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(d.toFile)
+    val d = tempDir("media_spec")
+    val path = s"$d/media.parquet"
+    graft.multimodal.MediaStore.write(events, path)
+    // truncate id 3's PNG mid-stream: a stored-blob corruption the
+    // decode pass must survive
+    val broken = spark.read.parquet(path)
+      .as[(Long, Array[Byte], Array[Byte], Array[Byte])]
+      .map { case (id, png, wav, avi) =>
+        (id, if (id == 3L) java.util.Arrays.copyOf(png, png.length - 7)
+        else png, wav, avi)
+      }.toDF("event_id", "png", "wav", "avi")
+    val rows = Multimodal.imageFeaturesChecked(
+      broken.select("event_id", "png")).collect()
+    val bad = rows.filter(!_.isNullAt(6))
+    assert(bad.map(_.getLong(0)).toSeq === Seq(3L),
+      "exactly the corrupted row must quarantine")
+    assert(bad.head.isNullAt(1), "quarantined rows carry no features")
+    // the surviving rows decode to the exact formula features
+    val r7 = rows.find(_.getLong(0) == 7L).get
+    assert(r7.getLong(1) === MediaSynth.imageWidth(7L).toLong)
+    assert(r7.getLong(2) === MediaSynth.imageHeight(7L).toLong)
+    assert(rows.count(_.isNullAt(6)) === 9)
   }
 
   test("zcr: crossing counts match a direct fold of the formula samples; " +

@@ -2,20 +2,25 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.AggConfig._
 import graft.sources.{NetCDF4, NetCDFWrite}
 
-/** Single-file `.nc` output at corpus scale: up to `maxRows` the frame is
-  * buffered in driver memory; above it, `write` FAILS OVER to the
-  * streamed assembly — one row pass, one chunk per variable in driver
-  * memory, unbounded output size — the reference's own node-by-node
-  * streaming model (aggregator.py:239-359). Both sides plan the file the
-  * same way and run the same assembler, so for a frame with a unique
-  * index (what `Aggregate` emits) they must write byte-identical `.nc`
-  * and `.stats.json` files.
+/** Single-file `.nc` output at corpus scale: `write` has one path. One
+  * job counts the frame and gathers the plan's stats; the rows, sorted
+  * by the index into range partitions of about `maxRows` rows, then
+  * stream to the driver one partition per job into the assembler — one
+  * row pass, one chunk per variable in driver memory, unbounded output
+  * size — the reference's own node-by-node streaming model
+  * (aggregator.py:239-359). "In-memory" below means one fetch
+  * (`maxRows >= total`), "streamed" several; for a frame with a unique
+  * index (what `Aggregate` emits) every `maxRows` must write
+  * byte-identical `.nc` and `.stats.json` files.
   */
 class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
 
@@ -36,6 +41,49 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
         s"$clue: $a$ext and $b$ext differ")
     }
 
+  /** Writes `df` with `maxRows` = 1, 37 and 1 << 20 (one row per fetch,
+    * several, one fetch for the whole frame), asserts the three files
+    * hold the same bytes, and returns the one-row-per-fetch file. */
+  private def writeAcrossFetches(df: DataFrame, dir: String, name: String,
+      c: Config, attrs: Map[String, String],
+      opts: NetCDFWrite.NcOpts = NetCDFWrite.NcOpts()): String = {
+    val paths = Seq(1L, 37L, 1L << 20).map { m =>
+      val p = s"$dir/$name-$m.nc"
+      NetCDFWrite.write(df, p, c, attrs, opts, maxRows = m)
+      p
+    }
+    paths.tail.foreach(assertSameBytes(paths.head, _, name))
+    paths.head
+  }
+
+  /** The Spark jobs `f` runs. Listener events arrive asynchronously, so
+    * `f` runs in its own job group and a later sentinel job, whose start
+    * event comes after all of `f`'s, marks when the count is complete. */
+  private def jobsOf(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("ncguard-jobs") => jobs.incrementAndGet()
+          case Some("ncguard-sentinel") => drained.countDown()
+          case _ =>
+        }
+    }
+    def inGroup(g: String)(body: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup("ncguard-jobs")(f)
+      inGroup("ncguard-sentinel")(sc.parallelize(Seq(1), 1).count())
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
   private def shuffledFrame(n: Int): DataFrame =
     spark.range(n).selectExpr(
         s"cast((id * 7919) % $n as double) as t", "cast(id as double) * 2 as x")
@@ -43,15 +91,14 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
 
   test("above maxRows, write fails over to the streamed columnar assembly") {
     val tmp = tempDir("ncguard")
-    // maxRows = 100 forces the streamed path; chunkRows = 64 forces real
-    // multi-chunk output through the interleaved chunk streams
-    NetCDFWrite.passCounter.set(0)
-    NetCDFWrite.write(shuffledFrame(2000), s"$tmp/out.nc", cfg,
-      globalAttrs = Map("title" -> "streamed"), maxRows = 100,
-      opts = NetCDFWrite.NcOpts(chunkRows = Some(64)))
-    // the streamed assembly's one data pass (doubles need no stats job)
-    assert(NetCDFWrite.passCounter.get === 1,
-      "over the gate the write must run the streamed assembly")
+    // maxRows = 100 fetches the rows in about 20 sorted range
+    // partitions; chunkRows = 64 forces real multi-chunk output through
+    // the interleaved chunk streams
+    for ((name, maxRows) <- Seq("out" -> 100L, "one" -> (1L << 20)))
+      NetCDFWrite.write(shuffledFrame(2000), s"$tmp/$name.nc", cfg,
+        globalAttrs = Map("title" -> "streamed"), maxRows = maxRows,
+        opts = NetCDFWrite.NcOpts(chunkRows = Some(64)))
+    assertSameBytes(s"$tmp/out.nc", s"$tmp/one.nc", "20 fetches vs one")
     val nc = NetCDF4.open(s"$tmp/out.nc")
     assert(nc.attrs("title") === "streamed")
     val t = nc.read(nc.vars.find(_.name == "t").get).asInstanceOf[Array[Double]]
@@ -69,11 +116,8 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
 
   test("streamed and in-memory assemblies produce equivalent files") {
     val tmp = tempDir("ncguard_eq")
-    NetCDFWrite.write(shuffledFrame(500), s"$tmp/mem.nc", cfg,
-      globalAttrs = Map("k" -> "v"), maxRows = 10000)
-    NetCDFWrite.writeSingleStreamed(shuffledFrame(500), s"$tmp/str.nc", cfg,
+    writeAcrossFetches(shuffledFrame(500), tmp, "default-chunking", cfg,
       Map("k" -> "v"))
-    assertSameBytes(s"$tmp/mem.nc", s"$tmp/str.nc", "default chunking")
   }
 
   test("over the gate, write leaves the same stats sidecar as under it") {
@@ -92,16 +136,12 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
         VarSpec("q", Seq("time"), "int")),
       attrs = Nil)
     val opts = NetCDFWrite.NcOpts(chunkRows = Some(64))
-    NetCDFWrite.write(df, s"$tmp/mem.nc", c, Map.empty, opts,
-      maxRows = 1 << 20)
-    NetCDFWrite.passCounter.set(0)
-    NetCDFWrite.write(df, s"$tmp/str.nc", c, Map.empty, opts, maxRows = 0)
-    assert(NetCDFWrite.passCounter.get === 2, "maxRows = 0 must stream")
+    val str = writeAcrossFetches(df, tmp, "sidecar-frame", c, Map.empty,
+      opts)
     val sidecar =
-      Files.readString(java.nio.file.Paths.get(s"$tmp/str.nc.stats.json"))
+      Files.readString(java.nio.file.Paths.get(s"$str.stats.json"))
     assert(Seq("time", "x", "q").forall(k => sidecar.contains(s"\"$k\"")),
       sidecar)
-    assertSameBytes(s"$tmp/mem.nc", s"$tmp/str.nc", "sidecar frame")
   }
 
   test("streamed path: strings and ragged arrays with stats-planned extents") {
@@ -119,9 +159,9 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
         VarSpec("name", Seq("record"), "string"),
         VarSpec("vals", Seq("record", "d2"), "double")),
       attrs = Nil)
-    NetCDFWrite.writeSingleStreamed(df, s"$tmp/out.nc", c, Map.empty,
-      opts = NetCDFWrite.NcOpts(chunkRows = Some(32)))
-    val nc = NetCDF4.open(s"$tmp/out.nc")
+    val out = writeAcrossFetches(df, tmp, "out", c, Map.empty,
+      NetCDFWrite.NcOpts(chunkRows = Some(32)))
+    val nc = NetCDF4.open(out)
     val names = nc.read(nc.vars.find(_.name == "name").get)
       .asInstanceOf[Array[String]]
     assert(names.length == 300)
@@ -207,13 +247,9 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
           VarSpec("a", Seq("record", "d2"), "double")),
         attrs = Nil)
       val opts = NetCDFWrite.NcOpts(chunkRows = Some(13)) // multi-chunk
-      NetCDFWrite.write(df, s"$tmp/mem.nc", c,
-        globalAttrs = Map("seed" -> seed.toString), opts = opts,
-        maxRows = 1 << 20)
-      NetCDFWrite.writeSingleStreamed(df, s"$tmp/str.nc", c,
-        Map("seed" -> seed.toString), opts = opts)
-      assertSameBytes(s"$tmp/mem.nc", s"$tmp/str.nc", s"seed=$seed n=$n")
-      val y = NetCDF4.open(s"$tmp/str.nc")
+      val str = writeAcrossFetches(df, tmp, s"seed$seed-n$n", c,
+        Map("seed" -> seed.toString), opts)
+      val y = NetCDF4.open(str)
       assert(y.attrs("seed") === seed.toString)
       assert(y.vars.find(_.name == "t").get.shape === Seq(n.toLong),
         s"seed=$seed n=$n record count")
@@ -221,9 +257,9 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("streamed assembly makes exactly 2 full passes, independent of variable count") {
-    // The single-pass restructure's structural pin: one stats aggregate
-    // + one interleaved row pass. A regression to per-variable column
-    // passes would count 1 + nVars (here 6) instead of 2.
+    // The one-path write's structural pin: one job for the row count and
+    // the plan's stats, one job streaming the rows. A separate stats job
+    // makes it 3; per-variable column passes would make it 1 + nVars.
     import spark.implicits._
     val tmp = tempDir("ncguard_pass")
     val df = (0 until 200).map { i =>
@@ -241,13 +277,20 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
         VarSpec("x", Seq("record"), "double"),
         VarSpec("a", Seq("record", "d2"), "double")),
       attrs = Nil)
-    NetCDFWrite.passCounter.set(0)
-    NetCDFWrite.writeSingleStreamed(df, s"$tmp/out.nc", c, Map.empty,
-      opts = NetCDFWrite.NcOpts(chunkRows = Some(16)))
-    assert(NetCDFWrite.passCounter.get === 2,
-      "streamed assembly must stay at stats + data = 2 full passes")
+    // the frame's own jobs run first: its shuffle, and the job adaptive
+    // execution spends filling a fresh cache, belong to the frame
+    // whoever caches it; what is pinned is the write's own jobs
+    df.persist(StorageLevel.MEMORY_AND_DISK).count()
+    def jobsWriting(vars: Seq[String]): Int = jobsOf(NetCDFWrite.write(df,
+      s"$tmp/out${vars.size}.nc",
+      c.copy(vars = c.vars.filter(v => vars.contains(v.name))), Map.empty,
+      opts = NetCDFWrite.NcOpts(chunkRows = Some(16)), maxRows = 200))
+    assert(jobsWriting(Seq("t", "s", "l", "f", "x", "a")) === 2,
+      "count + stats, then the row stream")
+    assert(jobsWriting(Seq("t", "x")) === 2, "independent of variable count")
+    df.unpersist()
     // and the interleaved pass still wrote a coherent file
-    val nc = NetCDF4.open(s"$tmp/out.nc")
+    val nc = NetCDF4.open(s"$tmp/out6.nc")
     val t = nc.read(nc.vars.find(_.name == "t").get).asInstanceOf[Array[Double]]
     val x = nc.read(nc.vars.find(_.name == "x").get).asInstanceOf[Array[Double]]
     assert(t.length == 200 && x.length == 200)
@@ -282,15 +325,53 @@ class NcWriteGuardSpec extends AnyFunSuite with SparkSpec {
 
   test("under the gate, the in-memory path writes a sorted file") {
     val tmp = tempDir("ncguard2")
-    NetCDFWrite.passCounter.set(0)
     NetCDFWrite.write(shuffledFrame(1000), s"$tmp/out.nc", cfg,
       globalAttrs = Map("title" -> "guard spec"), maxRows = 1000)
-    assert(NetCDFWrite.passCounter.get === 0,
-      "at the gate the rows stay on the in-memory path")
     val nc = NetCDF4.open(s"$tmp/out.nc")
     val t = nc.read(nc.vars.find(_.name == "t").get).asInstanceOf[Array[Double]]
     assert(t.length == 1000)
     assert(t.toSeq == t.sorted.toSeq, "record order must follow the index var")
     assert(t.toSet == (0 until 1000).map(_.toDouble).toSet)
+  }
+
+  test("write and writeGranules keep a cache the caller made") {
+    val tmp = tempDir("ncguard_cache")
+    val computed = spark.sparkContext.longAccumulator("rows computed")
+    val bump = udf { (x: Double) => computed.add(1); x }
+    val df = shuffledFrame(300).withColumn("x", bump(col("x")))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      assert(df.count() === 300)
+      val before = computed.value
+      NetCDFWrite.write(df, s"$tmp/out.nc", cfg, Map.empty)
+      assert(computed.value === before, "write reran the cached pipeline")
+      NetCDFWrite.writeGranules(df, s"$tmp/out.ncd", cfg, Map.empty)
+      assert(computed.value === before,
+        "writeGranules reran the cached pipeline")
+      assert(df.storageLevel === StorageLevel.MEMORY_AND_DISK,
+        "the caller's cache must survive both writes")
+    } finally df.unpersist()
+  }
+
+  test("a fixed-size record dimension is contiguous in one fetch, rejected over it") {
+    val tmp = java.nio.file.Paths.get(tempDir("ncguard_fixed"))
+    val c = cfg.copy(dims = Seq(DimSpec("record", Some(300L))))
+    val df = shuffledFrame(300)
+    NetCDFWrite.write(df, tmp.resolve("one.nc").toString, c, Map.empty,
+      maxRows = 300)
+    val nc = NetCDF4.open(tmp.resolve("one.nc").toString)
+    val t = nc.vars.find(_.name == "t").get
+    assert(t.chunkDims.isEmpty, "one fetch: contiguous layout")
+    val tv = nc.read(t).asInstanceOf[Array[Double]]
+    val xv = nc.read(nc.vars.find(_.name == "x").get)
+      .asInstanceOf[Array[Double]]
+    assert(tv.zip(xv).toSet === df.collect()
+      .map(r => (r.getDouble(0), r.getDouble(1))).toSet)
+    intercept[IllegalArgumentException] {
+      NetCDFWrite.write(df, tmp.resolve("two.nc").toString, c, Map.empty,
+        maxRows = 299)
+    }
+    assert(Option(tmp.toFile.list()).getOrElse(Array.empty).toSet ===
+      Set("one.nc", "one.nc.stats.json"), "no output or temp file left")
   }
 }

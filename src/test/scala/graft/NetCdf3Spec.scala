@@ -97,7 +97,7 @@ class NetCdf3Spec extends AnyFunSuite with SparkSpec {
 
   for (ver <- Seq(1, 2, 5))
     test(s"CDF-$ver classic granule ingests through NetCDFIngest") {
-      val tmp = Files.createTempDirectory(s"graft_cdf$ver").toString
+      val tmp = tempDir(s"cdf$ver")
       writeClassic(s"$tmp/g.nc", ver, nRecs = 6)
       val nc = NetCDF4.open(s"$tmp/g.nc")
       assert(nc.dims.map(d => (d.name, d.size, d.unlimited)) === Seq(
@@ -137,7 +137,7 @@ class NetCdf3Spec extends AnyFunSuite with SparkSpec {
     // 64-bit begin offsets are WHAT CDF-2/5 are for: a sparse file whose
     // variable data sits past the 2 GiB line must decode without
     // readAllBytes (which would need a >2 GiB heap array)
-    val tmp = Files.createTempDirectory("graft_cdf5big")
+    val tmp = java.nio.file.Paths.get(tempDir("cdf5big"))
     val f = tmp.resolve("big.nc")
     val hiOff = (2L << 30) + 1024L
     val nVals = 8

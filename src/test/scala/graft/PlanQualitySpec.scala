@@ -159,7 +159,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkSpec {
     // engine's write path supports it: two tables bucketed+sorted on the
     // join key sort-merge-join with NO exchange and NO per-task sort, the
     // layout that keeps a 100 TB fact⋈fact join shuffle-free.
-    val dir = java.nio.file.Files.createTempDirectory("graft_bucket").toString
+    val dir = tempDir("bucket")
     val e = Tables.load(spark, sfDir, "events")
       .select("event_id", "user_id", "value")
     for (t <- Seq("graft_ba", "graft_bb")) {
@@ -183,7 +183,7 @@ class PlanQualitySpec extends AnyFunSuite with SparkSpec {
     // local" — at 100 TB the date filter must eliminate directories, not
     // rows. Write events partitioned by day, read back with a day filter,
     // and require the scan's partition count to shrink accordingly.
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune").toString
+    val dir = tempDir("prune")
     Tables.load(spark, sfDir, "events")
       .withColumn("day", org.apache.spark.sql.functions.to_date(
         org.apache.spark.sql.functions.col("ts")))

@@ -12,7 +12,7 @@ class RelationalOpsSpec extends AnyFunSuite with SparkSpec {
   private def eventsDir(rows: Seq[(Long, Long, Long, String, Double, String)])
       : String = {
     import spark.implicits._
-    val d = java.nio.file.Files.createTempDirectory("graft_rel3").toString
+    val d = tempDir("rel3")
     // TIMESTAMP(MICROS)-as-NTZ layout of the current testdata
     // (Tables.load now REJECTS un-annotated INT64 ts columns)
     rows.toDF("event_id", "t_us", "user_id", "event_type", "value", "props")
@@ -62,7 +62,7 @@ class RelationalOpsSpec extends AnyFunSuite with SparkSpec {
     import spark.implicits._
     val dayUs = 86400000000L
     val base = 800000L * dayUs // ~1972-ish, away from epoch zero
-    val dir = java.nio.file.Files.createTempDirectory("graft_band").toString
+    val dir = tempDir("band")
     // cust 1: four orders — +0, +30d, +89d, +200d. Trailing [t-90d, t):
     //   +30d sees +0; +89d sees +0 and +30d (90-day bound INCLUSIVE at
     //   the far edge: 89-0=89 < 90 in-window); +200d sees nothing

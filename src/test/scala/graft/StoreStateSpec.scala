@@ -9,12 +9,8 @@ import graft.util.StoreState
   * resolution rules the integration specs exercise end-to-end. */
 class StoreStateSpec extends AnyFunSuite with SparkSpec {
 
-  /** Run `f` on a fresh temp dir, deleted when `f` returns. */
-  private def withTmp(f: String => Unit): Unit = {
-    val d = java.nio.file.Files.createTempDirectory("graft_storestate").toFile
-    try f(d.toString)
-    finally org.apache.commons.io.FileUtils.deleteDirectory(d)
-  }
+  /** Run `f` on a fresh temp dir, deleted when the suite ends. */
+  private def withTmp(f: String => Unit): Unit = f(tempDir("storestate"))
 
   private def mk(dir: String, name: String, marker: Option[String]): Unit = {
     val d = new java.io.File(dir, name)

@@ -70,7 +70,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("granule-directory file stream: new granules flow through the agg") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("stream")
     def granule(name: String, evs: Seq[Ev]): Unit =
       evs.toDF().write.mode("overwrite").parquet(s"$dir/$name")
     granule("g1", Seq(ev(0, "a", 1.0), ev(60, "a", 2.0)))
@@ -268,7 +268,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
 
   test("end-to-end: granule file stream -> windowed agg -> parquet sink") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_e2e").toString
+    val root = tempDir("e2e")
     def granule(name: String, evs: Seq[Ev]): Unit =
       evs.toDF().write.mode("overwrite").parquet(s"$root/in/$name")
     granule("g1", Seq(ev(0, "a", 1.0), ev(60, "a", 2.0)))
@@ -559,7 +559,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec {
       docs.toDF("doc_id", "text").select(col("doc_id"), posexplode(expr(
         "graft_minhash_bands(graft_shingles(graft_token_hashes(" +
           "graft_tokens(text))))")).as(Seq("band_idx", "sig")))
-    val dir = java.nio.file.Files.createTempDirectory("graft_storeswap")
+    val dir = tempDir("storeswap")
     val storePath = s"$dir/store"
     val ckpt = s"$dir/ckpt"
     bands(Seq((100L, textA))).write.mode("overwrite").parquet(storePath)

@@ -25,27 +25,19 @@ class TablesSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("a plain INT64 ts column (no timestamp logical type) fails loudly, not /1000") {
-    val dir = java.nio.file.Files.createTempDirectory("tables-int64").toFile
-    try {
-      spark.range(3).selectExpr("id * 1000000 as ts").write
-        .mode("overwrite").parquet(s"$dir/events.parquet")
-      val e = intercept[RuntimeException](Tables.load(spark, dir.toString, "events"))
-      assert(e.getMessage.contains("refusing to guess"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir)
-    }
+    val dir = tempDir("tables-int64")
+    spark.range(3).selectExpr("id * 1000000 as ts").write
+      .mode("overwrite").parquet(s"$dir/events.parquet")
+    val e = intercept[RuntimeException](Tables.load(spark, dir, "events"))
+    assert(e.getMessage.contains("refusing to guess"))
   }
 
   test("a string ts column fails loudly instead of silently null-casting") {
-    val dir = java.nio.file.Files.createTempDirectory("tables-str").toFile
-    try {
-      spark.range(3).selectExpr("concat('not-a-ts-', id) as ts").write
-        .mode("overwrite").parquet(s"$dir/events.parquet")
-      val e = intercept[RuntimeException](Tables.load(spark, dir.toString, "events"))
-      assert(e.getMessage.contains("unexpected type"))
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(dir)
-    }
+    val dir = tempDir("tables-str")
+    spark.range(3).selectExpr("concat('not-a-ts-', id) as ts").write
+      .mode("overwrite").parquet(s"$dir/events.parquet")
+    val e = intercept[RuntimeException](Tables.load(spark, dir, "events"))
+    assert(e.getMessage.contains("unexpected type"))
   }
 
   test("Tables.load memoizes in SessionScoped; evict re-lists the files") {
